@@ -42,7 +42,9 @@ def connected_components(
     isolated vertices (the reference seeds from the full probe set,
     PreProcess.scala:171).
 
-    Returns ``DataFrame[vertex, component]``.
+    Returns ``DataFrame[vertex, component]``. Warns if the labels are
+    still changing after ``max_iterations`` supersteps; the truncated
+    labels are returned as the reference does (PreProcess.scala:179).
     """
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("w"))
@@ -91,6 +93,14 @@ def connected_components(
         labels = labels.select("vertex", "component")
         if workset.isEmpty():  # cheap: scans the checkpointed RDD
             break
+    else:
+        warnings.warn(
+            "connected_components: labels still changing after "
+            f"max_iterations={max_iterations}; components may be split "
+            "— raise max_iterations or use connected_components_star",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return labels
 
 

@@ -10,15 +10,18 @@ sides (see plans/registry.py docstring).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import functools
+import json
+import re
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Registration order IS the driver's correctness-check order, and the
-# driver's sweep has a time budget — if it truncates, everything after
-# the cut gets no CORRECTNESS row. Import the contractual SURVEY §2 core
-# first, then the graded extension families, so a truncation can only
-# ever cost the cheapest-to-re-verify tail.
+# Import order sets registration order: the contractual SURVEY §2 core
+# first, then the graded extension families. Registration order is not
+# the correctness-check order; ``sweep_order`` below derives that from
+# the CORRECTNESS records and uses registration order only within tiers.
 from . import relational_queries  # noqa: F401  (SURVEY §2 core: S/P/A/J/U/O + b/j/s/x)
 from . import analytics_queries  # noqa: F401  (§2 iteration + ML: I1, C1-C5, g1/g2)
 from . import streaming_queries  # noqa: F401  (ss1-ss8)
@@ -27,411 +30,91 @@ from . import datapipe_queries  # noqa: F401  (chunk/split/pack/decontaminate)
 from . import extended_queries  # noqa: F401  (OLAP b-family)
 from .registry import ORACLES, QUERIES
 
-# IDs with a green (hash_match) row in CORRECTNESS_r01..r04 — the driver
-# contract is already banked for these, so the rotation moves them
-# BEHIND the not-yet-driver-checked queries. The driver sweeps
-# ~50 queries per round in `queries()` dict order; rotating converts the
-# judge-verified-but-driver-unchecked majority into contractual rows
-# without re-spending window slots on banked ones (VERDICT r2, item 1).
-# Banked greens by the round their driver row FIRST went green — the
-# rotation re-attests oldest-first, so the spillover after the front
-# tiers is deterministic regression insurance (VERDICT r6 item 3).
-_GREEN_R04_AND_EARLIER = (
-    "b4_cube_agg", "b7_window_rank", "b9_sql_subqueries",
-    "b11_distinct_aggregates", "b12_moving_average", "b15_window_navigation",
-    "b16_ordered_string_agg", "b17_time_bucket_agg", "b18_upsert_compaction",
-    "b20_array_hof", "b23_sessionize", "b24_incremental_agg_merge",
-    "c6_ridge_closed_form", "g5_kcore", "g6_weighted_sssp", "g7_random_walks",
-    "ll1_text_stats", "ll5_jaccard_pairs", "ll6_minhash_lsh",
-    "ll8_cosine_topk", "ll9_ann_lsh_topk", "ll10_multimodal_features",
-    "ll11_embedding_neardup", "ll11b_neardup_exact", "ll12_ivf_ann_topk",
-    "ll21_quality_filter", "ll34_deduped_corpus", "ll40_pipeline_end2end",
-    "ll52_ann_recall", "ll53_dsir_weights", "ll54_contrastive_pairs",
-    "ll55_semantic_decontaminate", "ll56_remove_repeated_segments",
-    "ll57_source_quota_cap", "ll58_contamination_attribution",
-    "sql1_tpch_q1_shared_text", "sql17_tpch_q12_shared_text",
-    "ss1_tumbling_window", "ss2_sliding_window", "ss3_session_window",
-    "ss4_streaming_dedup", "ss5_stateful_totals", "ss6_stream_stream_join",
-    "ss7_stream_static_enrich", "ss8_foreach_batch_sink", "ss9_stateful_ewma",
-    "ss13_streaming_ohlc", "ss14_dedup_within_watermark",
-    "ss15_stream_stream_left_outer", "ss16_chained_stateful_ops",
-    "a1_defs_last_wins", "a2_dict_encode", "a3_probe_moments",
-    "a4_missing_cells", "a5_grouped_min", "a6_component_representative",
-    "a7_vector_assemble", "a8_distinct", "a9_count", "b10_exact_percentiles",
-    "b13_grouping_sets", "b14_lateral_posexplode", "b19_unpivot", "b1_topk",
-    "b21_scd2_dimension", "b22_recursive_cte", "b2_rollup",
-    "b3_window_running_sum", "b5_intersect_except", "b6_full_outer_join",
-    "b8_pivot_counts", "c2_pearson_corr_edges", "flagship_revenue_by_nation",
-    "g1_pagerank", "g2_triangle_count", "g3_label_propagation",
-    "g4_bfs_distances", "i1_c3_connected_components", "i1b_cc_star",
-    "j10_interval_overlap_join", "j11_asof_tolerance_join",
-    "j1_equi_join_flat", "j2_join_filter", "j3_join_on_array",
-    "j4_cross_join", "j5_broadcast_nested_loop", "j6_semi_join",
-    "j7_anti_join", "j8_asof_join", "j9_range_count_join",
-    "ll13_chunk_documents", "ll14_redact_pii", "ll15_train_test_split",
-    "ll16_ngram_vocab", "ll17_window_byte_stats", "ll18_stratified_sample",
-    "ll19_sequence_packing", "ll20_decontaminate", "ll22_user_sequences",
-    "ll23_dedup_clusters", "ll2_lang_id", "ll3_fingerprint",
-    "ll41_audio_features", "ll42_semantic_dedup", "ll43_gopher_quality_rules",
-    "ll44_video_frame_stats", "ll45_incremental_dedup",
-    "ll46_winnowing_overlap", "ll47_unicode_normalize",
-    "ll48_token_runs_udtf", "ll49_pq_ann_topk", "ll4_dedup_exact",
-    "ll50_kmeans_clusters", "ll51_ngram_span_coverage", "ll7_simhash_pairs",
-    "o1_sort_in_group", "o2_grouped_ewma", "o3_gap_fill_interpolate",
-    "o4_range_interval_window", "o5_rolling_zscore", "o6_ohlc_bars",
-    "o7_bar_momentum", "p10_variant_json", "p12_collated_aggregation",
-    "p13_parameterized_sql", "p1_project_tuple", "p2_filter_semi",
-    "p3_filter_split", "p4_flatmap_symmetrize", "p5_dict_decode",
-    "p6_scalar_funcs", "p7_json_extract", "p8_null_safe_join", "p9_try_cast",
-    "s10_schema_merge_scan", "s11_sorted_clustered_write",
-    "s12_orc_roundtrip", "s13_dynamic_partition_overwrite",
-    "s14_binaryfile_ingest", "s15_xml_roundtrip",
-    "s16_python_datasource_fixedwidth", "s17_file_provenance",
-    "s18_aggregate_pushdown_scan", "s1_scan_csv_defs",
-    "s2_scan_csv_projected", "s3_from_collection", "s4_sink_print",
-    "s5_sink_csv_roundtrip", "s6_sink_path_template",
-    "s7_scan_json_roundtrip", "s8_sink_parquet_partitioned",
-    "s9_bucketed_colocated_join", "sql10_tpch_q22_shared_text",
-    "sql11_tpch_q4_shared_text", "sql12_tpch_q7_shared_text",
-    "sql13_tpch_q8_shared_text", "sql14_tpch_q13_shared_text",
-    "sql15_tpch_q15_shared_text", "sql16_tpch_q21_shared_text",
-    "sql2_tpch_q3_shared_text", "sql3_tpch_q5_shared_text",
-    "sql4_tpch_q10_shared_text", "sql5_tpch_q6_shared_text",
-    "sql6_tpch_q14_shared_text", "sql7_tpch_q17_shared_text",
-    "sql8_tpch_q18_shared_text", "sql9_tpch_q19_shared_text",
-    "ss10_snapshot_dedup_ingest", "ss11_transform_with_state",
-    "ss12_late_data_drop", "u1_union_all", "u2_rebalance", "x1_salted_agg",
-    "x3_salted_skew_join", "x4_zorder_clustered_scan",
-)
+#: correctness runs write one ``CORRECTNESS_r<N>.json`` per round at the
+#: repo root; found relative to this file because the package may be
+#: imported from another working directory
+_RECORDS_DIR = Path(__file__).resolve().parents[2]
+_RECORD_NAME = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
-_GREEN_R05 = (
-    "ll24_fuzzy_match", "ll25_bpe_token_count", "ll26_corpus_datacard",
-    "ll27_source_overlap", "ll28_tfidf_topterms", "ll29_repetition_signals",
-    "ll32_unigram_logprob", "ll35_mixture_sample", "ll36_epoch_shuffle",
-    "ll60_ivfpq_ann_topk", "ll61_containment_pairs", "o8_twap",
-    "g8_two_hop_reach", "ll62_bpe_merges", "j12_pit_join",
-    "ss17_dynamic_session_window", "c7_naive_bayes_langid",
-    "g9_personalized_pagerank", "ll63_incremental_dedup_persisted",
-    "b25_running_distinct", "ll64_quality_calibration",
-    "ll65_cross_doc_substrings", "ll66_bpe_encode",
-    "ll67_cluster_quality_keeper", "sql18_tpch_q2_shared_text",
-    "sql19_tpch_q9_shared_text", "sql20_tpch_q11_shared_text",
-    "sql21_tpch_q16_shared_text", "sql22_tpch_q20_shared_text",
-    "ss18_streaming_neardup_probe", "g10_scc_event_types",
-    "b26_funnel_stages", "ll68_duplication_profile",
-    "ll69_perplexity_buckets", "ll70_leakage_safe_split",
-    "ll71_temperature_sample", "ll72_minhash_calibration",
-    "ll73_bigram_lm_score", "ll74_soft_dedup_weights", "ll75_frame_dedup",
-    "ll77_cell_silhouette", "c8_logistic_irls", "x5_skew_profile",
-    "ll80_kneser_ney_score",
-)
-
-_GREEN_R06 = (
-    "ll76_jl_projection", "ll78_sq8_quantize", "ll81_hashed_embeddings",
-    "ll79_ivfpq_trained_topk", "ll82_ngram_novelty", "ll83_char_entropy",
-    "ll84_signal_agreement", "o9_vwap", "b27_median_mad",
-    "j13_nearest_event_join", "g11_harmonic_centrality",
-    "ll85_vocab_coverage", "ll86_bpe_fertility", "c9_pca_power_iteration",
-    "ll87_excise_repeated_spans", "s19_corrupt_record_audit",
-    "x6_observation_metrics", "ll88_cluster_balanced_sample",
-    "ll89_dsir_select", "o10_max_drawdown", "ss19_streaming_dsir_gate",
-    "ll90_image_ahash_dedup", "ll91_concordance", "ll92_byte_histogram_arrow",
-    "b28_trimmed_mean", "ll93_filter_rule_ablation",
-)
-
-_GREEN_R07 = (
-    "ll94_curation_pipeline", "ll95_residual_ivfpq_topk",
-    "ll96_semantic_dedup_sized", "ll97_decontaminate_sized",
-    "ll98_paragraph_dedup", "ss20_streaming_curation_gate",
-    "ll99_curation_funnel",
-)
-
-# (_BANKED_GREEN is assembled below, after _GREEN_R09.)
-
-
-# Queries whose LAST driver check was red. Empty since r04
-# (CORRECTNESS_r04 went 50/50 green); kept as a tier so future
-# regressions re-enter the sweep front.
-_RED_LAST_CHECK = ()
-
-
-# Never-driver-checked queries: EMPTY since r05 — every registered
-# query has a driver row (CORRECTNESS r01-r05, cumulative 219/227
-# green; the rest are the by-design no-oracle tail + the r05
-# array-output trio, reshaped this round and re-fronted below). Kept
-# as a tier so future gaps re-enter the sweep front. ll59 moved to the
-# no-oracle tail where it belongs (VERDICT r5 "What's wrong" #5 — it
-# burned an r05 window slot on err:no_oracle).
-_NEVER_CHECKED = ()
-
-
-# The 50 rows the r09 window attested hash-green (CORRECTNESS_r09 —
-# the 13 r9-new/re-shaped + the 37 stalest rechecks). Freshest bank:
-# the banked spillover visits these LAST (VERDICT r9 item 6).
-_GREEN_R09 = (
-    "ll100_incremental_curation", "ll101_learned_quality_scorer",
-    "ll102_image_resize_pooled", "ll103_multimodal_dedup_gate",
-    "ll60_ivfpq_ann_topk", "ll79_ivfpq_trained_topk",
-    "ll95_residual_ivfpq_topk", "ll94_curation_pipeline",
-    "ll99_curation_funnel", "ll98_paragraph_dedup",
-    "ll90_image_ahash_dedup", "ll42_semantic_dedup",
-    "ll55_semantic_decontaminate", "ss7_stream_static_enrich",
-    "ss8_foreach_batch_sink", "ss9_stateful_ewma",
-    "ss13_streaming_ohlc", "ss14_dedup_within_watermark",
-    "ss15_stream_stream_left_outer", "ss16_chained_stateful_ops",
-    "b10_exact_percentiles", "b13_grouping_sets",
-    "b14_lateral_posexplode", "b19_unpivot", "b1_topk",
-    "b21_scd2_dimension", "b22_recursive_cte", "b2_rollup",
-    "b3_window_running_sum", "b5_intersect_except",
-    "b6_full_outer_join", "b8_pivot_counts", "c2_pearson_corr_edges",
-    "flagship_revenue_by_nation", "g1_pagerank", "g2_triangle_count",
-    "g3_label_propagation", "g4_bfs_distances",
-    "i1_c3_connected_components", "i1b_cc_star",
-    "j10_interval_overlap_join", "j11_asof_tolerance_join",
-    "j4_cross_join", "j5_broadcast_nested_loop", "j6_semi_join",
-    "j7_anti_join", "j8_asof_join", "j9_range_count_join",
-    "ll13_chunk_documents", "ll14_redact_pii",
+# Queries whose code changed since the latest record: every caller of
+# the two stream readers (streaming.ops), whose file staging changed.
+# Reset it when the round's CORRECTNESS record lands.
+_TOUCHED = (
+    "ss1_tumbling_window",
+    "ss2_sliding_window",
+    "ss3_session_window",
+    "ss4_streaming_dedup",
+    "ss5_stateful_totals",
+    "ss6_stream_stream_join",
+    "ss7_stream_static_enrich",
+    "ss8_foreach_batch_sink",
+    "ss9_stateful_ewma",
+    "ss10_snapshot_dedup_ingest",
+    "ss11_transform_with_state",
+    "ss13_streaming_ohlc",
+    "ss14_dedup_within_watermark",
+    "ss15_stream_stream_left_outer",
+    "ss16_chained_stateful_ops",
+    "ss17_dynamic_session_window",
+    "ss18_streaming_neardup_probe",
+    "ss19_streaming_dsir_gate",
+    "ss20_streaming_curation_gate",
 )
 
 
-# The 50 rows the r10 window attested hash-green (CORRECTNESS_r10 —
-# the 5 r10-new + the similarity tier re-attested after the default
-# flip + the stalest r01/r02 rechecks). Freshest bank: the banked
-# spillover visits these LAST (VERDICT r10 item 6).
-_GREEN_R10 = (
-    "ll100_incremental_curation", "ll104_component_bridges",
-    "ll105_ann_index_persisted", "ll106_ann_index_delta_update",
-    "ll12_ivf_ann_topk", "ll15_train_test_split", "ll16_ngram_vocab",
-    "ll17_window_byte_stats", "ll18_stratified_sample",
-    "ll19_sequence_packing", "ll20_decontaminate", "ll22_user_sequences",
-    "ll23_dedup_clusters", "ll2_lang_id", "ll3_fingerprint",
-    "ll41_audio_features", "ll42_semantic_dedup",
-    "ll43_gopher_quality_rules", "ll49_pq_ann_topk", "ll4_dedup_exact",
-    "ll50_kmeans_clusters", "ll52_ann_recall", "ll54_contrastive_pairs",
-    "ll55_semantic_decontaminate", "ll60_ivfpq_ann_topk",
-    "ll79_ivfpq_trained_topk", "ll7_simhash_pairs",
-    "ll94_curation_pipeline", "ll95_residual_ivfpq_topk",
-    "ll96_semantic_dedup_sized", "ll97_decontaminate_sized",
-    "ll99_curation_funnel", "o1_sort_in_group", "o2_grouped_ewma",
-    "p7_json_extract", "p8_null_safe_join", "p9_try_cast",
-    "s10_schema_merge_scan", "s11_sorted_clustered_write",
-    "s13_dynamic_partition_overwrite", "s7_scan_json_roundtrip",
-    "s8_sink_parquet_partitioned", "s9_bucketed_colocated_join",
-    "ss21_streaming_incremental_curation", "ss22_streaming_ann_ingest",
-    "u1_union_all", "u2_rebalance", "x1_salted_agg",
-    "x3_salted_skew_join", "x4_zorder_clustered_scan",
-)
+def sweep_order(
+    records: Iterable[Path] | None = None, touched: Iterable[str] = _TOUCHED
+) -> list[str]:
+    """Every registered query, in the order it should be checked.
 
+    A correctness run checks ~50 queries per round in ``all_queries()`` order,
+    so the queries most in need of a check come first:
 
-# The 50 rows the r11 window attested hash-green (CORRECTNESS_r11 —
-# the 4 r11-new + the 6 touched rows + the stalest r03/r05 rechecks).
-# Freshest bank: the banked spillover visits these LAST.
-_GREEN_R11 = (
-    "b25_running_distinct", "b26_funnel_stages",
-    "ll100_incremental_curation", "ll104_component_bridges",
-    "ll105_ann_index_persisted", "ll106_ann_index_delta_update",
-    "ll107_ann_index_delta_trained", "ll108_ann_recall_drift",
-    "ll109_bridge_recuration", "ll44_video_frame_stats",
-    "ll45_incremental_dedup", "ll46_winnowing_overlap",
-    "ll47_unicode_normalize", "ll48_token_runs_udtf",
-    "ll51_ngram_span_coverage", "o3_gap_fill_interpolate",
-    "o4_range_interval_window", "o5_rolling_zscore", "o6_ohlc_bars",
-    "o7_bar_momentum", "p10_variant_json", "p12_collated_aggregation",
-    "p13_parameterized_sql", "s12_orc_roundtrip", "s14_binaryfile_ingest",
-    "s15_xml_roundtrip", "s16_python_datasource_fixedwidth",
-    "s17_file_provenance", "s18_aggregate_pushdown_scan",
-    "sql10_tpch_q22_shared_text", "sql11_tpch_q4_shared_text",
-    "sql12_tpch_q7_shared_text", "sql13_tpch_q8_shared_text",
-    "sql14_tpch_q13_shared_text", "sql15_tpch_q15_shared_text",
-    "sql16_tpch_q21_shared_text", "sql2_tpch_q3_shared_text",
-    "sql3_tpch_q5_shared_text", "sql4_tpch_q10_shared_text",
-    "sql5_tpch_q6_shared_text", "sql6_tpch_q14_shared_text",
-    "sql7_tpch_q17_shared_text", "sql8_tpch_q18_shared_text",
-    "sql9_tpch_q19_shared_text", "ss10_snapshot_dedup_ingest",
-    "ss11_transform_with_state", "ss12_late_data_drop",
-    "ss21_streaming_incremental_curation", "ss22_streaming_ann_ingest",
-    "ss23_streaming_ann_ingest_trained",
-)
+    1. oracle-backed queries whose latest record is not ``hash_match``;
+    2. oracle-backed queries with no record;
+    3. ``touched``: queries changed since their latest record;
+    4. every other oracle-backed query, stalest first, by (round of its
+       latest record, name);
+    5. queries with no oracle, which can never be hash-green.
 
-
-# The 50 rows the r12 window attested hash-green (CORRECTNESS_r12 —
-# the 6 r12-new/touched + the full r05-stale tier + 3 of the r06
-# tier). Freshest bank: the banked spillover visits these LAST.
-_GREEN_R12 = (
-    "a1_defs_last_wins", "a2_dict_encode", "a3_probe_moments",
-    "c7_naive_bayes_langid", "c8_logistic_irls", "g10_scc_event_types",
-    "g8_two_hop_reach", "g9_personalized_pagerank", "j12_pit_join",
-    "ll108_ann_recall_drift", "ll110_ann_retrain_on_drift",
-    "ll24_fuzzy_match", "ll25_bpe_token_count", "ll26_corpus_datacard",
-    "ll27_source_overlap", "ll28_tfidf_topterms",
-    "ll29_repetition_signals", "ll32_unigram_logprob",
-    "ll35_mixture_sample", "ll36_epoch_shuffle", "ll61_containment_pairs",
-    "ll62_bpe_merges", "ll63_incremental_dedup_persisted",
-    "ll64_quality_calibration", "ll65_cross_doc_substrings",
-    "ll66_bpe_encode", "ll67_cluster_quality_keeper",
-    "ll68_duplication_profile", "ll69_perplexity_buckets",
-    "ll70_leakage_safe_split", "ll71_temperature_sample",
-    "ll72_minhash_calibration", "ll73_bigram_lm_score",
-    "ll74_soft_dedup_weights", "ll75_frame_dedup", "ll77_cell_silhouette",
-    "ll80_kneser_ney_score", "o8_twap", "sql18_tpch_q2_shared_text",
-    "sql19_tpch_q9_shared_text", "sql20_tpch_q11_shared_text",
-    "sql21_tpch_q16_shared_text", "sql22_tpch_q20_shared_text",
-    "ss17_dynamic_session_window", "ss18_streaming_neardup_probe",
-    "ss21_streaming_incremental_curation", "ss22_streaming_ann_ingest",
-    "ss23_streaming_ann_ingest_trained",
-    "ss24_streaming_ann_retrain_gate", "x5_skew_profile",
-)
-
-
-_BANKED_GREEN = frozenset(
-    _GREEN_R04_AND_EARLIER + _GREEN_R05 + _GREEN_R06 + _GREEN_R07
-    + _GREEN_R09 + _GREEN_R10 + _GREEN_R11 + _GREEN_R12
-)
-
-
-# Queries NEW or touched this round (round 13): the new ss25 two-day
-# snapshot-publish arc (VERDICT r12 item 1 — manifest swap to v2 +
-# superseded-root GC, day-2 folds against the retrained quantizers),
-# ss24 which now PUBLISHES after its retrain (report materialized
-# before the v1 delete), ll108/ll110 whose oracle query-universe CTE
-# became the probe set (ADVICE r12 low), ss22 whose fold gained the
-# skip-whole replay guard + delete-after-swap (ADVICE r12 medium /
-# VERDICT r12 item 4), and ss21/ss23 whose drains stopped rewriting
-# the feed on resume (ADVICE r12 low) and version their manifests.
-_NEW_THIS_ROUND = (
-    "ss25_streaming_snapshot_publish",
-    "ss24_streaming_ann_retrain_gate",
-    "ll110_ann_retrain_on_drift",
-    "ll108_ann_recall_drift",
-    "ss22_streaming_ann_ingest",
-    "ss23_streaming_ann_ingest_trained",
-    "ss21_streaming_incremental_curation",
-)
-
-
-# Regression insurance, rebuilt each round from the ACTUAL cumulative
-# record (max green round per query across CORRECTNESS_r*.json), not
-# from the VERDICT's estimate — r10 found rows staler than estimated.
-_RECHECK_OLDEST = (
-    # Rebuilt for r13 from CORRECTNESS_r01..r12 (the ACTUAL cumulative
-    # record): after r12's window re-attested the whole r05-stale tier
-    # plus a1/a2/a3, the oldest attestations are 45 rows last green in
-    # the r06 window, then 40 in r08 (everything else is r09+).
-    # Oldest-first; the window takes what fits after the new tier and
-    # r14 continues from the cut.
-    # last attested r06
-    "a4_missing_cells", "a5_grouped_min", "a6_component_representative",
-    "a7_vector_assemble", "a8_distinct", "a9_count", "b27_median_mad",
-    "b28_trimmed_mean", "c9_pca_power_iteration",
-    "g11_harmonic_centrality", "j13_nearest_event_join",
-    "j1_equi_join_flat", "j2_join_filter", "j3_join_on_array",
-    "ll76_jl_projection", "ll78_sq8_quantize", "ll81_hashed_embeddings",
-    "ll82_ngram_novelty", "ll83_char_entropy", "ll84_signal_agreement",
-    "ll85_vocab_coverage", "ll86_bpe_fertility",
-    "ll87_excise_repeated_spans", "ll88_cluster_balanced_sample",
-    "ll89_dsir_select", "ll91_concordance", "ll92_byte_histogram_arrow",
-    "ll93_filter_rule_ablation", "o10_max_drawdown", "o9_vwap",
-    "p1_project_tuple", "p2_filter_semi", "p3_filter_split",
-    "p4_flatmap_symmetrize", "p5_dict_decode", "p6_scalar_funcs",
-    "s19_corrupt_record_audit", "s1_scan_csv_defs",
-    "s2_scan_csv_projected", "s3_from_collection", "s4_sink_print",
-    "s5_sink_csv_roundtrip", "s6_sink_path_template",
-    "ss19_streaming_dsir_gate", "x6_observation_metrics",
-    # last attested r08
-    "b11_distinct_aggregates", "b12_moving_average",
-    "b15_window_navigation", "b16_ordered_string_agg",
-    "b17_time_bucket_agg", "b18_upsert_compaction", "b20_array_hof",
-    "b23_sessionize", "b24_incremental_agg_merge", "b4_cube_agg",
-    "b7_window_rank", "b9_sql_subqueries", "c6_ridge_closed_form",
-    "g5_kcore", "g6_weighted_sssp", "g7_random_walks",
-    "ll10_multimodal_features", "ll11_embedding_neardup",
-    "ll11b_neardup_exact", "ll1_text_stats", "ll21_quality_filter",
-    "ll34_deduped_corpus", "ll40_pipeline_end2end", "ll53_dsir_weights",
-    "ll56_remove_repeated_segments", "ll57_source_quota_cap",
-    "ll58_contamination_attribution", "ll5_jaccard_pairs",
-    "ll6_minhash_lsh", "ll8_cosine_topk", "ll9_ann_lsh_topk",
-    "sql17_tpch_q12_shared_text", "sql1_tpch_q1_shared_text",
-    "ss1_tumbling_window", "ss20_streaming_curation_gate",
-    "ss2_sliding_window", "ss3_session_window", "ss4_streaming_dedup",
-    "ss5_stateful_totals", "ss6_stream_stream_join",
-)
-
-
-def _rotated() -> list[str]:
-    """Driver-sweep order: ever-red (fixed) queries first, then the
-    never-driver-checked tier in the judge's priority order, then this
-    round's new queries, then the oldest-banked recheck tier
-    (regression insurance — re-earns greens last attested rounds ago),
-    then any unchecked stragglers in registration order, then the
-    remaining banked-green ones, then the no-oracle queries last (they
-    can never be hash-green, so they must not spend window slots)."""
-    front_tiers = [
-        k
-        for k in (
-            *_RED_LAST_CHECK,
-            *_NEVER_CHECKED,
-            *_NEW_THIS_ROUND,
-            *_RECHECK_OLDEST,
-        )
-        if k in QUERIES
-    ]
-    seen = set(front_tiers)
-    stragglers = [
-        k
-        for k in QUERIES
-        if k not in seen and k not in _BANKED_GREEN and k in ORACLES
-    ]
-    # oldest-greened first: the window spillover after the front tiers
-    # re-attests the rows whose last driver check is most stale. Rows
-    # re-attested in the r09/r10 windows are skipped in the first-green
-    # tiers and appended LAST — last-attested order, not first-green
-    # order, is what makes the spillover insurance work.
-    fresh = (
-        frozenset(_GREEN_R09) | frozenset(_GREEN_R10)
-        | frozenset(_GREEN_R11) | frozenset(_GREEN_R12)
+    Tiers 1, 2 and 5 keep registration order. ``records`` defaults to
+    the ``CORRECTNESS_r<N>.json`` files beside the package; with none
+    present every oracle-backed query is in tier 2, so the result is
+    registration order.
+    """
+    if records is None:
+        records = _RECORDS_DIR.glob("CORRECTNESS_r*.json")
+    rounds = sorted(
+        (int(m[1]), path)
+        for path in records
+        if (m := _RECORD_NAME.fullmatch(path.name))
     )
-    banked = [
-        k
-        for k in (
-            *_GREEN_R04_AND_EARLIER,
-            *_GREEN_R05,
-            *_GREEN_R06,
-            *_GREEN_R07,
-        )
-        if k in QUERIES and k not in seen and k not in fresh
-    ]
-    later = (
-        frozenset(_GREEN_R10) | frozenset(_GREEN_R11)
-        | frozenset(_GREEN_R12)
+    latest: dict[str, tuple[int, bool]] = {}
+    for rnd, path in rounds:
+        for name, rec in json.loads(path.read_text()).items():
+            latest[name] = (rnd, rec.get("hash_match") is True)
+    checked = [k for k in QUERIES if k in ORACLES]
+    front = dict.fromkeys(
+        [
+            *(k for k in checked if k in latest and not latest[k][1]),
+            *(k for k in checked if k not in latest),
+            *(k for k in touched if k in ORACLES),
+        ]
     )
-    banked += [
-        k for k in _GREEN_R09
-        if k in QUERIES and k not in seen and k not in later
-    ]
-    r11up = frozenset(_GREEN_R11) | frozenset(_GREEN_R12)
-    banked += [
-        k for k in _GREEN_R10
-        if k in QUERIES and k not in seen and k not in r11up
-    ]
-    r12 = frozenset(_GREEN_R12)
-    banked += [
-        k for k in _GREEN_R11
-        if k in QUERIES and k not in seen and k not in r12
-    ]
-    banked += [k for k in _GREEN_R12 if k in QUERIES and k not in seen]
-    # The no-oracle tail (c1_als_completion, c4_c5_svm_train_predict,
-    # c2b_dimsum_corr_edges, x2_sketch_aggs) can never be hash-green —
-    # their values are optimizer-/sampling-dependent by design (SURVEY
-    # §5.2), each covered by an exact/statistical pytest instead. They
-    # stay LAST so the driver's ~50-slot window never spends a slot on
-    # a row that can only ever read `err: no_oracle` (VERDICT r4 #3).
-    no_oracle = [k for k in QUERIES if k not in ORACLES and k not in seen]
-    return front_tiers + stragglers + banked + no_oracle
+    rest = sorted(
+        (k for k in checked if k not in front), key=lambda k: (latest[k][0], k)
+    )
+    return [*front, *rest, *(k for k in QUERIES if k not in ORACLES)]
+
+
+@functools.cache
+def _order() -> tuple[str, ...]:
+    return tuple(sweep_order())
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {k: QUERIES[k] for k in _rotated()}
+    return {k: QUERIES[k] for k in _order()}
 
 
 def all_oracles() -> dict[str, str]:
-    return {k: ORACLES[k] for k in _rotated() if k in ORACLES}
+    return {k: ORACLES[k] for k in _order() if k in ORACLES}

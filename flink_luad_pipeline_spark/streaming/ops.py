@@ -41,6 +41,22 @@ _EVENTS_MICROS_SCHEMA = (
 )
 
 
+def _stream_source(src: str) -> str:
+    """Directory a file stream source can replay the table at ``src``
+    from. FileStreamSource lists a directory, so a directory table (part
+    files) streams in place; a single parquet file is staged as a
+    symlink inside a directory of its own (the input stays untouched)."""
+    if os.path.isdir(src):
+        return src
+    tag = hashlib.md5(src.encode()).hexdigest()[:8]
+    stream_dir = os.path.join(tempfile.gettempdir(), "flps_stream", tag)
+    os.makedirs(stream_dir, exist_ok=True)
+    link = os.path.join(stream_dir, os.path.basename(src))
+    if not os.path.exists(link):
+        os.symlink(src, link)
+    return stream_dir
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-replay stream of the events table.
 
@@ -58,20 +74,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     nanos = events_ts_is_nanos(src)
     if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # FileStreamSource wants a directory; the test data is a single
-    # parquet file -> stage a symlink dir (read-only testdata untouched)
-    tag = hashlib.md5(src.encode()).hexdigest()[:8]
-    stream_dir = os.path.join(tempfile.gettempdir(), "flps_stream", tag)
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
     raw = (
         spark.readStream.schema(
             _EVENTS_NANOS_SCHEMA if nanos else _EVENTS_MICROS_SCHEMA
         )
         .format("parquet")
-        .load(stream_dir)
+        .load(_stream_source(src))
     )
     if nanos:
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
@@ -463,9 +471,9 @@ def stateful_user_ewma(events: DataFrame, alpha: float = 0.1) -> DataFrame:
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-replay stream of the documents table (same symlink-dir
-    staging as read_events_stream; schema probed from the batch
-    footer since streaming readers need one up front).
+    """File-replay stream of the documents table (staged by
+    ``_stream_source`` like read_events_stream; schema probed from the
+    batch footer since streaming readers need one up front).
 
     The feed is round-robin repartitioned to the session's parallelism
     — the streaming twin of ``dedup._spread`` (optimization guide §2):
@@ -479,17 +487,11 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-based (band joins, fingerprint keys, keyed dropDuplicates), so
     the emitted rows are partitioning-invariant."""
     src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    tag = hashlib.md5(src.encode()).hexdigest()[:8]
-    stream_dir = os.path.join(tempfile.gettempdir(), "flps_stream", tag)
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
     schema = spark.read.parquet(src).schema
     return (
         spark.readStream.schema(schema)
         .format("parquet")
-        .load(stream_dir)
+        .load(_stream_source(src))
         .repartition(spark.sparkContext.defaultParallelism)
     )
 

@@ -425,6 +425,7 @@ def test_graph_loops_warn_on_round_exhaustion(spark):
     import warnings
 
     from flink_luad_pipeline_spark.operators.graph import (
+        connected_components,
         core_numbers,
         weighted_shortest_paths,
     )
@@ -458,12 +459,26 @@ def test_graph_loops_warn_on_round_exhaustion(spark):
         for w in caught
     )
 
+    # 6-vertex chain: min-label propagation needs 6 supersteps, so a cap
+    # of 2 stops it with labels still changing
+    chain = spark.createDataFrame([(i, i + 1) for i in range(5)], "src int, dst int")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        connected_components(chain, max_iterations=2).collect()
+    assert any(
+        issubclass(w.category, RuntimeWarning)
+        and "connected_components" in str(w.message)
+        for w in caught
+    )
+
     # and NO warning when the loop converges
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         core_numbers(path, k_max=2, max_rounds=10).collect()
         weighted_shortest_paths(wchain, srcs, max_iterations=20).collect()
+        labels = connected_components(chain).collect()
     assert not any(issubclass(w.category, RuntimeWarning) for w in caught)
+    assert {r.component for r in labels} == {0}
 
 
 def test_bpe_merge_table_matches_python(spark):

@@ -4,6 +4,9 @@ silently regress them)."""
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from flink_luad_pipeline_spark import plans
@@ -695,3 +698,55 @@ def test_sized_dedup_has_no_centroid_scoring(spark, sf_dir):
             j in plan
             for j in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
         ), name
+
+
+# --- correctness sweep order (pure Python, no Spark session) ---------------
+
+ROOT = Path(__file__).resolve().parents[1]
+#: the queries round 13 changed, fronted ahead of its record
+_R13_TOUCHED = (
+    "ss25_streaming_snapshot_publish",
+    "ss24_streaming_ann_retrain_gate",
+    "ll110_ann_retrain_on_drift",
+    "ll108_ann_recall_drift",
+    "ss22_streaming_ann_ingest",
+    "ss23_streaming_ann_ingest_trained",
+    "ss21_streaming_incremental_curation",
+)
+
+
+def _records(last: int) -> list[Path]:
+    return [ROOT / f"CORRECTNESS_r{n:02d}.json" for n in range(1, last + 1)]
+
+
+def test_sweep_order_reproduces_round_13_window():
+    """Records r01..r12 plus round 13's touched queries give exactly the
+    50 queries, in order, that the round-13 sweep checked."""
+    order = plans.sweep_order(_records(12), _R13_TOUCHED)
+    r13 = json.loads((ROOT / "CORRECTNESS_r13.json").read_text())
+    assert order[:50] == list(r13)
+
+
+def test_sweep_order_is_permutation_with_no_oracle_tail():
+    order = plans.sweep_order()
+    assert sorted(order) == sorted(plans.QUERIES)
+    assert list(plans.all_queries()) == order
+    assert list(plans.all_oracles()) == [k for k in order if k in plans.ORACLES]
+    oracle_pos = [i for i, k in enumerate(order) if k in plans.ORACLES]
+    no_oracle_pos = [i for i, k in enumerate(order) if k not in plans.ORACLES]
+    assert no_oracle_pos and max(oracle_pos) < min(no_oracle_pos)
+
+
+def test_sweep_order_fronts_a_red_record(tmp_path):
+    records = _records(14)
+    name = [k for k in plans.sweep_order(records, ()) if k in plans.ORACLES][-1]
+    red = tmp_path / "CORRECTNESS_r99.json"
+    red.write_text(json.dumps({name: {"hash_match": False, "err": None}}))
+    assert plans.sweep_order([*records, red], ())[0] == name
+
+
+def test_sweep_order_without_records_is_registration_order():
+    assert plans.sweep_order([], ()) == [
+        *(k for k in plans.QUERIES if k in plans.ORACLES),
+        *(k for k in plans.QUERIES if k not in plans.ORACLES),
+    ]
