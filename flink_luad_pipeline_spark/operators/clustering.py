@@ -53,21 +53,21 @@ from .dedup import _spread
 # immutable unresolved expression templates (resolved against each
 # DataFrame at analysis time), so reusing one list per (vec, dim, rd)
 # across iterations and calls is safe. The memo is additionally keyed
-# on the live SparkContext so a session restart (the bench's sf1
-# section) can never hand out Columns whose JVM-side objects belong to
-# a stopped context. This caches PLAN CONSTRUCTION, never data or
-# results — bench-legal.
-_MEAN_AGG_COLS: dict[tuple[int, str, int, int], list[Column]] = {}
+# on the live SparkContext's applicationId (never recycled, unlike
+# id(sc)) so a session restart (the bench's sf1 section) can never
+# hand out Columns whose JVM-side objects belong to a stopped context.
+# This caches PLAN CONSTRUCTION, never data or results — bench-legal.
+_MEAN_AGG_COLS: dict[tuple[str, str, int, int], list[Column]] = {}
 
 
 def _mean_agg_cols(vec: str, dim: int, round_digits: int) -> list[Column]:
     from pyspark import SparkContext
 
-    sc = SparkContext._active_spark_context
-    key = (id(sc), vec, dim, round_digits)
+    app = SparkContext._active_spark_context.applicationId
+    key = (app, vec, dim, round_digits)
     cols = _MEAN_AGG_COLS.get(key)
     if cols is None:
-        for k in [k for k in _MEAN_AGG_COLS if k[0] != id(sc)]:
+        for k in [k for k in _MEAN_AGG_COLS if k[0] != app]:
             del _MEAN_AGG_COLS[k]  # drop lists from stopped contexts
         cols = [
             F.round(F.avg(F.element_at(vec, i + 1)), round_digits).alias(

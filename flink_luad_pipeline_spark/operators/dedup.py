@@ -1491,7 +1491,12 @@ def excise_repeated_spans(
     to downstream text-scoring stages. ``snapshot_gram_counts`` is the
     incremental path (see ``cross_doc_repeated_spans``): spans are
     decided against frozen snapshot counts plus ``df``'s own, with
-    only ``df`` tokenized."""
+    only ``df`` tokenized.
+
+    Precondition: ``id_col`` is unique in ``df``. The per-doc counts
+    are joined back per input row, so a repeated id yields duplicate
+    output rows whose ``n_removed`` mixes the copies' counts (it can go
+    negative). Every caller passes a frame keyed by doc id."""
     if emit not in ("md5", "text"):
         raise ValueError(f"emit must be 'md5' or 'text', got {emit!r}")
     spans = cross_doc_repeated_spans(

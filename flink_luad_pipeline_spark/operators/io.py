@@ -16,8 +16,9 @@ Why this is safe and value-identical:
 - shared upstream subtrees are either localCheckpointed by the callers
   (the documented multi-consumer boundaries) or recomputed exactly as
   the sequential loop would have recomputed them;
-- exceptions propagate: the pool re-raises the first failure, so a
-  failed write still fails the persist call loudly.
+- failures propagate: every write runs to completion, then a single
+  failure re-raises as itself and several as one ``ExceptionGroup``,
+  so no sibling failure is swallowed.
 
 At 100 TB the small frames (centroids, codebook, meta, fingerprints)
 are metadata-sized while one frame (codes / the band index) dominates;
@@ -40,19 +41,27 @@ def write_frames(
     max_workers: int = 6,
 ) -> None:
     """Write every ``frames[name]`` to ``<root>/<name>.parquet``,
-    overlapping the independent write actions on driver threads."""
+    overlapping the independent write actions on driver threads.
+
+    A failed call has waited for every write and reports all of their
+    failures, but it leaves a mix of committed and half-written
+    directories under ``root``: such a root must be rewritten whole
+    (``mode="overwrite"`` repairs every directory), never resumed or
+    read."""
     items = list(frames.items())
-    if len(items) == 1:
-        name, df = items[0]
-        df.write.mode(mode).parquet(f"{root}/{name}.parquet")
-        return
 
     def _write(item: tuple[str, DataFrame]) -> None:
         name, df = item
         df.write.mode(mode).parquet(f"{root}/{name}.parquet")
 
     with ThreadPoolExecutor(
-        max_workers=min(max_workers, len(items))
+        max_workers=max(1, min(max_workers, len(items)))
     ) as pool:
-        # list() drains the iterator so the first exception re-raises
-        list(pool.map(_write, items))
+        futures = [pool.submit(_write, item) for item in items]
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if len(errors) == 1:
+        raise errors[0]
+    if errors:
+        raise ExceptionGroup(
+            f"{len(errors)} frame writes under {root} failed", errors
+        )

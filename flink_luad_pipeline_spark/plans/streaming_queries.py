@@ -17,6 +17,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import state as persisted
 from ..operators.io import write_frames
 from ..streaming import ops
 from .registry import query
@@ -777,11 +778,10 @@ def _ss21_drain(
     state/feed/out dirs so a resume pair shares them deterministically
     across two driver "lifetimes". Returns {"out": curated DataFrame,
     "state": the live fold state, "state_root", "out_path", "fold":
-    the foreachBatch fn (for direct replay tests)}."""
-    import glob as _glob
-    import json as _json
-    import os as _os
+    the foreachBatch fn (for direct replay tests), "manifest", "feed",
+    "day0_build_s" (0.0 on resume), "drain_fold_s"}."""
     import shutil
+    import time
 
     from .llm_queries import (
         _ll100_build_state,
@@ -794,17 +794,16 @@ def _ss21_drain(
 
     base, delta, t = _ll100_fixture(spark, sf_dir)
     n = f"{next(_COUNTER)}" if name == "ss21" else "named"
-    root_base = sink_path(f"{name}_state_{n}", sf_dir)
+    state_root = sink_path(f"{name}_state_{n}", sf_dir)
     feed = feed_path or sink_path(f"{name}_feed_{n}", sf_dir)
     out_path = sink_path(f"{name}_out_{n}", sf_dir)
-    manifest = f"{root_base}_manifest.json"
+    manifest = f"{state_root}_manifest.json"
+    day0_build_s = 0.0
     if resume:
         # restart-with-preserved-checkpoint: committed batches are
         # checkpoint-skipped, so their fold roots MUST come from the
         # manifest — state_root/day-0 is NOT rebuilt
-        with open(manifest) as fh:
-            man = _json.load(fh)
-        state_root = root_base
+        man = persisted.load(manifest)
         state = {
             "roots": list(man["roots"]),
             "max_id": int(man["max_id"]),
@@ -812,21 +811,18 @@ def _ss21_drain(
             "gone": [],
         }
     else:
-        state_root = _ll100_build_state(spark, base, sf_dir, root=root_base)
         # the per-session counter restarts in every process, so a
         # previous RUN's sink/checkpoint can collide with this one: a
         # stale checkpoint makes AvailableNow treat the feed as already
         # committed, and stale output/fold/compaction roots (+
-        # manifest) would accumulate across runs — both observed;
-        # start clean
-        for stale in (out_path, f"{feed}_chk"):
-            shutil.rmtree(stale, ignore_errors=True)
-        for stale in (
-            _glob.glob(f"{state_root}_d*") + _glob.glob(f"{state_root}_c*")
-        ):
-            shutil.rmtree(stale, ignore_errors=True)
-        if _os.path.exists(manifest):
-            _os.remove(manifest)
+        # manifest) would accumulate across runs — start clean
+        persisted.reset(
+            manifest, out_path, f"{feed}_chk",
+            f"{state_root}_d*", f"{state_root}_c*",
+        )
+        t0 = time.perf_counter()
+        _ll100_build_state(spark, base, sf_dir, root=state_root)
+        day0_build_s = time.perf_counter() - t0
         state = {
             "roots": [state_root],
             "max_id": t,
@@ -847,33 +843,6 @@ def _ss21_drain(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(feed)
-
-    def _write_manifest() -> None:
-        # the durable twin of the in-memory root list (ADVICE r11):
-        # a restart with a preserved checkpoint resumes by READING
-        # this instead of replaying — committed batches are skipped by
-        # the checkpoint, so without it their fold roots would silently
-        # drop out of every later batch's state view.
-        # 100 TB contract (VERDICT r12 item 7): this atomic-replace
-        # local JSON is the pipeline's single point of coordination; at
-        # scale it becomes a conditional-put (compare-and-swap) to an
-        # object store / catalog entry. The invariants that must
-        # survive that port: (a) the manifest is durable BEFORE any GC
-        # deletes a superseded root, (b) exactly one writer per root
-        # lineage (here: the single foreachBatch driver), (c) readers
-        # resolve the state ONLY through the manifest, never by listing
-        # directories.
-        tmp = f"{manifest}.tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(
-                {
-                    "roots": state["roots"],
-                    "folded": sorted(state["folded"]),
-                    "max_id": state["max_id"],
-                },
-                fh,
-            )
-        _os.replace(tmp, manifest)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         # O(delta) state fold (VERDICT r10 item 2): the batch's day-N
@@ -907,30 +876,31 @@ def _ss21_drain(
             state["max_id"] = max(state["max_id"], int(mx))
         # compact-then-DELETE GC (VERDICT r11 item 2): when the root
         # list exceeds the policy, materialize the state view into ONE
-        # fresh compaction root (never in place), swap the read list to
-        # it, and delete the superseded roots — bounding both the root
-        # list and the on-disk footprint. Safe inside foreachBatch: the
-        # next batch builds its plan from state["roots"] AFTER the swap,
-        # so no live plan reads a deleted directory.
+        # fresh compaction root (never in place) and swap the read list
+        # to it; the commit deletes the superseded roots once the
+        # manifest naming the compaction root is durable. Safe inside
+        # foreachBatch: the next batch builds its plan from
+        # state["roots"] AFTER the swap, so no live plan reads a
+        # deleted directory.
+        superseded: list[str] = []
         if compact_every and len(state["roots"]) > compact_every:
             c_root = f"{state_root}_c{batch_id}"
             shutil.rmtree(c_root, ignore_errors=True)
             _ll100_compact_state(spark, list(state["roots"]), c_root)
-            superseded = list(state["roots"])
-            state["roots"] = [c_root]
-            _write_manifest()  # the new root is durable BEFORE the GC
-            for r_ in superseded:
-                shutil.rmtree(r_, ignore_errors=True)
-                state["gone"].append(r_)
-        _write_manifest()
+            superseded, state["roots"] = state["roots"], [c_root]
+        state["gone"] += persisted.commit(
+            manifest,
+            {
+                "roots": state["roots"],
+                "folded": sorted(state["folded"]),
+                "max_id": state["max_id"],
+            },
+            gc=superseded,
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", f"{feed}_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    t0 = time.perf_counter()
+    ops.fold_drain(stream, fold, f"{feed}_chk")
+    drain_fold_s = time.perf_counter() - t0
     return {
         "out": spark.read.parquet(out_path).drop("batch"),
         "state": state,
@@ -939,6 +909,8 @@ def _ss21_drain(
         "manifest": manifest,
         "fold": fold,
         "feed": feed,
+        "day0_build_s": day0_build_s,
+        "drain_fold_s": drain_fold_s,
     }
 
 
@@ -1095,13 +1067,7 @@ def ss22_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(prev_codes, ignore_errors=True)
         state["gone"].append(prev_codes)
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", f"{feed}_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ops.fold_drain(stream, fold, f"{feed}_chk")
     out = similarity.residual_ann_index_topk(
         emb.where(F.col("vec_id") < 5), state["index"], k=10
     )
@@ -1151,9 +1117,6 @@ def _ss23_drain(
     (index/code_paths/root/folded/index_version/gone), "emb", "fold":
     the foreachBatch fn (for direct replay tests), "manifest",
     "feed"}."""
-    import glob as _glob
-    import json as _json
-    import os as _os
     import shutil
 
     from ..catalog import load
@@ -1173,8 +1136,7 @@ def _ss23_drain(
         # restart-with-preserved-checkpoint: the quantizers and every
         # committed batch's codes partition come back via the manifest
         # — nothing re-trains, nothing replays
-        with open(manifest) as fh:
-            man = _json.load(fh)
+        man = persisted.load(manifest)
         cur_root = man["root"]
         index = {
             name_: spark.read.parquet(f"{cur_root}/{name_}.parquet")
@@ -1189,22 +1151,17 @@ def _ss23_drain(
             "gone": [],
         }
     else:
+        # ss21's stale-run guard, extended to the batch partitions
+        # (under root) and compaction roots: a previous process's
+        # codes_b* / _c* dirs under a colliding root would otherwise
+        # be invisible-but-present
+        persisted.reset(manifest, root, f"{root}_c*", f"{feed}_chk")
         cents = clustering.kmeans_fit(base, k=8, iters=3).select(
             F.col("cid").alias("centroid_id"), F.col("cv").alias("centv")
         )
         frames = similarity.residual_ann_index_frames(
             base, centroids=cents, train_iters=2, train_mod=4
         )
-        # ss21's stale-run guard, extended to the batch partitions and
-        # compaction roots: a previous process's codes_b* / _c* dirs
-        # under a colliding root would otherwise be
-        # invisible-but-present
-        shutil.rmtree(root, ignore_errors=True)
-        for stale in _glob.glob(f"{root}_c*"):
-            shutil.rmtree(stale, ignore_errors=True)
-        if _os.path.exists(manifest):
-            _os.remove(manifest)
-        shutil.rmtree(f"{feed}_chk", ignore_errors=True)
         write_frames(frames, root)  # §2.6: overlapped independent writes
         # read-back with the writer frames' schemas — no footer-
         # inference jobs (guide §1.2; the resume path keeps inference:
@@ -1237,33 +1194,6 @@ def _ss23_drain(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(feed)
 
-    def _write_manifest() -> None:
-        # durable twin of the in-memory path list (ADVICE r11): a
-        # restart with a preserved checkpoint resumes by reading this
-        # — committed batches are checkpoint-skipped, so without it
-        # their codes partitions would silently drop out of the view.
-        # 100 TB contract (VERDICT r12 item 7): this atomic-replace
-        # local JSON is the pipeline's single point of coordination; at
-        # scale it becomes a conditional-put (compare-and-swap) to an
-        # object store / catalog entry. The invariants that must
-        # survive that port: (a) the manifest is durable BEFORE any GC
-        # deletes a superseded root, (b) exactly one writer per root
-        # lineage (here: the single foreachBatch driver), (c) readers
-        # resolve the index ONLY through the manifest (root,
-        # code_paths, index_version), never by listing directories.
-        tmp = f"{manifest}.tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(
-                {
-                    "root": state["root"],
-                    "code_paths": state["code_paths"],
-                    "folded": sorted(state["folded"]),
-                    "index_version": state["index_version"],
-                },
-                fh,
-            )
-        _os.replace(tmp, manifest)
-
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         # a replayed batch is skipped WHOLE (ADVICE/VERDICT r11 item
         # 3: the previous shape read the already-registered partition
@@ -1271,18 +1201,11 @@ def _ss23_drain(
         # hazard under foreachBatch retry; ss21's skip-whole pattern)
         if batch_id in state["folded"]:
             return
-        cur = dict(
-            state["index"],
-            # the live index's codes schema IS the partitions' schema —
-            # skips a footer-inference job per micro-batch (guide §1.2)
-            codes=spark.read.schema(state["index"]["codes"].schema).parquet(
-                *state["code_paths"]
-            ),
-        )
         # on_overlap="skip" covers the partial-retry tail: rows an
         # earlier attempt encoded but never registered anti-join away
         dc = similarity.residual_ann_index_encode_delta(
-            cur, batch_df, train_iters=2, train_mod=4, on_overlap="skip"
+            _codes_view(spark, state), batch_df,
+            train_iters=2, train_mod=4, on_overlap="skip",
         )
         path = f"{state['root']}/codes_b{batch_id}.parquet"
         dc.write.mode("overwrite").parquet(path)
@@ -1290,38 +1213,26 @@ def _ss23_drain(
         state["folded"].add(batch_id)
         # compact-then-DELETE GC (VERDICT r11 item 2): persist the
         # current view to a FRESH versioned root (never in place — the
-        # enforced residual_ann_index_persist rule), swap reads to it,
-        # then delete the whole superseded root. Probe answers are
+        # enforced residual_ann_index_persist rule) and swap reads to
+        # it; the commit deletes the whole superseded root once the
+        # manifest naming the new one is durable. Probe answers are
         # layout-invariant (pinned by test), so compaction changes file
         # boundaries, never rows.
+        superseded: list[str] = []
         if compact_every and len(state["code_paths"]) > compact_every:
-            old_root = state["root"]
             c_root = f"{root}_c{batch_id}"
             shutil.rmtree(c_root, ignore_errors=True)
-            compacted = similarity.residual_ann_index_persist(
-                dict(
-                    state["index"],
-                    codes=spark.read.schema(
-                        state["index"]["codes"].schema
-                    ).parquet(*state["code_paths"]),
-                ),
-                c_root,
+            state["index"] = similarity.residual_ann_index_persist(
+                _codes_view(spark, state), c_root
             )
-            state["index"] = compacted
+            superseded = [state["root"]]
             state["root"] = c_root
             state["code_paths"] = [f"{c_root}/codes.parquet"]
-            _write_manifest()  # the new root is durable BEFORE the GC
-            shutil.rmtree(old_root, ignore_errors=True)
-            state["gone"].append(old_root)
-        _write_manifest()
+        state["gone"] += persisted.commit(
+            manifest, _ann_manifest(state), gc=superseded
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", f"{feed}_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ops.fold_drain(stream, fold, f"{feed}_chk")
     return {
         "state": state,
         "emb": emb,
@@ -1329,6 +1240,32 @@ def _ss23_drain(
         "manifest": manifest,
         "delta": delta,
         "feed": feed,
+    }
+
+
+def _codes_view(spark: SparkSession, state: dict) -> dict:
+    """The live ANN index with its codes table read across every
+    registered codes partition. The live codes schema IS the
+    partitions' schema, so the read runs no footer-inference job
+    (guide §1.2)."""
+    index = state["index"]
+    return dict(
+        index,
+        codes=spark.read.schema(index["codes"].schema).parquet(
+            *state["code_paths"]
+        ),
+    )
+
+
+def _ann_manifest(state: dict) -> dict:
+    """The ANN fold's manifest document: everything a resume needs to
+    rebuild the index view (root, code_paths, index_version) and skip
+    committed batches (folded)."""
+    return {
+        "root": state["root"],
+        "code_paths": state["code_paths"],
+        "folded": sorted(state["folded"]),
+        "index_version": state["index_version"],
     }
 
 
@@ -1353,8 +1290,8 @@ def _publish_retrained_snapshot(
          restart resumes against v2 (the next drain's folds encode
          against the RETRAINED quantizers via the manifest read path);
       3. only then DELETE the superseded v1 root(s) from disk — the
-         delete-after-swap retention rule, now executed at this tier
-         too.
+         delete-after-swap retention rule. Steps 2 and 3 are one
+         ``persisted.commit``.
 
     The caller must materialize anything computed against v1 (the
     before-probe's report rows) BEFORE publishing: the report plan
@@ -1362,37 +1299,20 @@ def _publish_retrained_snapshot(
     ids carry over unchanged — the retrain re-encoded base ∪ every
     folded delta, so those batches' rows live inside the v2 codes
     table and a checkpoint-preserved resume must still skip them."""
-    import json as _json
-    import os as _os
-    import shutil
+    import os
 
     if not res.get("retrained"):
         return
     superseded = sorted(
-        {_os.path.dirname(p) for p in state["code_paths"]}
-        | {state["root"]}
+        {os.path.dirname(p) for p in state["code_paths"]} | {state["root"]}
     )
     state["index"] = res["index"]
     state["root"] = new_root
     state["code_paths"] = [f"{new_root}/codes.parquet"]
     state["index_version"] = int(state.get("index_version", 1)) + 1
-    tmp = f"{manifest}.tmp"
-    with open(tmp, "w") as fh:
-        _json.dump(
-            {
-                "root": state["root"],
-                "code_paths": state["code_paths"],
-                "folded": sorted(state["folded"]),
-                "index_version": state["index_version"],
-            },
-            fh,
-        )
-    _os.replace(tmp, manifest)  # durable BEFORE the GC
-    new_abs = _os.path.abspath(new_root)
-    for r_ in superseded:
-        if _os.path.abspath(r_) != new_abs:
-            shutil.rmtree(r_, ignore_errors=True)
-            state.setdefault("gone", []).append(r_)
+    state.setdefault("gone", []).extend(
+        persisted.commit(manifest, _ann_manifest(state), gc=superseded)
+    )
 
 
 @query("ss23_streaming_ann_ingest_trained", oracle=_ss23_oracle())
@@ -1433,12 +1353,7 @@ def ss23_streaming_ann_ingest_trained(
 
     r = _ss23_drain(spark, sf_dir)
     state = r["state"]
-    folded = dict(
-        state["index"],
-        codes=spark.read.schema(state["index"]["codes"].schema).parquet(
-            *state["code_paths"]
-        ),
-    )
+    folded = _codes_view(spark, state)
     out = similarity.residual_ann_index_topk(
         r["emb"].where(F.col("vec_id") < 5), folded, k=10,
         train_iters=2, train_mod=4,
@@ -1502,12 +1417,7 @@ def ss24_streaming_ann_retrain_gate(
 
     r = _ss23_drain(spark, sf_dir, name="ss24")
     state = r["state"]
-    folded = dict(
-        state["index"],
-        codes=spark.read.schema(state["index"]["codes"].schema).parquet(
-            *state["code_paths"]
-        ),
-    )
+    folded = _codes_view(spark, state)
     v2_root = sink_path("ss24_index_v2", sf_dir)
     res = similarity.ann_index_retrain_on_drift(
         r["emb"].where(F.col("vec_id") < 5), r["emb"], folded,
@@ -1603,12 +1513,7 @@ def ss25_streaming_snapshot_publish(
         delta_pred=F.col("vec_id") % 10 == 0,
     )
     state = day1["state"]
-    folded = dict(
-        state["index"],
-        codes=spark.read.schema(state["index"]["codes"].schema).parquet(
-            *state["code_paths"]
-        ),
-    )
+    folded = _codes_view(spark, state)
     corpus1 = day1["emb"].where(
         (F.col("vec_id") % 5 != 0) | (F.col("vec_id") % 10 == 0)
     )
@@ -1627,12 +1532,7 @@ def ss25_streaming_snapshot_publish(
     delta2.write.mode("append").parquet(day1["feed"])
     day2 = _ss23_drain(spark, sf_dir, name="ss25", resume=True)
     st2 = day2["state"]
-    final = dict(
-        st2["index"],
-        codes=spark.read.schema(st2["index"]["codes"].schema).parquet(
-            *st2["code_paths"]
-        ),
-    )
+    final = _codes_view(spark, st2)
     out = similarity.residual_ann_index_topk(
         day1["emb"].where(F.col("vec_id") < 5), final, k=10,
         train_iters=2, train_mod=4,
@@ -1646,77 +1546,16 @@ def ss25_streaming_snapshot_publish(
 
 
 def ss21_components(spark: SparkSession, sf_dir: str) -> dict:
-    """Bench decomposition of ss21 (the ss18/ll100 device): the
-    headline row conflates the one-time DAY-0 state build with the
-    recurring STREAM drain (day-N stages + the state fold inside
-    foreachBatch). Times them separately and derives the per-delta-doc
-    ingest throughput. Not a registered query (reports timings);
-    bench.py records it next to ss21's headline row."""
-    import shutil
-    import time as _time
-
-    from .llm_queries import (
-        _ll100_build_state,
-        _ll100_day_n_over,
-        _ll100_fixture,
-        _ll100_fold_delta_frames,
-    )
-    from .relational_queries import sink_path
-
-    base, delta, t = _ll100_fixture(spark, sf_dir)
-    n = next(_COUNTER)
-    t0 = _time.perf_counter()
-    state_root = _ll100_build_state(
-        spark, base, sf_dir, root=sink_path(f"ss21c_state_{n}", sf_dir)
-    )
-    day0_build_s = _time.perf_counter() - t0
-
-    feed = sink_path(f"ss21c_feed_{n}", sf_dir)
-    out_path = sink_path(f"ss21c_out_{n}", sf_dir)
-    for stale in (out_path, f"{feed}_chk"):
-        shutil.rmtree(stale, ignore_errors=True)
-    delta.write.mode("overwrite").parquet(feed)
-    n_delta = spark.read.parquet(feed).count()
-    # the feed was written from `delta` (resume appends the same
-    # shape), so its schema needs no footer-inference job (guide §1.2)
-    schema = delta.schema
-
-    state = {"roots": [state_root], "max_id": t}
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        # ss21's O(delta) fold verbatim (the decomposition must time
-        # the production write path, not a rewrite)
-        delta_root = f"{state_root}_d{batch_id}"
-        if delta_root in state["roots"]:
-            return
-        fr = _ll100_day_n_over(
-            spark, batch_df, state["roots"], state["max_id"]
-        )
-        fr["out"].write.mode("overwrite").parquet(
-            f"{out_path}/batch={batch_id}"
-        )
-        shutil.rmtree(delta_root, ignore_errors=True)
-        # six O(delta) artifact writes per batch — independent
-        # directories, overlapped on driver threads (guide §2.6)
-        write_frames(_ll100_fold_delta_frames(fr), delta_root)
-        mx = batch_df.agg(F.max("doc_id")).collect()[0][0]
-        state["roots"].append(delta_root)
-        if mx is not None:
-            state["max_id"] = max(state["max_id"], int(mx))
-
-    t0 = _time.perf_counter()
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(feed)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", f"{feed}_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    drain_fold_s = _time.perf_counter() - t0
+    """Bench decomposition of ss21: the headline row conflates the
+    one-time DAY-0 state build with the recurring STREAM drain (day-N
+    stages + the state fold inside foreachBatch). Reports the two
+    phases ``_ss21_drain`` times and the per-delta-doc ingest
+    throughput. Not a registered query; bench.py records it next to
+    ss21's headline row."""
+    r = _ss21_drain(spark, sf_dir)
+    n_delta = spark.read.parquet(r["feed"]).count()
     return {
-        "day0_build_s": round(day0_build_s, 4),
-        "drain_fold_s": round(drain_fold_s, 4),
-        "delta_docs_per_s": round(n_delta / drain_fold_s, 1),
+        "day0_build_s": round(r["day0_build_s"], 4),
+        "drain_fold_s": round(r["drain_fold_s"], 4),
+        "delta_docs_per_s": round(n_delta / r["drain_fold_s"], 1),
     }

@@ -359,6 +359,20 @@ def foreach_batch_parquet_sink(stream_df: DataFrame, path: str) -> str:
     return os.path.join(path, last)
 
 
+def fold_drain(stream_df: DataFrame, fold, checkpoint: str) -> None:
+    """Drain the stream with Trigger.AvailableNow through the
+    foreachBatch ``fold(batch_df, batch_id)`` and wait for it. The
+    checkpoint skips committed batches, so a restart with the same
+    ``checkpoint`` folds only files that arrived since."""
+    (
+        stream_df.writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def transform_with_state_totals(events: DataFrame) -> DataFrame:
     """Per-user count/max via ``transformWithStateInPandas`` — the
     Spark 4 arbitrary-state API (typed ValueState handles, timers,

@@ -36,7 +36,6 @@ def run(name: str, fn, spark, sf_dir: str) -> dict:
 
 
 def main() -> None:
-    os.environ["SPARK_GRAFT_NO_CACHE"] = "1"
     mode, path = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")

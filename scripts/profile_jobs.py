@@ -17,7 +17,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    os.environ["SPARK_GRAFT_NO_CACHE"] = "1"
     tag = sys.argv[1] if len(sys.argv) > 1 else "jobs"
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

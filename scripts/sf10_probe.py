@@ -30,7 +30,6 @@ SF10 = os.environ.get("SPARK_GRAFT_SF10_DIR", "/tmp/spark_graft_sf10")
 
 
 def main() -> None:
-    os.environ["SPARK_GRAFT_NO_CACHE"] = "1"
     names = sys.argv[1:] or PROBES
     from flink_luad_pipeline_spark import plans
     from flink_luad_pipeline_spark.session import get_spark

@@ -2248,6 +2248,7 @@ def test_state_fold_write_is_o_delta_and_exact(spark, sf_dir, tmp_path):
     from pathlib import Path
 
     from flink_luad_pipeline_spark.plans.llm_queries import (
+        _LL100_STATE_SCHEMAS,
         _ll100_build_state,
         _ll100_compact_state,
         _ll100_day_n_over,
@@ -2271,6 +2272,16 @@ def test_state_fold_write_is_o_delta_and_exact(spark, sf_dir, tmp_path):
             f.stat().st_size for f in Path(p).rglob("*") if f.is_file()
         )
 
+    # the pinned reader schemas NULL-fill a renamed writer column, so
+    # their names must match what the writers put in the footers
+    for r in (root, droot):
+        for name, ddl in _LL100_STATE_SCHEMAS.items():
+            path = f"{r}/{name}.parquet"
+            assert (
+                spark.read.parquet(path).columns
+                == spark.read.schema(ddl).parquet(path).columns
+            ), (r, name)
+
     d_bytes, s_bytes = du(droot), du(root)
     assert d_bytes < 0.6 * s_bytes, (
         f"fold root wrote {d_bytes}B vs day-0 {s_bytes}B — not O(delta)"
@@ -2293,6 +2304,34 @@ def test_state_fold_write_is_o_delta_and_exact(spark, sf_dir, tmp_path):
     compacted = _ll100_state_reads(spark, croot)
     for key in ("fps", "grams", "docs"):
         assert rows(compacted[key]) == rows(scratch[key]), f"compact:{key}"
+
+
+def test_write_frames_reports_every_sibling_failure(spark, tmp_path):
+    """A multi-frame persist waits for every write: two failing frames
+    are both reported (one ExceptionGroup), the good sibling still
+    commits, and a lone failure re-raises as itself."""
+    import pytest
+
+    from flink_luad_pipeline_spark.operators.io import write_frames
+
+    def bad(msg):
+        return spark.range(3).select(
+            F.raise_error(F.lit(msg)).cast("string").alias("x")
+        )
+
+    root = str(tmp_path / "root")
+    frames = {"a": bad("boom-a"), "good": spark.range(3), "b": bad("boom-b")}
+    with pytest.raises(ExceptionGroup) as group:
+        write_frames(frames, root)
+    errors = group.value.exceptions
+    assert len(errors) == 2
+    assert "boom-a" in str(errors[0]) and "boom-b" in str(errors[1])
+    assert (tmp_path / "root" / "good.parquet" / "_SUCCESS").exists()
+    assert spark.read.parquet(f"{root}/good.parquet").count() == 3
+
+    with pytest.raises(Exception, match="boom-c") as one:
+        write_frames({"c": bad("boom-c")}, root)
+    assert not isinstance(one.value, ExceptionGroup)
 
 
 def test_learned_quality_scorer_beats_majority_class(spark, sf_dir):
