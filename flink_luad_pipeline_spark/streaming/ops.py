@@ -985,25 +985,37 @@ def _dsir_map_log_weight(
         F.array(*[F.lit(int(b)) for b, _ in ratio_rows]),
         F.array(*[F.lit(float(lr)) for _, lr in ratio_rows]),
     )
-    ds = F.array_sort(F.array_distinct(F.col("bks")))
-    terms = F.transform(
-        ds,
-        lambda b: F.round(
-            F.size(F.filter(F.col("bks"), lambda x: x == b))
-            * F.coalesce(
-                F.element_at(mapping, b), F.lit(float(default_lr))
-            ),
-            9,
-        ).cast("decimal(28,9)"),
-    )
-    # the merge must return the accumulator's exact type: DECIMAL
-    # addition widens precision (28,9)+(28,9) -> (29,9), so cast back
-    return F.round(
-        F.aggregate(
+
+    def fold(bks: Column) -> Column:
+        terms = F.transform(
+            F.array_sort(F.array_distinct(bks)),
+            lambda b: F.round(
+                F.size(F.filter(bks, lambda x: x == b))
+                * F.coalesce(
+                    F.element_at(mapping, b), F.lit(float(default_lr))
+                ),
+                9,
+            ).cast("decimal(28,9)"),
+        )
+        # the merge must return the accumulator's exact type: DECIMAL
+        # addition widens precision (28,9)+(28,9) -> (29,9), so cast
+        # back
+        return F.aggregate(
             terms,
             F.lit(0).cast("decimal(28,9)"),
             lambda acc, t: (acc + t).cast("decimal(28,9)"),
-        ).cast("double"),
+        )
+
+    # ``bks`` is bound ONCE as a lambda variable: the caller's gate
+    # filter is pushed below the staging projection with the bucket
+    # array's definition substituted in, and a bare column reference
+    # inside the per-bucket count would then re-run the whole
+    # tokenize/hash pass once per distinct bucket (the gate over
+    # sf0.001's 500 documents: 42 s before, 2 s after, local[4])
+    return F.round(
+        F.element_at(F.transform(F.array(F.col("bks")), fold), 1).cast(
+            "double"
+        ),
         6,
     )
 
