@@ -2,7 +2,7 @@
 ``PipeLine.main(defFile)`` (PipeLine.scala:7-42).
 
 Usage:
-    python -m flink_luad_pipeline_spark <definition-file> [--show]
+    python -m flink_luad_pipeline_spark <definition-file> [--als-blocks N]
 
 Reads the tab-separated definition file, runs the full pipeline
 (matrix build -> ALS completion -> correlation-graph feature selection

@@ -189,7 +189,10 @@ def als_complete(
     Spark-first deltas: the missing complement is a crossJoin +
     broadcast LEFT ANTI instead of per-group driver set-diff, and the
     reference's post-union ``rebalance`` (PreProcess.scala:152) is
-    AQE's job now.
+    AQE's job now. The observed cells, which ALS and the complement
+    both read, are materialized once by an eager ``localCheckpoint``:
+    later plans scan them as a leaf, and the session's cache is left as
+    it was.
 
     Returns the completed matrix (observed ∪ predicted), same schema.
     """
@@ -197,7 +200,7 @@ def als_complete(
         F.col(sample_col).cast("int").alias("sample_id"),
         F.col(probe_col).cast("int").alias("probe_id"),
         F.col(value_col).cast("double").alias("value"),
-    ).cache()
+    ).localCheckpoint(eager=True)
 
     samples = obs.select("sample_id").distinct()
     probes = obs.select("probe_id").distinct()
@@ -256,7 +259,7 @@ def svm_train(
         "sample_id",
         "features",
         F.when(F.col(label_col), 1.0).otherwise(0.0).alias("label"),
-    )
+    ).localCheckpoint(eager=True)
     svc = LinearSVC(maxIter=max_iter, regParam=reg_param, standardization=False)
     return svc.fit(train)
 

@@ -70,13 +70,17 @@ def dict_encode(df: DataFrame, name_col: str, id_col: str = "id") -> DataFrame:
     Scale note: a single-partition window over the *distinct* names, not
     the data — dictionary cardinality (~21k probes in the reference) is
     tiny relative to the fact table, same trick as a broadcast dim build.
-    For >~100M distinct keys use ``dict_encode_distributed`` (same
-    contract, no single-partition stage).
+    ``coalesce(1)`` plus a ``spark_partition_id`` window key is the
+    warning-free form of that one-partition window (see
+    ``exclusive_prefix_sum``). For >~100M distinct keys use
+    ``dict_encode_distributed`` (same contract, no single-partition
+    stage).
     """
-    w = Window.orderBy("name")
+    w = Window.partitionBy(F.spark_partition_id()).orderBy("name")
     return (
         df.select(F.col(name_col).alias("name"))
         .distinct()
+        .coalesce(1)
         .withColumn(id_col, (F.row_number().over(w) - F.lit(1)).cast("bigint"))
     )
 

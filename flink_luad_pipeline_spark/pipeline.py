@@ -15,9 +15,14 @@ Trainer.scala (SVM). Deliberate Spark-first deltas, each cited:
   row_number-over-name (operators.relational.dict_encode) instead of
   collect.zipWithIndex / set-iteration order (Input.scala:104-108,
   137-142) — SURVEY §7 M4d.
-- **Three cache points** (raw, completed, filtered matrix) replace Flink
-  0.10's whole-DAG recomputation at each of ~14 collect/count sites
-  (SURVEY §3.1).
+- **Each stage boundary is materialized once** by an eager
+  ``localCheckpoint`` (parsed input, dictionaries, matrix, labels,
+  completed and filtered matrix, features, predictions), replacing
+  Flink 0.10's whole-DAG recomputation at each of ~14 collect/count
+  sites (SURVEY §3.1). Downstream plans start at a leaf RDD scan, not at
+  a nested cached plan, and the blocks are released when the frame is
+  dereferenced. Like every other checkpoint boundary in the package, it
+  does not survive executor loss.
 - **No global state.** The reference parks everything in mutable
   singletons (Input.scala:172-185, Trainer.scala:119); here each stage
   is a pure function.
@@ -172,10 +177,10 @@ def build_matrix(spark: SparkSession, cfg: PipelineConfig) -> MatrixBundle:
                 "sample_name", "probe_name", "value"
             )
         )
-    named = R.union_all(frames)
+    named = R.union_all(frames).localCheckpoint(eager=True)
 
-    sample_dict = R.dict_encode(named, "sample_name").cache()
-    probe_dict = R.dict_encode(named, "probe_name").cache()
+    sample_dict = R.dict_encode(named, "sample_name").localCheckpoint(eager=True)
+    probe_dict = R.dict_encode(named, "probe_name").localCheckpoint(eager=True)
 
     matrix = (
         named.join(
@@ -192,7 +197,7 @@ def build_matrix(spark: SparkSession, cfg: PipelineConfig) -> MatrixBundle:
             F.col("probe_id").cast("int"),
             F.col("value").cast("double"),
         )
-        .cache()  # cache point 1/3 (SURVEY §3.1)
+        .localCheckpoint(eager=True)
     )
 
     # P3 split + labels (Input.scala:156-159: prediction wins over training)
@@ -202,8 +207,12 @@ def build_matrix(spark: SparkSession, cfg: PipelineConfig) -> MatrixBundle:
     label_names = spark.createDataFrame(
         rows, "name STRING, tumorous BOOLEAN, is_prediction BOOLEAN"
     )
-    labels = label_names.join(F.broadcast(sample_dict), "name").select(
-        F.col("id").cast("int").alias("sample_id"), "tumorous", "is_prediction"
+    labels = (
+        label_names.join(F.broadcast(sample_dict), "name")
+        .select(
+            F.col("id").cast("int").alias("sample_id"), "tumorous", "is_prediction"
+        )
+        .localCheckpoint(eager=True)
     )
     return MatrixBundle(matrix, sample_dict, probe_dict, labels)
 
@@ -220,7 +229,9 @@ def preprocess(
     inputs."""
     from .operators.graph import component_representatives, connected_components
 
-    completed = ml.als_complete(matrix, num_blocks=als_blocks).cache()  # 2/3
+    completed = ml.als_complete(matrix, num_blocks=als_blocks).localCheckpoint(
+        eager=True
+    )
 
     if pc_threshold is None:
         return completed
@@ -234,7 +245,7 @@ def preprocess(
         F.col("representative").alias("probe_id")
     )
     # P2 — keep only representative probes (PreProcess.scala:213-216)
-    return R.semi_join(completed, reps, ["probe_id"]).cache()  # cache 3/3
+    return R.semi_join(completed, reps, ["probe_id"]).localCheckpoint(eager=True)
 
 
 def train_and_predict(bundle: MatrixBundle, filtered: DataFrame) -> DataFrame:
@@ -244,7 +255,7 @@ def train_and_predict(bundle: MatrixBundle, filtered: DataFrame) -> DataFrame:
     Returns ``DataFrame[sample STRING, prediction DOUBLE]`` with
     prediction ∈ {1.0 (tumorous), -1.0} — README.md:38, :73-75.
     """
-    features = ml.assemble_features(filtered)
+    features = ml.assemble_features(filtered).localCheckpoint(eager=True)
     train_keys = bundle.labels.where(~F.col("is_prediction")).select("sample_id")
     predict_keys = bundle.labels.where(F.col("is_prediction")).select("sample_id")
 
@@ -263,7 +274,7 @@ def train_and_predict(bundle: MatrixBundle, filtered: DataFrame) -> DataFrame:
         "name",
         out_col="sample",
     )
-    return decoded.select("sample", "prediction")
+    return decoded.select("sample", "prediction").localCheckpoint(eager=True)
 
 
 def run_pipeline(

@@ -134,6 +134,45 @@ def test_end_to_end_predictions(spark, fixture_root, tmp_path):
     assert out_files, "templated TSV output missing"
 
 
+def test_stage_boundaries_are_leaf_scans(spark, cfg, bundle):
+    """Each stage boundary is materialized once by ``localCheckpoint``:
+    every frame a stage returns plans as one leaf RDD scan, with no
+    cached (``InMemoryRelation``) subplan dragging its lineage, and ALS
+    completion leaves no session-lifetime cache entry behind."""
+    filtered = pipeline.preprocess(bundle.matrix, cfg.pc_threshold, als_blocks=4)
+    frames = {
+        "matrix": bundle.matrix,
+        "sample_dict": bundle.sample_dict,
+        "probe_dict": bundle.probe_dict,
+        "labels": bundle.labels,
+        "filtered": filtered,
+        "predictions": pipeline.train_and_predict(bundle, filtered),
+    }
+    plans = {
+        name: df._jdf.queryExecution().optimizedPlan()
+        for name, df in frames.items()
+    }
+    assert [n for n, p in plans.items() if "InMemoryRelation" in p.toString()] == []
+    assert {n: p.nodeName() for n, p in plans.items()} == dict.fromkeys(
+        frames, "LogicalRDD"
+    )
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    ml.als_complete(bundle.matrix, num_blocks=4).count()
+    assert cache.isEmpty()
+
+
+def test_cli_prints_sorted_predictions(spark, fixture_root, capsys):
+    from flink_luad_pipeline_spark.__main__ import main
+
+    assert main([fixture_root[1], "--als-blocks", "4"]) == 0
+    # one ``sample\t±1.0`` line per predictive sample, sorted by sample:
+    # s7 carries the tumorous plant, s8 the normal one
+    assert fixtures.PREDICTIVE == ["s7", "s8"]
+    assert capsys.readouterr().out.splitlines() == ["s7\t1.0", "s8\t-1.0"]
+
+
 def test_fixedwidth_source_drops_malformed_rows(spark, tmp_path):
     """The fixed-width Python DataSource must apply the csv_io
     malformed-row convention to BOTH failure modes: short lines AND
