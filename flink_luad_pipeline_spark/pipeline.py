@@ -9,8 +9,9 @@ Trainer.scala (SVM). Deliberate Spark-first deltas, each cited:
 - **One scan per sample-type, not per file.** The reference issues one
   ``readCsvFile`` per (sample, type) file and folds 586 unions
   (Input.scala:114-132). We read each type's whole file list in a single
-  multi-path scan and recover the sample from ``input_file_name()`` via a
-  broadcast dictionary — constant plan depth, parallel IO.
+  multi-path scan with a fixed two-column schema, and recover the sample
+  from the scanned file's name through a literal basename->sample map —
+  constant plan depth, parallel IO, no lookup join.
 - **Deterministic ids.** Sample/probe dictionaries use
   row_number-over-name (operators.relational.dict_encode) instead of
   collect.zipWithIndex / set-iteration order (Input.scala:104-108,
@@ -125,14 +126,18 @@ def build_matrix(spark: SparkSession, cfg: PipelineConfig) -> MatrixBundle:
     """Input stage (Input.scala:103-160) — COO matrix + dictionaries.
 
     One multi-path TSV scan per sample-type; the owning sample is
-    recovered from ``input_file_name()`` through a broadcast
-    filename->sample dictionary (guarded against basename collisions).
+    looked up from the scanned file's basename in a literal
+    basename->sample map (guarded against basename collisions). The
+    labels are computed from the sample dictionary with literal
+    ``isin`` sets. Driver-known metadata stays in the plan as literals:
+    no Python RDD (so no Python worker) and no lookup join.
     """
     eligible = cfg.eligible_samples()
     if not eligible:
         raise ValueError("definition file yields no loadable samples")
 
     per_type: dict[str, dict[str, str]] = {}  # type -> {basename: sample}
+    paths: dict[str, list[str]] = {}  # type -> file paths
     for sample, files in eligible.items():
         for typ, path in files.items():
             base = os.path.basename(path)
@@ -143,38 +148,38 @@ def build_matrix(spark: SparkSession, cfg: PipelineConfig) -> MatrixBundle:
                     "multi-path sample recovery needs unique file names"
                 )
             owners[base] = sample
+            paths.setdefault(typ, []).append(path)
 
+    # ``input_file_name()`` is Hadoop's ``Path.toUri`` form: a space
+    # reads back as %20 and a % as %25, while a literal + stays as it
+    # is. Protect the + (URL decoding turns it into a space), then
+    # decode, to get the file name back exactly.
+    uri_base = F.element_at(F.split(F.input_file_name(), "/"), -1)
+    file_base = F.url_decode(F.replace(uri_base, F.lit("+"), F.lit("%2B")))
     frames = []
     for typ, owners in per_type.items():
-        paths = set()
-        for sample, files in eligible.items():
-            if typ in files:
-                paths.add(files[typ])
+        owner = F.create_map(
+            *[F.lit(x) for item in sorted(owners.items()) for x in item]
+        )
         # Flink's includedFields=Array(0,1) + lenient=true
-        # (Input.scala:121) tolerates any column count >= 2 and silently
-        # drops rows whose value doesn't parse (headers!). Spark's
-        # DROPMALFORMED instead rejects rows with MORE columns than the
-        # schema, so: schemaless read, take the first two columns,
-        # try_cast the value, drop nulls.
-        raw = (
+        # (Input.scala:121): a fixed two-column schema read PERMISSIVE
+        # drops extra fields and null-fills missing ones, with no
+        # schema-inference job; rows whose value doesn't parse
+        # (headers!) are dropped after a try_cast.
+        frames.append(
             spark.read.option("sep", "\t")
             .option("comment", "#")
-            .csv(sorted(paths))
+            .schema("_c0 STRING, _c1 STRING")
+            .csv(sorted(paths[typ]))
             .select(
-                F.element_at(F.split(F.input_file_name(), "/"), -1).alias(
-                    "file_base"
-                ),
+                owner[file_base].alias("sample_name"),
                 F.col("_c0").alias("probe_name"),
                 F.col("_c1").try_cast("double").alias("value"),
             )
-            .where(F.col("value").isNotNull() & F.col("probe_name").isNotNull())
-        )
-        owner_df = spark.createDataFrame(
-            sorted(owners.items()), "file_base STRING, sample_name STRING"
-        )
-        frames.append(
-            raw.join(F.broadcast(owner_df), "file_base").select(
-                "sample_name", "probe_name", "value"
+            .where(
+                F.col("sample_name").isNotNull()
+                & F.col("probe_name").isNotNull()
+                & F.col("value").isNotNull()
             )
         )
     named = R.union_all(frames).localCheckpoint(eager=True)
@@ -200,20 +205,14 @@ def build_matrix(spark: SparkSession, cfg: PipelineConfig) -> MatrixBundle:
         .localCheckpoint(eager=True)
     )
 
-    # P3 split + labels (Input.scala:156-159: prediction wins over training)
-    rows = [
-        (s, s in cfg.tumorous, s in cfg.predictive) for s in sorted(eligible)
-    ]
-    label_names = spark.createDataFrame(
-        rows, "name STRING, tumorous BOOLEAN, is_prediction BOOLEAN"
-    )
-    labels = (
-        label_names.join(F.broadcast(sample_dict), "name")
-        .select(
-            F.col("id").cast("int").alias("sample_id"), "tumorous", "is_prediction"
-        )
-        .localCheckpoint(eager=True)
-    )
+    # P3 split + labels (Input.scala:156-159: prediction wins over
+    # training). The dictionary holds exactly the eligible samples that
+    # have rows.
+    labels = sample_dict.select(
+        F.col("id").cast("int").alias("sample_id"),
+        F.col("name").isin(sorted(cfg.tumorous)).alias("tumorous"),
+        F.col("name").isin(sorted(cfg.predictive)).alias("is_prediction"),
+    ).localCheckpoint(eager=True)
     return MatrixBundle(matrix, sample_dict, probe_dict, labels)
 
 

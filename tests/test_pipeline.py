@@ -53,7 +53,7 @@ def test_matrix_build(bundle):
     assert set(fixtures.T1_PROBES) <= probes
     # decoy values (1e9) must not appear anywhere (last-wins)
     assert bundle.matrix.where(F.col("value") > 1e6).count() == 0
-    # header rows dropped by DROPMALFORMED
+    # header rows dropped: their value does not parse as a double
     assert bundle.matrix.where(F.col("value").isNull()).count() == 0
     n_missing = sum(
         1
@@ -115,9 +115,19 @@ def test_connected_components_on_plants(spark, bundle):
     assert len(comp) == len(probe_ids)
 
 
-def test_end_to_end_predictions(spark, fixture_root, tmp_path):
+def test_end_to_end_predictions(spark, fixture_root, monkeypatch):
+    """The whole program on the fixture. Driver-known metadata stays in
+    the plan as literals: the pipeline never builds a Python RDD (a
+    local-list ``createDataFrame`` parallelizes one), so it starts no
+    Python worker."""
     import glob
 
+    from pyspark import SparkContext
+
+    def no_python_rdd(*args, **kwargs):
+        raise AssertionError("the LUAD path built a Python RDD")
+
+    monkeypatch.setattr(SparkContext, "parallelize", no_python_rdd)
     preds_df = pipeline.run_pipeline(
         spark, fixture_root[1], output_token="test", als_blocks=4
     )
@@ -161,6 +171,96 @@ def test_stage_boundaries_are_leaf_scans(spark, cfg, bundle):
     assert cache.isEmpty()
     ml.als_complete(bundle.matrix, num_blocks=4).count()
     assert cache.isEmpty()
+
+
+def _write_input(root, files, *, predictive=(), tumorous=(), lines=None):
+    """One-type definition file: ``files`` maps sample -> file name;
+    samples not in ``predictive`` are training samples."""
+    lines = lines or ["probe_id\traw_count", "p1\t1.5", "p2\t2.5"]
+    with open(root / "input.txt", "w") as f:
+        f.write("def\tsample-type\tt1\n")
+        for s in files:
+            kind = "predictive" if s in predictive else "sample"
+            f.write(f"def\t{kind}\t{s}\n")
+        for s in tumorous:
+            f.write(f"diagnosis\t{s}\tTN\n")
+        for s, name in files.items():
+            path = root / name
+            path.parent.mkdir(parents=True, exist_ok=True)
+            path.write_text("".join(line + "\n" for line in lines))
+            f.write(f"t1\t{s}\t{path}\n")
+    return pipeline.parse_definition_file(str(root / "input.txt"))
+
+
+def _named_cells(bundle):
+    samples = {r.id: r.name for r in bundle.sample_dict.collect()}
+    probes = {r.id: r.name for r in bundle.probe_dict.collect()}
+    return {
+        (samples[r.sample_id], probes[r.probe_id], r.value)
+        for r in bundle.matrix.collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "files, lines",
+    [
+        # Two columns are read whatever a file's first line holds: a
+        # one-field header is dropped, like Flink's lenient
+        # ``includedFields=(0,1)`` read (Input.scala:121), and so is a
+        # one-field row further down.
+        (
+            {"s1": "s1.tsv", "s2": "s2.tsv"},
+            ["probe", "p1\t1.5\textra", "p3", "p2\t2.5"],
+        ),
+        # ``input_file_name()`` escapes a space as %20 and a % as %25
+        # and leaves a + as it is; each file's rows must still reach
+        # its sample.
+        (
+            {"s1": "s1 a.tsv", "s2": "s2%b.tsv", "s3": "s3+c.tsv", "s4": "s4%2B.tsv"},
+            None,
+        ),
+    ],
+    ids=["one_field_lines", "uri_escaped_names"],
+)
+def test_build_matrix_keeps_every_row(spark, tmp_path, files, lines):
+    cfg = _write_input(tmp_path, files, lines=lines)
+    assert _named_cells(pipeline.build_matrix(spark, cfg)) == {
+        (s, p, v) for s in files for p, v in (("p1", 1.5), ("p2", 2.5))
+    }
+
+
+@pytest.mark.parametrize(
+    "tumorous, expected",
+    [
+        # s3 is predictive and diagnosed TN: prediction wins over
+        # training (Input.scala:156-159), the flag is kept
+        (("s1", "s3"), {"s1": (True, False), "s2": (False, False), "s3": (True, True)}),
+        # no ``diagnosis ... TN`` line at all: nothing is tumorous
+        ((), {"s1": (False, False), "s2": (False, False), "s3": (False, True)}),
+    ],
+    ids=["predictive_and_tn", "no_diagnosis"],
+)
+def test_labels(spark, tmp_path, tumorous, expected):
+    cfg = _write_input(
+        tmp_path,
+        {s: f"{s}.tsv" for s in ("s1", "s2", "s3")},
+        predictive=("s3",),
+        tumorous=tumorous,
+    )
+    bundle = pipeline.build_matrix(spark, cfg)
+    names = {r.id: r.name for r in bundle.sample_dict.collect()}
+    assert {
+        names[r.sample_id]: (r.tumorous, r.is_prediction)
+        for r in bundle.labels.collect()
+    } == expected
+
+
+def test_build_matrix_rejects_basename_collision(spark, tmp_path):
+    """Two files of one type with the same basename cannot be told apart
+    by the scanned file name, so the build refuses them."""
+    cfg = _write_input(tmp_path, {"s1": "a/x.tsv", "s2": "b/x.tsv"})
+    with pytest.raises(ValueError, match="basename collision for type 't1': 'x.tsv'"):
+        pipeline.build_matrix(spark, cfg)
 
 
 def test_cli_prints_sorted_predictions(spark, fixture_root, capsys):
