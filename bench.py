@@ -1,19 +1,22 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line (full record in
+bench_full.json):
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Protocol (BASELINE.md): warm SparkSession, each query timed end-to-end
-(plan -> Arrow toPandas materialization), median of 3 runs after one warmup.
+(plan -> Arrow toPandas materialization), median of 3 runs after one
+warmup; the COMPONENTS arcs' phase splits come from the same runs.
 
-Headline set: one representative per operator family —
-multi-join star agg, grouped moments, cross+anti missing-cells, in-group
-vector assembly, shuffle join, semi join, explode symmetrize, top-k,
-correlation self-join, iterative connected components, text stats,
-exact dedup, cosine top-k, document chunking, n-gram vocabulary, CUBE,
-bucketed co-located join (timing includes writing both bucketed tables),
-streaming tumbling window.
+Headline set: the first 20 rows are one representative per operator
+family — multi-join star agg, grouped moments, cross+anti missing-cells,
+in-group vector assembly, shuffle join, semi join, explode symmetrize,
+top-k, correlation self-join, iterative connected components, text
+stats, exact dedup, cosine top-k, document chunking, n-gram vocabulary,
+CUBE, SCD2, interval join, bucketed co-located join (timing includes
+writing both bucketed tables), streaming tumbling window; the rest are
+the dedup, curation, ANN and streaming tiers.
 """
 
 from __future__ import annotations
@@ -160,7 +163,7 @@ HEADLINE = [
     # round 12 (VERDICT r11 item 1): the ACTION half of the ANN
     # detect→act loop — detect recall decay, re-train quantizers over
     # the union corpus, persist to a fresh versioned root, verify
-    # recovery (decomposed in ll110_components: build/detect/act) —
+    # recovery (phases in COMPONENTS: build/detect/act) —
     # and the same arc run against the STREAMING-folded index (the
     # post-drain snapshot-publish step of a standing ingest pipeline)
     "ll110_ann_retrain_on_drift",
@@ -173,6 +176,37 @@ HEADLINE = [
     # drain + the publish (a manifest CAS + one root delete).
     "ss25_streaming_snapshot_publish",
 ]
+
+# Composite arcs time their own phases while they run
+# (flink_luad_pipeline_spark.phases). Headline row -> (bench_full.json
+# key, recorded phases (a tuple sums its phases under the first name),
+# the remainder = the timed run minus those phases, a count or rate).
+COMPONENTS = {
+    "ss18_streaming_neardup_probe": (
+        "ss18_components", ("index_build_s",), "drain_s", "docs_per_s"
+    ),
+    "ll100_incremental_curation": (
+        "ll100_components", ("day0_build_s",), "day_n_s", "delta_rows"
+    ),
+    "ll101_learned_quality_scorer": (
+        "ll101_components", ("feature_s", "train_s"), "score_s", None
+    ),
+    "ll104_component_bridges": (
+        "ll104_components", ("day0_build_s",), "day_n_s",
+        "delta_docs_with_base_neighbors",
+    ),
+    "ss21_streaming_incremental_curation": (
+        "ss21_components", ("day0_build_s", "drain_fold_s"), None,
+        "delta_docs_per_s",
+    ),
+    "ll107_ann_index_delta_trained": (
+        "ll107_components", ("build_s", "fold_s"), "probe_s", None
+    ),
+    "ll110_ann_retrain_on_drift": (
+        "ll110_components", (("build_s", "fold_s"), "detect_s"), "act_s",
+        "recall_before",
+    ),
+}
 
 
 def _calibration_query(spark, sf_dir):
@@ -192,13 +226,55 @@ def _calibration_query(spark, sf_dir):
 
 
 def _time_calibration(spark, sf_dir) -> float:
-    _calibration_query(spark, sf_dir).toPandas()  # warmup
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        _calibration_query(spark, sf_dir).toPandas()
-        runs.append(time.perf_counter() - t0)
+    runs = _timed(spark, sf_dir, _calibration_query)[0]
     return round(statistics.median(runs), 4)
+
+
+def _timed(spark, sf_dir, fn):
+    """3 timed runs after one warmup: their seconds, the phases each
+    recorded, and the last run's result."""
+    from flink_luad_pipeline_spark import phases
+
+    fn(spark, sf_dir).toPandas()  # warmup run (not timed)
+    runs, recorded = [], []
+    for _ in range(3):
+        phases.take()  # drop what the warmup or earlier rows recorded
+        t0 = time.perf_counter()
+        pdf = fn(spark, sf_dir).toPandas()
+        runs.append(time.perf_counter() - t0)
+        recorded.append(phases.take())
+    return runs, recorded, pdf
+
+
+def _split(name, runs, recorded, pdf, spark, sf_dir) -> dict:
+    """A COMPONENTS row: per-phase medians over the timed runs, and its
+    count or rate, from the last result or an input count taken after
+    the timed runs."""
+    from flink_luad_pipeline_spark import catalog
+    from flink_luad_pipeline_spark.plans.llm_queries import _ll100_fixture
+
+    _, parts, rest, count = COMPONENTS[name]
+    per_run = []
+    for t, ph in zip(runs, recorded):
+        split = {}
+        for p in parts:
+            p = (p,) if isinstance(p, str) else p
+            split[p[0]] = sum(ph[n] for n in p)
+        if rest:
+            split[rest] = t - sum(split.values())
+        per_run.append(split)
+    out = {k: statistics.median(s[k] for s in per_run) for k in per_run[0]}
+    if count == "docs_per_s":
+        n = catalog.load(spark, sf_dir, "documents").count()
+        out[count] = round(n / out["drain_s"], 1)
+    elif count == "delta_docs_per_s":
+        n = _ll100_fixture(spark, sf_dir)[1].count()
+        out[count] = round(n / out["drain_fold_s"], 1)
+    elif count == "recall_before":
+        out[count] = float(pdf[count].mean())
+    elif count:
+        out[count] = len(pdf)
+    return {k: round(v, 4) for k, v in out.items()}
 
 
 def main() -> None:
@@ -228,6 +304,7 @@ def main() -> None:
     canary_window: list[dict] = []
 
     per_query: dict[str, float | None] = {}
+    components: dict[str, dict] = {}
     failed: list[str] = []
     for qi, name in enumerate(HEADLINE):
         if qi and qi % 10 == 0:
@@ -240,23 +317,25 @@ def main() -> None:
             # normalization uses the MEDIAN of first/mid/last instead
             # of the single first observation
             calibration_mid = _time_calibration(spark, sf_dir)
-        fn = queries[name]
         # full driver materialization via Arrow (toPandas): same
         # end-to-end semantics as collect() but batch-columnar transfer
         # instead of py4j row-at-a-time pickling, which would otherwise
         # dominate timings for queries returning ~1M rows
         try:
-            fn(spark, sf_dir).toPandas()  # warmup run (not timed)
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).toPandas()
-                runs.append(time.perf_counter() - t0)
+            runs, recorded, pdf = _timed(spark, sf_dir, queries[name])
             per_query[name] = round(statistics.median(runs), 4)
         except Exception as exc:  # one bad query must not kill the metric
             print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
             per_query[name] = None
             failed.append(name)
+            continue
+        if name in COMPONENTS:
+            try:
+                split = _split(name, runs, recorded, pdf, spark, sf_dir)
+                components[COMPONENTS[name][0]] = split
+            except Exception as exc:  # nor may a phase split
+                print(f"bench: {name} phases FAILED: {exc!r}", file=sys.stderr)
+        del pdf  # a large result must not outlive its row
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # A failed query must not shrink the headline number: with any
@@ -367,94 +446,8 @@ def main() -> None:
     # the section exists to measure the sf0.1 -> sf1 growth FACTOR, and
     # bounding its wall-time keeps the whole bench inside any driver
     # budget.
-    is_default_sf = False
-    try:
-        is_default_sf = float(sf) == 0.1
-    except ValueError:
-        pass
-    # ss18's headline row conflates the one-time snapshot index build
-    # with the streaming drain (VERDICT r6 item 5) — record the
-    # decomposition + micro-batch throughput next to it.
-    if "ss18_streaming_neardup_probe" in HEADLINE and not failed:
-        try:
-            from flink_luad_pipeline_spark.plans.streaming_queries import (
-                ss18_components,
-            )
-
-            out["ss18_components"] = ss18_components(spark, sf_dir)
-        except Exception as exc:
-            print(f"bench: ss18 decomposition FAILED: {exc}", file=sys.stderr)
-    # ll100's headline row times day-0 state build + day-N probe
-    # together; the recurring 100 TB cost is day-N alone — record the
-    # decomposition next to it (the ss18_components device)
-    if "ll100_incremental_curation" in HEADLINE and not failed:
-        try:
-            from flink_luad_pipeline_spark.plans.llm_queries import (
-                ll100_components,
-            )
-
-            out["ll100_components"] = ll100_components(spark, sf_dir)
-        except Exception as exc:
-            print(f"bench: ll100 decomposition FAILED: {exc}", file=sys.stderr)
-    # ll101's sf10 growth was attributed to the hashed-feature pass
-    # without a measurement (VERDICT r9 item 8) — record the
-    # feature/train/score split next to the headline row
-    if "ll101_learned_quality_scorer" in HEADLINE and not failed:
-        try:
-            from flink_luad_pipeline_spark.plans.llm_queries import (
-                ll101_components,
-            )
-
-            out["ll101_components"] = ll101_components(spark, sf_dir)
-        except Exception as exc:
-            print(f"bench: ll101 decomposition FAILED: {exc}", file=sys.stderr)
-    # ll104's headline row conflates the day-0 artifact build with the
-    # recurring detector probe; ss21's conflates the day-0 state build
-    # with the stream drain+fold — decompose both (the ss18 device)
-    if "ll104_component_bridges" in HEADLINE and not failed:
-        try:
-            from flink_luad_pipeline_spark.plans.llm_queries import (
-                ll104_components,
-            )
-
-            out["ll104_components"] = ll104_components(spark, sf_dir)
-        except Exception as exc:
-            print(f"bench: ll104 decomposition FAILED: {exc}", file=sys.stderr)
-    if "ss21_streaming_incremental_curation" in HEADLINE and not failed:
-        try:
-            from flink_luad_pipeline_spark.plans.streaming_queries import (
-                ss21_components,
-            )
-
-            out["ss21_components"] = ss21_components(spark, sf_dir)
-        except Exception as exc:
-            print(f"bench: ss21 decomposition FAILED: {exc}", file=sys.stderr)
-    # ll107's headline row conflates the once-per-snapshot trained
-    # BUILD (ll105's cost, the sf1 cap-knee term) with the recurring
-    # O(delta) fold and the probe — decompose so the production costs
-    # (fold_s, probe_s) are recorded numbers
-    if "ll107_ann_index_delta_trained" in HEADLINE and not failed:
-        try:
-            from flink_luad_pipeline_spark.plans.llm_queries import (
-                ll107_components,
-            )
-
-            out["ll107_components"] = ll107_components(spark, sf_dir)
-        except Exception as exc:
-            print(f"bench: ll107 decomposition FAILED: {exc}", file=sys.stderr)
-    # ll110's headline row conflates the day-0 build it shares with
-    # ll107/ll108, the recurring DETECT probe, and the rare ACT path
-    # (retrain + persist + verify) — decompose so the per-snapshot
-    # detect cost and the on-trigger act cost are recorded numbers
-    if "ll110_ann_retrain_on_drift" in HEADLINE and not failed:
-        try:
-            from flink_luad_pipeline_spark.plans.llm_queries import (
-                ll110_components,
-            )
-
-            out["ll110_components"] = ll110_components(spark, sf_dir)
-        except Exception as exc:
-            print(f"bench: ll110 decomposition FAILED: {exc}", file=sys.stderr)
+    is_default_sf = out["sf"] == 0.1
+    out.update(components)
     if is_default_sf and not os.environ.get("SPARK_GRAFT_SKIP_SF1"):
         try:
             # _sf1_section stops the aged session and runs on a fresh
@@ -535,13 +528,14 @@ def _sf1_section(spark, queries, sf01_per_query) -> tuple[dict, object]:
         "ll95_residual_ivfpq_topk",
         "ll105_ann_index_persisted",
         # The ll107 family carries ll105's trained-residual BUILD in
-        # every registered row (the once-per-snapshot cost; decomposed
-        # in ll107_components): the PQ code count grows as N/64 until
-        # the 256-code cap binds at N=16384 — between sf0.1 and sf1 —
-        # so sf0.1→sf1 measures the cap-knee's one-time 10-15×, not an
-        # asymptotic shape (above the knee, training is sample-bounded
-        # and encode is O(N·m·256), linear; SCALE.md's sf10 probe
-        # carries that measurement, same protocol as ll95/ll105).
+        # every registered row (the once-per-snapshot cost, the
+        # build_s phase of ll107_components): the PQ code count grows
+        # as N/64 until the 256-code cap binds at N=16384 — between
+        # sf0.1 and sf1 — so sf0.1→sf1 measures the cap-knee's
+        # one-time 10-15×, not an asymptotic shape (above the knee,
+        # training is sample-bounded and encode is O(N·m·256), linear;
+        # SCALE.md's sf10 probe carries that measurement, same
+        # protocol as ll95/ll105).
         "ll107_ann_index_delta_trained",
         "ss23_streaming_ann_ingest_trained",
         "ll108_ann_recall_drift",

@@ -154,18 +154,11 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def _shingled(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        word_shingles(tokenize(F.col(text_col)), k).alias("shingles"),
-    ).where(F.size("shingles") > 0)
-
-
 def _shingled_spread(
     df: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """_shingled for the materializing dedup tiers: rebalances the raw
-    (id, text) rows FIRST (see _spread) and skips the empty-set
+    """(doc_id, shingles) for the materializing dedup tiers: rebalances
+    the raw (id, text) rows FIRST (see _spread) and skips the empty-set
     filter — a size(shingles) > 0 predicate gets pushed below the
     repartition exchange by PushDownPredicates, re-serializing the
     heavy tokenize+ngram+distinct pass onto the scan's 1-2 row-group

@@ -131,7 +131,9 @@ def connected_components_star(
     canonical edge sets proves set equality (no hash-collision risk).
 
     Same contract as ``connected_components``: DataFrame[vertex,
-    component], isolated vertices included via ``vertices``.
+    component], isolated vertices included via ``vertices``, and a
+    ``RuntimeWarning`` when ``max_rounds`` ends the loop before the
+    fixed point.
     """
     pairs = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -197,6 +199,12 @@ def connected_components_star(
         # data, and no checksum-collision early-termination risk.
         if cur.count() == prev.count() and prev.exceptAll(cur).isEmpty():
             break
+    else:
+        warnings.warn(
+            "connected_components_star: edges still changing after "
+            f"max_rounds={max_rounds}; components may be split",
+            RuntimeWarning, stacklevel=2,
+        )
     # fixed point: stars rooted at component minimum -> (root=u, member=v)
     labels = cur.select(
         F.col("v").alias("vertex"), F.col("u").alias("component")

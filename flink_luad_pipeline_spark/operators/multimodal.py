@@ -438,14 +438,6 @@ def sample_frame_stats(
     return binary_df.mapInPandas(batches, FRAME_STATS_SCHEMA)
 
 
-def payload_checksum(binary_df: DataFrame) -> DataFrame:
-    """Driver-verifiable checksum of payload bytes (md5 hex) — lets an
-    oracle validate the binary plumbing end-to-end in pure SQL."""
-    return binary_df.select(
-        "doc_id", F.hex(F.md5(F.col("payload").cast("binary"))).alias("checksum")
-    )
-
-
 WINDOW_STATS_SCHEMA = "doc_id BIGINT, win_idx INT, win_mean DOUBLE, win_max BIGINT"
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine_similarity
+from ..phases import phase
 from .clustering import _mean_agg_cols
 from .dedup import _spread
 from .io import write_frames
@@ -2043,7 +2044,7 @@ def ann_index_retrain_on_drift(
       1. DETECT — probe recall@k of the live index against exact
          brute-force over the bounded probe sample; take the mean
          (one 1-row driver action, the documented once-per-snapshot
-         class).
+         class). Recorded as the phase ``detect_s``.
       2. DECIDE — if mean recall >= ``threshold`` the quantizers still
          fit: return the index unchanged, report recall_after ==
          recall_before, retrained=false. Nothing is written.
@@ -2078,17 +2079,19 @@ def ann_index_retrain_on_drift(
     # same candidates, same k), so the |probe|×corpus exact chain runs
     # once instead of twice (and, uncheckpointed, it previously re-ran
     # per consumer inside each probe — 4x total).
-    exact = brute_force_topk(
-        queries, candidates, k=k, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits,
-    ).select("query_id", "cand_id").localCheckpoint(eager=True)
-    # the probe output is |probe| tiny rows but feeds the decide mean
-    # AND the report join — checkpoint so the probe chain runs once
-    before = ann_index_recall_probe(
-        queries, candidates, index, k=k, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits, exact=exact, **probe_params,
-    ).localCheckpoint(eager=True)
-    mean_before = before.agg(F.avg("recall_at_k")).collect()[0][0]
+    with phase("detect_s"):
+        exact = brute_force_topk(
+            queries, candidates, k=k, id_col=id_col, vec_col=vec_col,
+            round_digits=round_digits,
+        ).select("query_id", "cand_id").localCheckpoint(eager=True)
+        # the probe output is |probe| tiny rows but feeds the decide
+        # mean AND the report join — checkpoint so the probe chain
+        # runs once
+        before = ann_index_recall_probe(
+            queries, candidates, index, k=k, id_col=id_col, vec_col=vec_col,
+            round_digits=round_digits, exact=exact, **probe_params,
+        ).localCheckpoint(eager=True)
+        mean_before = before.agg(F.avg("recall_at_k")).collect()[0][0]
     retrained = mean_before is not None and float(mean_before) < threshold
     if not retrained:
         report = before.select(

@@ -32,6 +32,7 @@ Trainer.scala (SVM). Deliberate Spark-first deltas, each cited:
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +43,7 @@ from .operators import relational as R
 
 #: default correlation threshold (Input.scala:185)
 DEFAULT_PC_THRESHOLD = 0.8
+_GLOB_CHARS = re.compile(r"[\\{}\[\]*?]")  # Hadoop glob syntax
 
 
 @dataclass
@@ -148,7 +150,9 @@ def build_matrix(spark: SparkSession, cfg: PipelineConfig) -> MatrixBundle:
                     "multi-path sample recovery needs unique file names"
                 )
             owners[base] = sample
-            paths.setdefault(typ, []).append(path)
+            # the reader expands Hadoop glob characters; escape them so
+            # each path names exactly its own file
+            paths.setdefault(typ, []).append(_GLOB_CHARS.sub(r"\\\g<0>", path))
 
     # ``input_file_name()`` is Hadoop's ``Path.toUri`` form: a space
     # reads back as %20 and a % as %25, while a literal + stays as it

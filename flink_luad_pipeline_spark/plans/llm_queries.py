@@ -21,6 +21,7 @@ from ..catalog import load
 from ..functions import text as T
 from ..operators import dedup, multimodal, similarity
 from ..operators.io import write_frames
+from ..phases import phase
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -3004,6 +3005,30 @@ def ll95_residual_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _trained_index(spark: SparkSession, corpus: DataFrame, root: str) -> dict:
+    """ll105's trained residual IVF-PQ index over ``corpus`` (kmeans
+    k=8 coarse cells; 2-iteration residual Lloyd codebook over the id%4
+    sample), written under ``root`` as independent single-directory
+    writes overlapped on driver threads (guide §2.6) and read back with
+    the writer frames' schemas, so no footer-inference job runs
+    (§1.2)."""
+    from ..operators import clustering
+
+    cents = clustering.kmeans_fit(corpus, k=8, iters=3).select(
+        F.col("cid").alias("centroid_id"), F.col("cv").alias("centv")
+    )
+    frames = similarity.residual_ann_index_frames(
+        corpus, centroids=cents, train_iters=2, train_mod=4
+    )
+    write_frames(frames, root)
+    return {
+        name_: spark.read.schema(df_.schema).parquet(
+            f"{root}/{name_}.parquet"
+        )
+        for name_, df_ in frames.items()
+    }
+
+
 @query("ll105_ann_index_persisted", oracle=_RESIDUAL_IVFPQ_ORACLE)
 def ll105_ann_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERSISTED ANN INDEX — ll95's configuration through the ll63
@@ -3023,27 +3048,10 @@ def ll105_ann_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the parquet round-trip pins the artifact schemas as stable
     on-disk contracts (ll63's discipline). A probe with mismatched
     parameters refuses loudly (meta-stamp guard, tested)."""
-    from ..operators import clustering
     from .relational_queries import sink_path
 
     emb = load(spark, sf_dir, "embeddings")
-    cents = clustering.kmeans_fit(emb, k=8, iters=3).select(
-        F.col("cid").alias("centroid_id"), F.col("cv").alias("centv")
-    )
-    frames = similarity.residual_ann_index_frames(
-        emb, centroids=cents, train_iters=2, train_mod=4
-    )
-    root = sink_path("ll105_index", sf_dir)
-    # independent single-directory writes, overlapped on driver
-    # threads (guide §2.6; operators/io.write_frames); read-back uses
-    # the writer frames' schemas — no footer-inference jobs (§1.2)
-    write_frames(frames, root)
-    index = {
-        name_: spark.read.schema(df_.schema).parquet(
-            f"{root}/{name_}.parquet"
-        )
-        for name_, df_ in frames.items()
-    }
+    index = _trained_index(spark, emb, sink_path("ll105_index", sf_dir))
     out = similarity.residual_ann_index_topk(
         emb.where(F.col("vec_id") < 5), index, k=10,
         train_iters=2, train_mod=4,
@@ -3264,100 +3272,29 @@ def _ll107_folded_index(
     spark: SparkSession, sf_dir: str, root_name: str = "ll107_index"
 ) -> tuple[DataFrame, dict[str, DataFrame]]:
     """ll107's build: base-trained persisted index + the delta folded
-    as a batch-keyed codes partition (O(delta) write). Returns (emb,
-    folded index dict) — shared by ll107 (probe) and ll108 (recall
-    drift probe over the same snapshot)."""
-    from ..operators import clustering
+    as a batch-keyed codes partition (O(delta) write), timed as the
+    phases ``build_s`` and ``fold_s``. Returns (emb, folded index
+    dict) — shared by ll107 (probe), ll108 (recall drift probe over the
+    same snapshot) and ll110 (retrain on drift)."""
     from .relational_queries import sink_path
 
     emb = load(spark, sf_dir, "embeddings")
     base = emb.where(F.col("vec_id") % 5 != 0)
     delta = emb.where(F.col("vec_id") % 5 == 0)
-    cents = clustering.kmeans_fit(base, k=8, iters=3).select(
-        F.col("cid").alias("centroid_id"), F.col("cv").alias("centv")
-    )
-    frames = similarity.residual_ann_index_frames(
-        base, centroids=cents, train_iters=2, train_mod=4
-    )
     root = sink_path(root_name, sf_dir)
-    write_frames(frames, root)  # guide §2.6: overlapped independent writes
-    index = {
-        name_: spark.read.schema(df_.schema).parquet(
-            f"{root}/{name_}.parquet"
-        )
-        for name_, df_ in frames.items()
-    }
-    delta_codes = similarity.residual_ann_index_encode_delta(
-        index, delta, train_iters=2, train_mod=4
-    )
-    delta_codes.write.mode("overwrite").parquet(f"{root}/codes_d1.parquet")
+    with phase("build_s"):
+        index = _trained_index(spark, base, root)
+    with phase("fold_s"):
+        similarity.residual_ann_index_encode_delta(
+            index, delta, train_iters=2, train_mod=4
+        ).write.mode("overwrite").parquet(f"{root}/codes_d1.parquet")
     folded = dict(
         index,
-        codes=spark.read.schema(frames["codes"].schema).parquet(
+        codes=spark.read.schema(index["codes"].schema).parquet(
             f"{root}/codes.parquet", f"{root}/codes_d1.parquet"
         ),
     )
     return emb, folded
-
-
-def ll107_components(spark: SparkSession, sf_dir: str) -> dict:
-    """Bench decomposition of ll107 (the ll104/ss21 device): the
-    registered row conflates the once-per-snapshot trained-index BUILD
-    (kmeans + residual Lloyd + full-corpus encode + parquet persist —
-    ll105's cost, the cap-knee term between sf0.1 and sf1) with the
-    RECURRING daily fold (delta encode against frozen quantizers + one
-    O(delta) partition write) and the per-batch probe. Times the three
-    separately — the recurring numbers are the production costs. Not a
-    registered query (reports timings); bench.py records it next to
-    ll107's headline row."""
-    import time as _time
-
-    from ..operators import clustering
-    from .relational_queries import sink_path
-
-    emb = load(spark, sf_dir, "embeddings")
-    base = emb.where(F.col("vec_id") % 5 != 0)
-    delta = emb.where(F.col("vec_id") % 5 == 0)
-    t0 = _time.perf_counter()
-    cents = clustering.kmeans_fit(base, k=8, iters=3).select(
-        F.col("cid").alias("centroid_id"), F.col("cv").alias("centv")
-    )
-    frames = similarity.residual_ann_index_frames(
-        base, centroids=cents, train_iters=2, train_mod=4
-    )
-    root = sink_path("ll107c_index", sf_dir)
-    write_frames(frames, root)  # guide §2.6: overlapped independent writes
-    index = {
-        name_: spark.read.schema(df_.schema).parquet(
-            f"{root}/{name_}.parquet"
-        )
-        for name_, df_ in frames.items()
-    }
-    build_s = _time.perf_counter() - t0
-
-    t0 = _time.perf_counter()
-    similarity.residual_ann_index_encode_delta(
-        index, delta, train_iters=2, train_mod=4
-    ).write.mode("overwrite").parquet(f"{root}/codes_d1.parquet")
-    fold_s = _time.perf_counter() - t0
-
-    folded = dict(
-        index,
-        codes=spark.read.schema(frames["codes"].schema).parquet(
-            f"{root}/codes.parquet", f"{root}/codes_d1.parquet"
-        ),
-    )
-    t0 = _time.perf_counter()
-    similarity.residual_ann_index_topk(
-        emb.where(F.col("vec_id") < 5), folded, k=10,
-        train_iters=2, train_mod=4,
-    ).toPandas()
-    probe_s = _time.perf_counter() - t0
-    return {
-        "build_s": round(build_s, 4),
-        "fold_s": round(fold_s, 4),
-        "probe_s": round(probe_s, 4),
-    }
 
 
 _LL108_ORACLE = (
@@ -3511,49 +3448,6 @@ def ll110_ann_retrain_on_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("recall_after").cast("double").alias("recall_after"),
         "retrained",
     )
-
-
-def ll110_components(spark: SparkSession, sf_dir: str) -> dict:
-    """Bench decomposition of ll110 (the ll107_components device): the
-    registered row conflates the DAY-0 build it shares with ll107/ll108
-    (trained index + fold — once per snapshot), the recurring DETECT
-    probe (recall before — the only per-snapshot cost when the trigger
-    does NOT fire), and the rare ACT path (retrain + persist + verify
-    probe — paid on distribution shift only). Times the three
-    separately; not a registered query (reports timings)."""
-    import time as _time
-
-    from .relational_queries import sink_path
-
-    t0 = _time.perf_counter()
-    emb, folded = _ll107_folded_index(spark, sf_dir, "ll110c_index")
-    for name_ in folded:
-        folded[name_].count()
-    build_s = _time.perf_counter() - t0
-
-    qv = emb.where(F.col("vec_id") < 5)
-    t0 = _time.perf_counter()
-    before = similarity.ann_index_recall_probe(
-        qv, emb, folded, k=10, train_iters=2, train_mod=4
-    )
-    mean_before = before.agg(F.avg("recall_at_k")).collect()[0][0]
-    detect_s = _time.perf_counter() - t0
-
-    t0 = _time.perf_counter()
-    res = similarity.ann_index_retrain_on_drift(
-        qv, emb, folded, root=sink_path("ll110c_index_v2", sf_dir),
-        threshold=0.9, k=10, train_iters=2, train_mod=4,
-    )
-    res["report"].toPandas()
-    act_s = _time.perf_counter() - t0
-    return {
-        "build_s": round(build_s, 4),
-        "detect_s": round(detect_s, 4),
-        # act_s includes its own detect pass (the operator re-probes);
-        # the marginal retrain+verify cost is act_s - detect_s
-        "act_s": round(act_s, 4),
-        "recall_before": round(float(mean_before), 4),
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -6117,11 +6011,12 @@ def ll101_learned_quality_scorer(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = None
     for _, ok in _gopher_rules():
         kept = ok if kept is None else kept & ok
-    labeled = (
-        emb.join(sig.select("doc_id", kept.alias("kept")), "doc_id")
-        # feeds the prototype aggregation AND the cosine projection
-        .localCheckpoint(eager=True)
-    )
+    with phase("feature_s"):
+        labeled = (
+            emb.join(sig.select("doc_id", kept.alias("kept")), "doc_id")
+            # feeds the prototype aggregation AND the cosine projection
+            .localCheckpoint(eager=True)
+        )
     # Rocchio prototype: per-dim 6dp-rounded mean of the weak-positive
     # embeddings — one dim-keyed partial agg, assembled into a single
     # 64-double row (the kmeans centroid-frame device)
@@ -6140,19 +6035,20 @@ def ll101_learned_quality_scorer(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = F.round(cosine_similarity(F.col("embedding"), F.col("pv")), 6) + F.lit(
         0.0
     )
-    td = (
-        labeled.crossJoin(F.broadcast(proto))
-        .select(
-            "doc_id",
-            x.alias("x"),
-            F.when(F.col("kept"), 1.0).otherwise(0.0).alias("y"),
+    with phase("train_s"):
+        td = (
+            labeled.crossJoin(F.broadcast(proto))
+            .select(
+                "doc_id",
+                x.alias("x"),
+                F.when(F.col("kept"), 1.0).otherwise(0.0).alias("y"),
+            )
+            .where(F.col("x").isNotNull())
+            # feeds 3 IRLS aggregation passes + the scoring join —
+            # without the boundary Catalyst re-runs the hash-feature
+            # shuffle and the prototype pass once per consumer
+            .localCheckpoint(eager=True)
         )
-        .where(F.col("x").isNotNull())
-        # feeds 3 IRLS aggregation passes + the scoring join — without
-        # the boundary Catalyst re-runs the hash-feature shuffle and
-        # the prototype pass once per consumer
-        .localCheckpoint(eager=True)
-    )
     w = ml.logistic_irls_1d(td.select("y", "x"), steps=3)
     margin = (
         F.round(
@@ -6167,87 +6063,6 @@ def ll101_learned_quality_scorer(spark: SparkSession, sf_dir: str) -> DataFrame:
         margin.alias("margin"),
         (margin > 0.0).alias("keep"),
     )
-
-
-def ll101_components(spark: SparkSession, sf_dir: str) -> dict:
-    """Bench decomposition of ll101 (VERDICT r9 item 8): the headline
-    row's sf10 growth (6.8×, SCALE.md) was ATTRIBUTED to the
-    hashed-feature pass without being measured — this times the three
-    plan sections separately (the ss18/ll100 decomposition device):
-    ``feature_s`` = hashed embeddings + weak labels materialized to
-    the checkpoint boundary (the corpus-sized, disk-bound pass);
-    ``train_s`` = Rocchio prototype + the 3 IRLS aggregations down to
-    the 1-row beta frame (small shuffles over numbers); ``score_s`` =
-    the broadcast-beta scoring projection drained to the driver. Not a
-    registered query (it reports timings); bench.py records it in
-    bench_full.json next to ll101's headline row."""
-    import time as _time
-
-    from .. import ml
-    from ..functions.vectors import cosine_similarity
-
-    docs = load(spark, sf_dir, "documents")
-    t0 = _time.perf_counter()
-    emb = similarity.hashed_embeddings(docs, "doc_id", "text", dim=64)
-    sig = _gopher_signal_frame(docs)
-    kept = None
-    for _, ok in _gopher_rules():
-        kept = ok if kept is None else kept & ok
-    labeled = emb.join(
-        sig.select("doc_id", kept.alias("kept")), "doc_id"
-    ).localCheckpoint(eager=True)
-    feature_s = _time.perf_counter() - t0
-
-    t0 = _time.perf_counter()
-    proto = (
-        labeled.where(F.col("kept"))
-        .select(F.posexplode("embedding").alias("i", "v"))
-        .groupBy("i")
-        .agg(F.round(F.avg("v"), 6).alias("av"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "av"))),
-                lambda p: p["av"],
-            ).alias("pv")
-        )
-    )
-    x = F.round(
-        cosine_similarity(F.col("embedding"), F.col("pv")), 6
-    ) + F.lit(0.0)
-    td = (
-        labeled.crossJoin(F.broadcast(proto))
-        .select(
-            "doc_id",
-            x.alias("x"),
-            F.when(F.col("kept"), 1.0).otherwise(0.0).alias("y"),
-        )
-        .where(F.col("x").isNotNull())
-        .localCheckpoint(eager=True)
-    )
-    w = ml.logistic_irls_1d(td.select("y", "x"), steps=3)
-    w = w.localCheckpoint(eager=True)
-    train_s = _time.perf_counter() - t0
-
-    t0 = _time.perf_counter()
-    margin = (
-        F.round(
-            F.round(F.col("b0"), 6) + F.round(F.col("b1"), 6) * F.col("x"), 6
-        )
-        + F.lit(0.0)
-    )
-    td.crossJoin(F.broadcast(w)).select(
-        "doc_id",
-        F.col("x").alias("hash_proj"),
-        (F.col("y") == 1.0).alias("weak_label"),
-        margin.alias("margin"),
-        (margin > 0.0).alias("keep"),
-    ).toPandas()
-    score_s = _time.perf_counter() - t0
-    return {
-        "feature_s": round(feature_s, 4),
-        "train_s": round(train_s, 4),
-        "score_s": round(score_s, 4),
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -6497,19 +6312,16 @@ def _ll100_state_frames(corpus: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def _ll100_day_n(
-    spark: SparkSession, sf_dir: str, root: str | None = None
-) -> dict:
-    """Build the day-0 state (unless a prebuilt ``root`` is passed —
-    the bench decomposition's lever), run the day-N incremental pass,
-    and return every boundary frame — ``out`` (the registered query's
-    result) plus the delta-side artifacts (``new_fps``, ``d2``, ``d3``,
-    ``cleaned``, ``feats_d``) that ``ll100_updated_state_frames``
-    folds into the persisted state for day N+1. See
-    ``ll100_incremental_curation`` for the full stage-by-stage
-    narration."""
+def _ll100_day_n(spark: SparkSession, sf_dir: str) -> dict:
+    """Build the day-0 state (phase ``day0_build_s``), run the day-N
+    incremental pass, and return every boundary frame — ``out`` (the
+    registered query's result) plus the delta-side artifacts
+    (``new_fps``, ``d2``, ``d3``, ``cleaned``, ``feats_d``) that
+    ``ll100_updated_state_frames`` folds into the persisted state for
+    day N+1. See ``ll100_incremental_curation`` for the full
+    stage-by-stage narration."""
     base, delta, t = _ll100_fixture(spark, sf_dir)
-    if root is None:
+    with phase("day0_build_s"):
         root = _ll100_build_state(spark, base, sf_dir)
     fr = _ll100_day_n_over(spark, delta, root, t)
     fr["t"] = t
@@ -6986,6 +6798,60 @@ _LL104_ORACLE = _ll94_ctes(_ll100_aug_ctes(), minhash_cutoff=False) + (
 )
 
 
+def _ll104_pairs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, int]:
+    """The arc ll104 and ll109 share. Day 0 (phase ``day0_build_s``):
+    base stages 1-2, the MinHash band index, the base pair list and
+    its component labels. Day N: delta stages 1-2, then one probe of
+    the index. Returns (base pairs, base labels, the lazy delta pair
+    list, split id t)."""
+    from ..operators import graph
+
+    base, delta, t = _ll100_fixture(spark, sf_dir)
+    b1 = base.join(
+        _gopher_signal_frame(base).where(_ll100_kept_pred()).select("doc_id"),
+        "doc_id",
+    ).withColumn("fp", T.text_fingerprint(F.col("text")))
+    with phase("day0_build_s"):
+        b2 = (
+            b1.withColumn("kp", F.min("doc_id").over(W.partitionBy("fp")))
+            .where(F.col("doc_id") == F.col("kp"))
+            .select("doc_id", "text", "lang")
+            # consumers: band index + base pair graph (labels)
+            .localCheckpoint(eager=True)
+        )
+        sh_s, banded_s = dedup.build_minhash_index(b2, "doc_id", "text", k=3)
+        bpairs = dedup.minhash_lsh_pairs(
+            b2, "doc_id", "text", k=3, threshold=0.4, max_shingle_df=None
+        )
+        blab = graph.connected_components(bpairs, src="doc_a", dst="doc_b")
+    # day-N side: stages 1-2 on the delta, then the index probe
+    d1 = delta.join(
+        _gopher_signal_frame(delta).where(_ll100_kept_pred()).select("doc_id"),
+        "doc_id",
+    ).withColumn("fp", T.text_fingerprint(F.col("text")))
+    d2 = (
+        # base fps from the CHECKPOINTED b2, not b1 (guide §1.2, r14):
+        # b2 keeps one doc per fingerprint, so fingerprint(b2.text) IS
+        # b1.fp's distinct set — identical anti-join semantics with no
+        # re-run of the base gopher gate + fingerprint pass
+        d1.join(
+            b2.select(T.text_fingerprint(F.col("text")).alias("fp")),
+            "fp",
+            "left_anti",
+        )
+        .withColumn("kp", F.min("doc_id").over(W.partitionBy("fp")))
+        .where(F.col("doc_id") == F.col("kp"))
+        .select("doc_id", "text", "lang")
+    )
+    pairs = dedup.minhash_incremental_pairs(
+        None, d2, "doc_id", "text", k=3, threshold=0.4,
+        snapshot_index=(sh_s, banded_s),
+    )
+    return bpairs, blab, pairs, t
+
+
 @query("ll104_component_bridges", oracle=_LL104_ORACLE)
 def ll104_component_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BRIDGE DETECTOR — ll100's documented production trigger
@@ -7016,118 +6882,11 @@ def ll104_component_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality), then the same join + count-distinct in SQL."""
     from ..operators import graph
 
-    base, delta, t = _ll100_fixture(spark, sf_dir)
-    b1 = base.join(
-        _gopher_signal_frame(base).where(_ll100_kept_pred()).select("doc_id"),
-        "doc_id",
-    ).withColumn("fp", T.text_fingerprint(F.col("text")))
-    b2 = (
-        b1.withColumn("kp", F.min("doc_id").over(W.partitionBy("fp")))
-        .where(F.col("doc_id") == F.col("kp"))
-        .select("doc_id", "text", "lang")
-        # consumers: band index + base pair graph (labels)
-        .localCheckpoint(eager=True)
-    )
-    sh_s, banded_s = dedup.build_minhash_index(b2, "doc_id", "text", k=3)
-    bpairs = dedup.minhash_lsh_pairs(
-        b2, "doc_id", "text", k=3, threshold=0.4, max_shingle_df=None
-    )
-    blab = graph.connected_components(bpairs, src="doc_a", dst="doc_b")
-    # day-N side: stages 1-2 on the delta, then the index probe
-    d1 = delta.join(
-        _gopher_signal_frame(delta).where(_ll100_kept_pred()).select("doc_id"),
-        "doc_id",
-    ).withColumn("fp", T.text_fingerprint(F.col("text")))
-    d2 = (
-        # base fps from the CHECKPOINTED b2, not b1 (guide §1.2, r14):
-        # b2 keeps one doc per fingerprint, so fingerprint(b2.text) IS
-        # b1.fp's distinct set — identical anti-join semantics with no
-        # re-run of the base gopher gate + fingerprint pass
-        d1.join(
-            b2.select(T.text_fingerprint(F.col("text")).alias("fp")),
-            "fp",
-            "left_anti",
-        )
-        .withColumn("kp", F.min("doc_id").over(W.partitionBy("fp")))
-        .where(F.col("doc_id") == F.col("kp"))
-        .select("doc_id", "text", "lang")
-    )
-    pairs = dedup.minhash_incremental_pairs(
-        None, d2, "doc_id", "text", k=3, threshold=0.4,
-        snapshot_index=(sh_s, banded_s),
-    )
+    _, blab, pairs, t = _ll104_pairs(spark, sf_dir)
     cross = pairs.where(F.col("doc_b") <= t).select(
         F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("base_id")
     )
     return graph.component_bridges(cross, blab)
-
-
-def ll104_components(spark: SparkSession, sf_dir: str) -> dict:
-    """Bench decomposition of ll104 (the ss18/ll100/ll101 device): the
-    headline row conflates the DAY-0 artifact build — base stages 1-2,
-    the band index, the base pair graph + component labels, which a
-    production pipeline persists once alongside ll100's state — with
-    the recurring DAY-N detector probe (delta stages 1-2, the index
-    probe, one label equi-join + grouped count-distinct). Times them
-    separately; the recurring cost is the second number. Not a
-    registered query (reports timings); bench.py records it next to
-    ll104's headline row."""
-    import time as _time
-
-    from ..operators import graph
-
-    base, delta, t = _ll100_fixture(spark, sf_dir)
-    t0 = _time.perf_counter()
-    b1 = base.join(
-        _gopher_signal_frame(base).where(_ll100_kept_pred()).select("doc_id"),
-        "doc_id",
-    ).withColumn("fp", T.text_fingerprint(F.col("text")))
-    b2 = (
-        b1.withColumn("kp", F.min("doc_id").over(W.partitionBy("fp")))
-        .where(F.col("doc_id") == F.col("kp"))
-        .select("doc_id", "text", "lang")
-        .localCheckpoint(eager=True)
-    )
-    sh_s, banded_s = dedup.build_minhash_index(b2, "doc_id", "text", k=3)
-    sh_s = sh_s.localCheckpoint(eager=True)
-    banded_s = banded_s.localCheckpoint(eager=True)
-    bpairs = dedup.minhash_lsh_pairs(
-        b2, "doc_id", "text", k=3, threshold=0.4, max_shingle_df=None
-    )
-    blab = graph.connected_components(
-        bpairs, src="doc_a", dst="doc_b"
-    ).localCheckpoint(eager=True)
-    # fps from the checkpointed b2 (guide §1.2, r14 — see ll104)
-    fps = b2.select(
-        T.text_fingerprint(F.col("text")).alias("fp")
-    ).localCheckpoint(eager=True)
-    day0_build_s = _time.perf_counter() - t0
-
-    t0 = _time.perf_counter()
-    d1 = delta.join(
-        _gopher_signal_frame(delta).where(_ll100_kept_pred()).select("doc_id"),
-        "doc_id",
-    ).withColumn("fp", T.text_fingerprint(F.col("text")))
-    d2 = (
-        d1.join(fps, "fp", "left_anti")
-        .withColumn("kp", F.min("doc_id").over(W.partitionBy("fp")))
-        .where(F.col("doc_id") == F.col("kp"))
-        .select("doc_id", "text", "lang")
-    )
-    pairs = dedup.minhash_incremental_pairs(
-        None, d2, "doc_id", "text", k=3, threshold=0.4,
-        snapshot_index=(sh_s, banded_s),
-    )
-    cross = pairs.where(F.col("doc_b") <= t).select(
-        F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("base_id")
-    )
-    n_checked = graph.component_bridges(cross, blab).count()
-    day_n_s = _time.perf_counter() - t0
-    return {
-        "day0_build_s": round(day0_build_s, 4),
-        "day_n_s": round(day_n_s, 4),
-        "delta_docs_with_base_neighbors": int(n_checked),
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -7220,45 +6979,9 @@ def ll109_bridge_recuration(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked in composition."""
     from ..operators import graph
 
-    base, delta, t = _ll100_fixture(spark, sf_dir)
-    # day-0 artifacts (ll104's): stages 1-2, band index, pair list,
-    # component labels
-    b1 = base.join(
-        _gopher_signal_frame(base).where(_ll100_kept_pred()).select("doc_id"),
-        "doc_id",
-    ).withColumn("fp", T.text_fingerprint(F.col("text")))
-    b2 = (
-        b1.withColumn("kp", F.min("doc_id").over(W.partitionBy("fp")))
-        .where(F.col("doc_id") == F.col("kp"))
-        .select("doc_id", "text", "lang")
-        .localCheckpoint(eager=True)
-    )
-    sh_s, banded_s = dedup.build_minhash_index(b2, "doc_id", "text", k=3)
-    bpairs = dedup.minhash_lsh_pairs(
-        b2, "doc_id", "text", k=3, threshold=0.4, max_shingle_df=None
-    )
-    blab = graph.connected_components(bpairs, src="doc_a", dst="doc_b")
-    # day-N: delta stages 1-2, one index probe shared by the cross and
-    # delta-delta splits
-    d1 = delta.join(
-        _gopher_signal_frame(delta).where(_ll100_kept_pred()).select("doc_id"),
-        "doc_id",
-    ).withColumn("fp", T.text_fingerprint(F.col("text")))
-    d2 = (
-        # same fps-from-b2 device as ll104 (guide §1.2, r14)
-        d1.join(
-            b2.select(T.text_fingerprint(F.col("text")).alias("fp")),
-            "fp",
-            "left_anti",
-        )
-        .withColumn("kp", F.min("doc_id").over(W.partitionBy("fp")))
-        .where(F.col("doc_id") == F.col("kp"))
-        .select("doc_id", "text", "lang")
-    )
-    pairs = dedup.minhash_incremental_pairs(
-        None, d2, "doc_id", "text", k=3, threshold=0.4,
-        snapshot_index=(sh_s, banded_s),
-    ).localCheckpoint(eager=True)
+    bpairs, blab, pairs, t = _ll104_pairs(spark, sf_dir)
+    # one index probe shared by the cross and delta-delta splits
+    pairs = pairs.localCheckpoint(eager=True)
     cross = pairs.where(F.col("doc_b") <= t).select(
         F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("base_id")
     )
@@ -7316,31 +7039,6 @@ def ll102_image_resize_pooled(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     payloads = multimodal.attach_image_payload(docs, "doc_id", "text")
     return multimodal.image_resize_pooled(payloads, out_w=2, out_h=2)
-
-
-def ll100_components(spark: SparkSession, sf_dir: str) -> dict:
-    """Bench decomposition of ll100's headline row (the ss18_components
-    device): the headline times day-0 state build + day-N probe
-    TOGETHER, which hides the claim that matters at 100 TB — the
-    recurring cost is the day-N side alone. Times the two phases
-    separately (one run each, warm session): ``day0_build_s`` = stages
-    1-4 over the base + the five parquet state writes (paid once per
-    snapshot), ``day_n_s`` = the delta pass against the prebuilt state
-    (paid per batch). Returns {day0_build_s, day_n_s, delta_rows}."""
-    import time as _time
-
-    base, _delta, _t = _ll100_fixture(spark, sf_dir)
-    t0 = _time.perf_counter()
-    root = _ll100_build_state(spark, base, sf_dir)
-    day0 = _time.perf_counter() - t0
-    t0 = _time.perf_counter()
-    n = _ll100_day_n(spark, sf_dir, root=root)["out"].count()
-    day_n = _time.perf_counter() - t0
-    return {
-        "day0_build_s": round(day0, 4),
-        "day_n_s": round(day_n, 4),
-        "delta_rows": int(n),
-    }
 
 
 # ---------------------------------------------------------------------------

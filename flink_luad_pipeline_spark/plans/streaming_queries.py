@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..operators import state as persisted
 from ..operators.io import write_frames
+from ..phases import phase
 from ..streaming import ops
 from .registry import query
 
@@ -534,50 +535,11 @@ def ss18_streaming_neardup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") < 250)
         .select("doc_id", "text")
     )
-    sh, banded = dedup.build_minhash_index(snap, "doc_id", "text", k=3)
+    with phase("index_build_s"):
+        sh, banded = dedup.build_minhash_index(snap, "doc_id", "text", k=3)
     stream = ops.read_documents_stream(spark, sf_dir)
     pairs = ops.neardup_probe_stream(stream, sh, banded, threshold=0.5)
     return _drain(pairs, "ss18_neardup", "append")
-
-
-def ss18_components(spark: SparkSession, sf_dir: str) -> dict:
-    """Bench decomposition of ss18 (VERDICT r6 item 5): the registered
-    query's end-to-end time conflates the one-time snapshot INDEX
-    BUILD with the streaming DRAIN, which made the streaming cost
-    illegible in the headline. This helper times them separately —
-    index build materialized the way a production snapshot write would
-    be, then the AvailableNow drain probing the prebuilt index — and
-    derives the micro-batch throughput (documents ingested per second
-    of drain), the number a streaming user actually sizes a feed by.
-    Not a registered query (no oracle — it reports timings); bench.py
-    records it in bench_full.json next to the ss18 headline row."""
-    import time as _time
-
-    from ..catalog import load
-    from ..operators import dedup
-
-    snap = (
-        load(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 250)
-        .select("doc_id", "text")
-    )
-    t0 = _time.perf_counter()
-    sh, banded = dedup.build_minhash_index(snap, "doc_id", "text", k=3)
-    sh = sh.localCheckpoint(eager=True)
-    banded = banded.localCheckpoint(eager=True)
-    index_build_s = _time.perf_counter() - t0
-
-    n_docs = load(spark, sf_dir, "documents").count()
-    t0 = _time.perf_counter()
-    stream = ops.read_documents_stream(spark, sf_dir)
-    pairs = ops.neardup_probe_stream(stream, sh, banded, threshold=0.5)
-    _drain(pairs, "ss18_components", "append").count()
-    drain_s = _time.perf_counter() - t0
-    return {
-        "index_build_s": round(index_build_s, 4),
-        "drain_s": round(drain_s, 4),
-        "docs_per_s": round(n_docs / drain_s, 1),
-    }
 
 
 def _ss19_oracle() -> str:
@@ -778,10 +740,10 @@ def _ss21_drain(
     state/feed/out dirs so a resume pair shares them deterministically
     across two driver "lifetimes". Returns {"out": curated DataFrame,
     "state": the live fold state, "state_root", "out_path", "fold":
-    the foreachBatch fn (for direct replay tests), "manifest", "feed",
-    "day0_build_s" (0.0 on resume), "drain_fold_s"}."""
+    the foreachBatch fn (for direct replay tests), "manifest",
+    "feed"}. Records the phases ``day0_build_s`` (not on resume) and
+    ``drain_fold_s`` (``flink_luad_pipeline_spark.phases``)."""
     import shutil
-    import time
 
     from .llm_queries import (
         _ll100_build_state,
@@ -798,7 +760,6 @@ def _ss21_drain(
     feed = feed_path or sink_path(f"{name}_feed_{n}", sf_dir)
     out_path = sink_path(f"{name}_out_{n}", sf_dir)
     manifest = f"{state_root}_manifest.json"
-    day0_build_s = 0.0
     if resume:
         # restart-with-preserved-checkpoint: committed batches are
         # checkpoint-skipped, so their fold roots MUST come from the
@@ -820,9 +781,8 @@ def _ss21_drain(
             manifest, out_path, f"{feed}_chk",
             f"{state_root}_d*", f"{state_root}_c*",
         )
-        t0 = time.perf_counter()
-        _ll100_build_state(spark, base, sf_dir, root=state_root)
-        day0_build_s = time.perf_counter() - t0
+        with phase("day0_build_s"):
+            _ll100_build_state(spark, base, sf_dir, root=state_root)
         state = {
             "roots": [state_root],
             "max_id": t,
@@ -898,9 +858,8 @@ def _ss21_drain(
             gc=superseded,
         )
 
-    t0 = time.perf_counter()
-    ops.fold_drain(stream, fold, f"{feed}_chk")
-    drain_fold_s = time.perf_counter() - t0
+    with phase("drain_fold_s"):
+        ops.fold_drain(stream, fold, f"{feed}_chk")
     return {
         "out": spark.read.parquet(out_path).drop("batch"),
         "state": state,
@@ -909,8 +868,6 @@ def _ss21_drain(
         "manifest": manifest,
         "fold": fold,
         "feed": feed,
-        "day0_build_s": day0_build_s,
-        "drain_fold_s": drain_fold_s,
     }
 
 
@@ -1120,7 +1077,8 @@ def _ss23_drain(
     import shutil
 
     from ..catalog import load
-    from ..operators import clustering, similarity
+    from ..operators import similarity
+    from .llm_queries import _trained_index
     from .relational_queries import sink_path
 
     emb = load(spark, sf_dir, "embeddings")
@@ -1156,22 +1114,9 @@ def _ss23_drain(
         # codes_b* / _c* dirs under a colliding root would otherwise
         # be invisible-but-present
         persisted.reset(manifest, root, f"{root}_c*", f"{feed}_chk")
-        cents = clustering.kmeans_fit(base, k=8, iters=3).select(
-            F.col("cid").alias("centroid_id"), F.col("cv").alias("centv")
-        )
-        frames = similarity.residual_ann_index_frames(
-            base, centroids=cents, train_iters=2, train_mod=4
-        )
-        write_frames(frames, root)  # §2.6: overlapped independent writes
-        # read-back with the writer frames' schemas — no footer-
-        # inference jobs (guide §1.2; the resume path keeps inference:
-        # there the manifest's artifacts are the only schema source)
-        index = {
-            name_: spark.read.schema(df_.schema).parquet(
-                f"{root}/{name_}.parquet"
-            )
-            for name_, df_ in frames.items()
-        }
+        # read back with the writer schemas (the resume path infers
+        # them: there the manifest's artifacts are the only source)
+        index = _trained_index(spark, base, root)
         state = {
             "index": index,
             "code_paths": [f"{root}/codes.parquet"],
@@ -1543,19 +1488,3 @@ def ss25_streaming_snapshot_publish(
         F.col("sim").cast("double").alias("sim"),
         "rank",
     )
-
-
-def ss21_components(spark: SparkSession, sf_dir: str) -> dict:
-    """Bench decomposition of ss21: the headline row conflates the
-    one-time DAY-0 state build with the recurring STREAM drain (day-N
-    stages + the state fold inside foreachBatch). Reports the two
-    phases ``_ss21_drain`` times and the per-delta-doc ingest
-    throughput. Not a registered query; bench.py records it next to
-    ss21's headline row."""
-    r = _ss21_drain(spark, sf_dir)
-    n_delta = spark.read.parquet(r["feed"]).count()
-    return {
-        "day0_build_s": round(r["day0_build_s"], 4),
-        "drain_fold_s": round(r["drain_fold_s"], 4),
-        "delta_docs_per_s": round(n_delta / r["drain_fold_s"], 1),
-    }

@@ -426,6 +426,7 @@ def test_graph_loops_warn_on_round_exhaustion(spark):
 
     from flink_luad_pipeline_spark.operators.graph import (
         connected_components,
+        connected_components_star,
         core_numbers,
         weighted_shortest_paths,
     )
@@ -471,14 +472,26 @@ def test_graph_loops_warn_on_round_exhaustion(spark):
         for w in caught
     )
 
+    # the same chain: one large-star/small-star round leaves it split
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        connected_components_star(chain, max_rounds=1).collect()
+    assert any(
+        issubclass(w.category, RuntimeWarning)
+        and "connected_components_star" in str(w.message)
+        for w in caught
+    )
+
     # and NO warning when the loop converges
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         core_numbers(path, k_max=2, max_rounds=10).collect()
         weighted_shortest_paths(wchain, srcs, max_iterations=20).collect()
         labels = connected_components(chain).collect()
+        star = connected_components_star(chain).collect()
     assert not any(issubclass(w.category, RuntimeWarning) for w in caught)
     assert {r.component for r in labels} == {0}
+    assert {r.component for r in star} == {0}
 
 
 def test_bpe_merge_table_matches_python(spark):

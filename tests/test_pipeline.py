@@ -193,12 +193,13 @@ def _write_input(root, files, *, predictive=(), tumorous=(), lines=None):
 
 
 def _named_cells(bundle):
+    """The matrix as sorted (sample, probe, value) rows, repeats kept."""
     samples = {r.id: r.name for r in bundle.sample_dict.collect()}
     probes = {r.id: r.name for r in bundle.probe_dict.collect()}
-    return {
+    return sorted(
         (samples[r.sample_id], probes[r.probe_id], r.value)
         for r in bundle.matrix.collect()
-    }
+    )
 
 
 @pytest.mark.parametrize(
@@ -219,14 +220,29 @@ def _named_cells(bundle):
             {"s1": "s1 a.tsv", "s2": "s2%b.tsv", "s3": "s3+c.tsv", "s4": "s4%2B.tsv"},
             None,
         ),
+        # Hadoop glob characters name one file each: ``y{a}.tsv`` is not
+        # a pattern that matches nothing, and ``w*.tsv`` does not also
+        # read its sibling ``wX.tsv``, which another sample owns.
+        (
+            {
+                "s1": "x[1].tsv",
+                "s2": "y{a}.tsv",
+                "s3": "z?.tsv",
+                "s4": "w*.tsv",
+                "s5": "wX.tsv",
+                "s6": "plain.tsv",
+            },
+            None,
+        ),
     ],
-    ids=["one_field_lines", "uri_escaped_names"],
+    ids=["one_field_lines", "uri_escaped_names", "glob_chars"],
 )
 def test_build_matrix_keeps_every_row(spark, tmp_path, files, lines):
+    """Every file's rows reach its sample, each exactly once."""
     cfg = _write_input(tmp_path, files, lines=lines)
-    assert _named_cells(pipeline.build_matrix(spark, cfg)) == {
+    assert _named_cells(pipeline.build_matrix(spark, cfg)) == sorted(
         (s, p, v) for s in files for p, v in (("p1", 1.5), ("p2", 2.5))
-    }
+    )
 
 
 @pytest.mark.parametrize(

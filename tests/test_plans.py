@@ -750,3 +750,46 @@ def test_sweep_order_without_records_is_registration_order():
         *(k for k in plans.QUERIES if k in plans.ORACLES),
         *(k for k in plans.QUERIES if k not in plans.ORACLES),
     ]
+
+
+# --- bench phase splits (pure Python, no Spark session) ----------------------
+
+
+def test_bench_phase_table_names_the_recorded_component_keys():
+    """Each composite arc's row in bench.COMPONENTS names exactly the
+    inner keys of its ``*_components`` record in bench_full.json."""
+    import bench
+
+    full = json.loads((ROOT / "bench_full.json").read_text())
+    recorded = {k: set(v) for k, v in full.items() if k.endswith("_components")}
+    table = {
+        # a tuple of phases is reported under its first name
+        key: {p if isinstance(p, str) else p[0] for p in parts}
+        | {k for k in (rest, count) if k}
+        for key, parts, rest, count in bench.COMPONENTS.values()
+    }
+    assert table == recorded
+    assert set(bench.COMPONENTS) <= set(bench.HEADLINE)
+
+
+def test_plans_have_one_timing_mechanism():
+    """Phases are timed inside the registered query
+    (``flink_luad_pipeline_spark.phases``): no plan module defines a
+    forked ``*_components`` decomposition or reads perf_counter."""
+    import ast
+
+    found = []
+    for path in sorted((ROOT / "flink_luad_pipeline_spark" / "plans").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            # a call, an attribute read or an import of perf_counter
+            if "perf_counter" in {getattr(node, a, None) for a in ("attr", "id", "name")}:
+                found.append(f"{path.name}:{node.lineno} perf_counter")
+            # a registered query may be named after components
+            # (i1_c3_connected_components); a bench twin may not
+            elif (
+                isinstance(node, ast.FunctionDef)
+                and node.name.endswith("_components")
+                and node.name not in QUERIES
+            ):
+                found.append(f"{path.name}:{node.lineno} def {node.name}")
+    assert found == []

@@ -581,13 +581,18 @@ def test_ss21_resume_does_not_rewrite_feed(spark):
     guard, so replayed rows would re-enter the day-N pass)."""
     import os
 
+    from flink_luad_pipeline_spark import phases
     from flink_luad_pipeline_spark.plans.streaming_queries import _ss21_drain
 
     sf = "/root/testdata/sf0.001"
+    phases.take()
     r1 = _ss21_drain(spark, sf, name="ss21nr")
+    # the drain times its own phases; a resume builds no day-0 state
+    assert set(phases.take()) == {"day0_build_s", "drain_fold_s"}
     files1 = sorted(os.listdir(r1["feed"]))
     folded1 = set(r1["state"]["folded"])
     assert folded1, "day 1 folded nothing"
     r2 = _ss21_drain(spark, sf, name="ss21nr", resume=True)
+    assert set(phases.take()) == {"drain_fold_s"}
     assert sorted(os.listdir(r2["feed"])) == files1
     assert set(r2["state"]["folded"]) == folded1  # nothing replayed
