@@ -1,13 +1,17 @@
 """Text-analysis column functions for LLM training-data pipelines.
 
-All pure ``pyspark.sql.functions`` compositions — JVM-side, inside
-whole-stage codegen, no Python in the hot path — except the two
-Unicode functions at the bottom (nfc_normalize / strip_accents):
-Spark has no built-in Unicode normalizer, so those are documented
-Arrow-vectorized pandas UDF boundaries. Each function has an exact
-ANSI SQL twin (see plans/llm_queries.py oracles), which is what makes
-these oracle-checkable. No analogue in the reference (its scalar surface is
-§2.2 P6); these extend the engine per the north-star brief.
+All pure ``pyspark.sql.functions`` compositions — JVM-side, no Python
+in the hot path — except the two Unicode functions at the bottom
+(nfc_normalize / strip_accents): Spark has no built-in Unicode
+normalizer, so those are documented Arrow-vectorized pandas UDF
+boundaries. The higher-order functions used here (``filter``,
+``transform``, ``aggregate``) run interpreted, and subexpression
+elimination does not look inside them, so a lambda body that reads a
+computed array binds it once first (``lambdas.bind``). Each function
+has an exact ANSI SQL twin (see plans/llm_queries.py oracles), which
+is what makes these oracle-checkable. No analogue in the reference
+(its scalar surface is §2.2 P6); these extend the engine per the
+north-star brief.
 """
 
 from __future__ import annotations
@@ -15,6 +19,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .lambdas import bind
 
 #: tiny built-in stopword lists for the language-ID heuristic
 STOPWORDS = {
@@ -40,15 +46,21 @@ def tokenize(col: Column) -> Column:
 
 def word_ngrams(tokens: Column, k: int = 3) -> Column:
     """Positional word k-grams WITH repeats (the repetition-analysis
-    unit). Sequence+transform stays in codegen; docs shorter than k
-    yield an empty array."""
-    return F.when(
-        F.size(tokens) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(tokens) - F.lit(k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(tokens, i, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    unit); docs shorter than k yield an empty array. ``tokens`` is
+    bound once: the per-position ``transform`` body runs interpreted
+    and would otherwise re-evaluate the whole token expression (e.g.
+    ``tokenize(text)``) at every position, O(n²) per document."""
+
+    def grams(toks: Column) -> Column:
+        return F.when(
+            F.size(toks) >= k,
+            F.transform(
+                F.sequence(F.lit(1), F.size(toks) - F.lit(k - 1)),
+                lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    return bind(tokens, grams)
 
 
 def word_shingles(tokens: Column, k: int = 3) -> Column:

@@ -19,7 +19,7 @@ count, never the corpus — the corpus is scanned exactly once to build
 - argmax: a 1-row driver boundary (count desc, then lexicographic
   (left, right) tie-break — same k-row contract as the k-means loop);
 - merge application: a narrow left-to-right fold over each word's
-  symbol string (``F.aggregate``, codegen) — greedy non-overlapping,
+  symbol string (``F.aggregate``, JVM-side) — greedy non-overlapping,
   exactly DuckDB's ``list_reduce`` seeded with the first element.
 
 Symbols are '|'-joined inside a word string; the tokenizer's [a-z0-9]
@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.lambdas import bind
 from ..functions.text import tokenize
 
 
@@ -63,6 +64,25 @@ def _merge_fold(arr: Column, left: str, right: str) -> Column:
     )
 
 
+def _adjacent_pairs(arr: Column) -> Column:
+    """(l, r) structs of a symbol array's adjacent pairs; null (explode
+    emits nothing) for a single-symbol word. The guard must precede the
+    sequence(1, size-1) transform: on a single symbol the descending
+    sequence [1, 0] would hit element_at(arr, 0), an ANSI error. The
+    caller binds ``arr`` (``lambdas.bind``), so each word is split once,
+    not twice per position."""
+    return F.when(
+        F.size(arr) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(arr) - F.lit(1)),
+            lambda i: F.struct(
+                F.element_at(arr, i).alias("l"),
+                F.element_at(arr, i + F.lit(1)).alias("r"),
+            ),
+        ),
+    )
+
+
 def bpe_merge_table(
     docs: DataFrame,
     text_col: str = "text",
@@ -86,25 +106,12 @@ def bpe_merge_table(
         F.array_join(chars, "|").alias("s"), "cnt"
     ).localCheckpoint()
 
+    symbols = F.split(F.col("s"), "\\|")
     rows = []
     for idx in range(1, n_merges + 1):
-        arr = F.split(F.col("s"), "\\|")
-        # the >= 2 guard must precede the sequence(1, size-1) transform:
-        # on a single-symbol word the descending sequence [1, 0] would
-        # hit element_at(arr, 0), an ANSI error, before any later filter
         pairs = (
-            state.where(F.size(arr) >= 2)
-            .select(
-                "cnt",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(arr) - F.lit(1)),
-                        lambda i: F.struct(
-                            F.element_at(arr, i).alias("l"),
-                            F.element_at(arr, i + F.lit(1)).alias("r"),
-                        ),
-                    )
-                ).alias("p"),
+            state.select(
+                "cnt", F.explode(bind(symbols, _adjacent_pairs)).alias("p")
             )
             .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
             .agg(F.sum("cnt").alias("total"))
@@ -119,7 +126,7 @@ def bpe_merge_table(
         b = best[0]
         rows.append((idx, b["l"], b["r"], b["l"] + b["r"], int(b["total"])))
         state = state.select(
-            _merge_fold(F.split(F.col("s"), "\\|"), b["l"], b["r"]).alias("s"),
+            _merge_fold(symbols, b["l"], b["r"]).alias("s"),
             "cnt",
         ).localCheckpoint()  # truncate the nested-fold lineage per round
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.lambdas import bind
 from ..functions.text import (
     text_fingerprint,
     tokenize,
@@ -341,36 +342,60 @@ _HASHERS = {"portable": portable_hash40, "fast": fast_hash40}
 
 
 def _minhash_signature(base_hashes: Column, num_hashes: int) -> Column:
-    """k minhashes: min over shingles of the i-th affine probe
-    (a_i*h + b_i) mod P over the per-shingle base hash.
+    """k minhashes: element i is the min over shingles of the affine
+    probe ((40503*i+12345)*h + 94261*i+57) % P of each base hash h,
+    the unrolled per-i formula every DuckDB oracle mirrors
+    (plans/llm_queries.py). An empty array yields P in every element,
+    a null array a null signature; a null hash is skipped.
 
-    Shaped as ONE aggregate pass over the base-hash array — the
-    running element-wise min of the k probe values per shingle
-    (zip_with/least) — so ``base_hashes`` is referenced exactly once
-    in the expression tree. That single reference is what lets callers
-    inline the md5 transform directly (no separate materialization of
-    the base array): even after Catalyst collapses the projections,
-    the per-shingle base hash is evaluated once, because only the
-    aggregate's lambda variable (a cheap attribute) fans out k ways.
-    The probe coefficients are Python-side constants, so the arithmetic
-    ((40503*i+12345)*h + 94261*i+57) % P is identical to the unrolled
-    per-i formulation mirrored by every DuckDB oracle
-    (plans/llm_queries.py).
+    ``base_hashes`` (typically the md5 transform over the shingle
+    array) is bound once as a lambda variable, and the signature is one
+    ``aggregate`` per coefficient over it, each folding a running bigint
+    min, so no shingle allocates an array. The higher-order functions
+    run interpreted and subexpression elimination does not look inside
+    them, so without the binding every one of the k folds would
+    re-evaluate the hash array's definition. The coefficient index is
+    the lambda variable of one ``transform`` over 0..k-1, not k unrolled
+    copies of the fold: one expression to interpret instead of k.
     """
-    init = F.array(*[F.lit(MINHASH_P).cast("bigint")] * num_hashes)
-    return F.aggregate(
-        base_hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    ((40503 * i + 12345) * h + (94261 * i + 57))
-                    % F.lit(MINHASH_P)
-                    for i in range(num_hashes)
-                ]
-            ),
-            lambda a, b: F.least(a, b),
+
+    def sig(hs: Column) -> Column:
+        def fold(i: Column) -> Column:
+            i = i.cast("bigint")
+            return F.aggregate(
+                hs,
+                F.lit(MINHASH_P).cast("bigint"),
+                lambda acc, h: F.least(
+                    acc, ((40503 * i + 12345) * h + (94261 * i + 57)) % F.lit(MINHASH_P)
+                ),
+            )
+
+        return F.when(
+            hs.isNotNull(),
+            F.transform(F.sequence(F.lit(0), F.lit(num_hashes - 1)), fold),
+        )
+
+    return bind(base_hashes, sig)
+
+
+def _band_keys(sig: Column, num_hashes: int, bands: int, hash40) -> Column:
+    """The LSH band keys of a signature: an array of ``bands``
+    (band, bhash) structs, bhash = hash40 of the band's comma-joined
+    rows, for the caller to explode."""
+    rows_per_band = num_hashes // bands
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.struct(
+            b.alias("band"),
+            hash40(
+                F.concat_ws(
+                    ",",
+                    F.transform(
+                        F.slice(sig, b * rows_per_band + 1, rows_per_band),
+                        lambda h: h.cast("string"),
+                    ),
+                )
+            ).alias("bhash"),
         ),
     )
 
@@ -494,7 +519,6 @@ def _minhash_index(
     recall characteristics, ~an-order-of-magnitude cheaper per
     shingle, not oracle-reproducible)."""
     hash40 = _HASHERS[hasher]
-    rows_per_band = num_hashes // bands
     sh0 = _shingled_spread(df, id_col, text_col, k)
     if max_shingle_df is not None:
         # The df-stats pass EXPLODES the shingle arrays (twice: the
@@ -509,22 +533,21 @@ def _minhash_index(
         sh0 = sh0.localCheckpoint(eager=True)
         sh0 = _df_cutoff(sh0, df, max_shingle_df)
     # ONE materialization boundary for the whole index. The signature
-    # is a single-reference expression over the shingle array (see
-    # _minhash_signature): the md5 base hash lives inside the
-    # aggregate's input, so even fully collapsed it is evaluated once
-    # per shingle — no separate base-array checkpoint needed (r4
-    # VERDICT #2: the old two-boundary shape wrote the corpus's
-    # biggest column to block storage twice per invocation). The sh
-    # boundary itself IS load-bearing: without it Catalyst re-inlines
-    # the whole signature expression into every band of the explode
-    # below AND into the verification join — observed 60x slowdown at
-    # sf0.1. localCheckpoint rather than cache() for the same reason
-    # as ll42/ll53/ll55 (SCALE.md round-4 notes): a plan-keyed cache()
-    # entry silently survives across repeated invocations with an
-    # identical plan, so a warmed bench iteration skips the whole
-    # index build and the timing measures a warm-cache path; eager
-    # localCheckpoint materializes per invocation (honest end-to-end
-    # cost) and releases storage on dereference.
+    # binds the md5 base-hash array once (see _minhash_signature), so
+    # even fully collapsed each shingle is hashed once — no separate
+    # base-array checkpoint needed (r4 VERDICT #2: the old two-boundary
+    # shape wrote the corpus's biggest column to block storage twice
+    # per invocation). The sh boundary itself IS load-bearing: without
+    # it Catalyst re-inlines the whole signature expression into every
+    # band of the explode below AND into the verification join —
+    # observed 60x slowdown at sf0.1. localCheckpoint rather than
+    # cache() for the same reason as ll42/ll53/ll55 (SCALE.md round-4
+    # notes): a plan-keyed cache() entry silently survives across
+    # repeated invocations with an identical plan, so a warmed bench
+    # iteration skips the whole index build and the timing measures a
+    # warm-cache path; eager localCheckpoint materializes per
+    # invocation (honest end-to-end cost) and releases storage on
+    # dereference.
     sh = sh0.select(
         "doc_id",
         "shingles",
@@ -534,27 +557,7 @@ def _minhash_index(
     ).localCheckpoint(eager=True).where(F.size("shingles") > 0)
     banded = sh.select(
         "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    hash40(
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice(
-                                    F.col("sig"),
-                                    b * rows_per_band + 1,
-                                    rows_per_band,
-                                ),
-                                lambda h: h.cast("string"),
-                            ),
-                        )
-                    ).alias("bhash"),
-                ),
-            )
-        ).alias("bk"),
+        F.explode(_band_keys(F.col("sig"), num_hashes, bands, hash40)).alias("bk"),
     ).select("doc_id", "bk.band", "bk.bhash")
     return sh, banded
 
@@ -806,8 +809,8 @@ def simhash(token_hashes: Column, bits: int = 40) -> Column:
     materialize it ONCE so the md5 isn't re-evaluated per bit), default
     width 40 bits to match that hash. Portable: DuckDB reproduces the
     identical signature, so simhash pairs are oracle-checked. Built as
-    Σ_b (vote_b > 0) * 2^b with shiftright/bitwise-and — all codegen,
-    no UDF.
+    Σ_b (vote_b > 0) * 2^b with shiftright/bitwise-and — native
+    expressions (the per-bit ``aggregate`` runs interpreted), no UDF.
     """
     def vote_fn(b: int):
         # closure factory: a default-arg lambda would surface as a
@@ -996,8 +999,9 @@ def ngram_span_coverage(
     down-weighting.
 
     Shape (all shuffle-bounded, no crossJoin): positional n-grams via
-    sequence+transform (narrow, codegen) -> groupBy(gram) count with
-    map-side partial agg -> semi-join flagged grams back (inverted-
+    sequence+transform (narrow; ``word_ngrams`` binds the token array
+    once, since the transform runs interpreted) -> groupBy(gram) count
+    with map-side partial agg -> semi-join flagged grams back (inverted-
     index equi-join, the ll20 shape) -> covered token positions via
     sequence-explode + distinct (one doc_id-keyed shuffle, cardinality
     <= corpus token count) -> per-doc count. Returns
@@ -1071,8 +1075,10 @@ def remove_repeated_segments(
     copies lose all their segments (both instances), boilerplate
     paragraphs vanish while their host docs survive.
 
-    Scale shape: segmentation is narrow (sequence + slice in codegen);
-    the segment count is one partial-agged shuffle on segment text
+    Scale shape: segmentation is narrow (sequence + slice over the
+    projected token column ``t``, which the interpreted transform reads
+    as an attribute, so it is never re-tokenized per segment); the
+    segment count is one partial-agged shuffle on segment text
     (keys = distinct segments, not the corpus); the drop decision joins
     back on the segment key; reassembly is one doc-keyed grouped
     ``array_sort(collect_list)`` — the a7/o1 holistic-agg shape. Output

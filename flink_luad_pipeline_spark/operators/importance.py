@@ -20,14 +20,15 @@ smoothed-probability logs whose per-bucket ratios are summed per doc
 and rounded.
 
 Scale design (100 TB): the corpus is scanned ONCE — feature extraction
-(tokenize + slice-bigrams + hash, all codegen) collapses directly into
-a per-(doc, bucket) count table, which is materialized and feeds both
-distributions AND the per-doc weights (both raw/target bucket counts
-are sums over it, <= buckets keys each, map-side partial agg). Totals
-attach via a window over the <= buckets-row count table, never a
-driver collect; the ratio table broadcasts back into the doc-keyed
-sum. One doc-keyed shuffle over hashed features total, independent of
-corpus width.
+(tokenize + slice-bigrams + hash; the higher-order functions run
+interpreted, so the token array is bound once per document, see
+``functions.lambdas``) collapses directly into a per-(doc, bucket)
+count table, which is materialized and feeds both distributions AND
+the per-doc weights (both raw/target bucket counts are sums over it,
+<= buckets keys each, map-side partial agg). Totals attach via a
+window over the <= buckets-row count table, never a driver collect;
+the ratio table broadcasts back into the doc-keyed sum. One doc-keyed
+shuffle over hashed features total, independent of corpus width.
 
 Reference parity note: the reference has no curation surface; this
 extends the LLM-pipeline family (ll35 mixture, ll21/ll43 quality
@@ -39,22 +40,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokenize
+from ..functions.text import tokenize, word_ngrams
 from .dedup import _spread, portable_hash40
 
 
 def _bigram_buckets(text: Column, buckets: int) -> Column:
     """Hashed word-bigram feature ids: array of portable_hash40(w1 ||
-    ' ' || w2) % buckets, empty for docs with < 2 tokens."""
-    toks = tokenize(text)
-    grams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.array_join(F.slice(toks, i, 2), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.transform(grams, lambda g: portable_hash40(g) % buckets)
+    ' ' || w2) % buckets, empty for docs with < 2 tokens. The bigrams
+    are ``word_ngrams(tokens, 2)``, which tokenizes the document once."""
+    return F.transform(
+        word_ngrams(tokenize(text), 2), lambda g: portable_hash40(g) % buckets
+    )
 
 
 def dsir_doc_features(
@@ -72,7 +68,7 @@ def dsir_doc_features(
     AND lets the snapshot docs be re-scored under that updated model
     WITHOUT re-tokenizing a byte of snapshot text — the property the
     incremental curation pipeline (ll100) rests on. One corpus scan
-    (tokenize + slice-bigrams + hash, all codegen) collapsed by a
+    (tokenize once + slice-bigrams + hash) collapsed by a
     map-side-combined count."""
     # _spread: tokenize+bigram+hash is the CPU pass; a single-row-group
     # scan would serialize it onto 1-2 cores (no-op at cluster scale)

@@ -9,7 +9,8 @@ Two tiers behind the same output contract (query_id, cand_id, sim, rank):
   query's bucket — the scale path. Deterministic hyperplanes derived
   from xxhash64 so results are reproducible without storing planes.
 
-All vector math is functions/vectors.py (zip_with/aggregate, codegen).
+All vector math is functions/vectors.py (zip_with/aggregate; JVM-side,
+interpreted, no UDF).
 """
 
 from __future__ import annotations
@@ -234,7 +235,7 @@ def _bucket_from_planes(vec, planes: list[list[float]]):
     """Sign-pattern bucket id from explicit hyperplanes:
     bucket = Σ_p [dot(plane_p, v) > 0] * 2^p. Planes are literal ±1
     arrays (hyperplane_signs), so the projection is one zip_with +
-    aggregate per plane, all codegen. The dot product is rounded to 6
+    aggregate per plane, JVM-side, no UDF. The dot product is rounded to 6
     digits before the sign test so engine fp-order can't flip a bucket
     bit."""
     bucket = F.lit(0)

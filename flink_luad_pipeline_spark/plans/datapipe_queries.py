@@ -6,8 +6,9 @@ These are the remaining ops a 100 TB LLM-corpus pipeline runs between
 "raw crawl" and "tokenized shards". All four are pure narrow/grouped
 transforms over ``documents`` — embarrassingly parallel except the
 vocabulary count (one shuffle on the n-gram key, partial-agg map-side).
-Everything stays in whole-stage codegen: higher-order array functions
-(transform/filter/slice/posexplode), no Python UDFs.
+Everything stays JVM-side: higher-order array functions
+(transform/filter/slice/posexplode, which run interpreted), no Python
+UDFs.
 
 Tokenization is shared with functions/text.py (lowercased alphanumeric
 runs), and every query has an exact DuckDB twin.
@@ -20,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load
-from ..functions.text import tokenize
+from ..functions.text import tokenize, word_ngrams, word_shingles
 from .registry import query
 
 # Tokenizer twins (see functions/text.py::tokenize)
@@ -194,8 +195,8 @@ def ll16_ngram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-100 word bigrams with counts — vocabulary/BPE-merge-table
     building over the whole corpus.
 
-    transform(sequence(...)) materializes each document's bigram list
-    in codegen (guarded for 1-token docs: Spark's sequence(1,0) counts
+    word_ngrams(t, 2) materializes each document's bigram list
+    JVM-side (empty for 1-token docs: Spark's sequence(1,0) counts
     DOWN, so it must not run unguarded), explode fans out, and the
     count is one shuffle with map-side partial aggregation — the gram
     key space, not the corpus, crosses the wire. Top-k via
@@ -208,19 +209,7 @@ def ll16_ngram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(tokenize(F.col("text")).alias("t"))
-    grams = toks.select(
-        F.explode(
-            F.when(
-                F.size("t") >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), F.size("t") - 1),
-                    lambda i: F.concat_ws(
-                        " ", F.element_at("t", i), F.element_at("t", i + 1)
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("gram")
-    )
+    grams = toks.select(F.explode(word_ngrams(F.col("t"), 2)).alias("gram"))
     counted = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("n"))
     top = counted.orderBy(F.col("n").desc(), "gram").limit(100)
     # rank window over exactly 100 rows. partitionBy(spark_partition_id)
@@ -379,19 +368,7 @@ def ll20_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("t"))
     grams = toks.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.when(
-                    F.size("t") >= _DECON_N,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("t") - (_DECON_N - 1)),
-                        lambda i: F.array_join(
-                            F.slice("t", i, _DECON_N), " "
-                        ),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            )
-        ).alias("g"),
+        F.explode(word_shingles(F.col("t"), _DECON_N)).alias("g"),
     )
     train = grams.where(F.col("doc_id") < _EVAL_CUT)
     eval_g = (
@@ -436,17 +413,7 @@ def ll58_contamination_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     toks = docs.select("doc_id", tokenize(F.col("text")).alias("t"))
     grams = toks.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.when(
-                    F.size("t") >= _DECON_N,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("t") - (_DECON_N - 1)),
-                        lambda i: F.array_join(F.slice("t", i, _DECON_N), " "),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            )
-        ).alias("g"),
+        F.explode(word_shingles(F.col("t"), _DECON_N)).alias("g"),
     )
     train = grams.where(F.col("doc_id") < _EVAL_CUT).select(
         F.col("doc_id").alias("train_id"), "g"

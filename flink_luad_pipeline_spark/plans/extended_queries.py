@@ -769,7 +769,7 @@ def b20_array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side vector math the similarity family builds on, isolated:
     aggregate (fold) for the squared L2 norm, filter+size for the
     positive-component count, zip_with against the reversed vector for
-    a dot product. All three run inside whole-stage codegen over the
+    a dot product. All three run JVM-side (interpreted) over the
     array — no explode (which would fan 64 rows per vector through a
     shuffle at 100 TB), no Python.
 

@@ -4644,17 +4644,7 @@ def ll82_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", T.tokenize(F.col("text")).alias("t"))
     grams = toks.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.when(
-                    F.size("t") >= 5,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("t") - 4),
-                        lambda i: F.array_join(F.slice("t", i, 5), " "),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            )
-        ).alias("g"),
+        F.explode(T.word_shingles(F.col("t"), 5)).alias("g"),
     )
     firsts = grams.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     return (

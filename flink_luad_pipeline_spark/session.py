@@ -57,4 +57,25 @@ def get_spark(app_name: str = "flink_luad_pipeline_spark") -> SparkSession:
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _start_callback_server(spark)
     return spark
+
+
+def _start_callback_server(spark: SparkSession) -> None:
+    """Start py4j's callback server, which ``foreachBatch`` and Python
+    streaming listeners call into, while the process has few file
+    descriptors open. PySpark otherwise starts it at the first
+    ``foreachBatch``; its accept loop waits with ``select.select``,
+    which fails on a descriptor >= 1024, and that error is only logged:
+    the server thread ends and the stream waits for its callback
+    forever. A server that was shut down or whose loop ended is
+    replaced."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    gateway = spark.sparkContext._gateway
+    # the gateway forwards unknown attributes to the JVM, so read the
+    # instance dict
+    server = gateway.__dict__.get("_callback_server")
+    if server is not None and (server.thread is None or not server.thread.is_alive()):
+        gateway._callback_server = None
+    ensure_callback_server_started(gateway)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..catalog import events_ts_is_nanos
+from ..functions.lambdas import bind
 
 #: parquet physical schema of events with TIMESTAMP(NANOS) read as long
 _EVENTS_NANOS_SCHEMA = (
@@ -852,6 +853,7 @@ def neardup_probe_stream(
     """
     from ..functions.text import tokenize, word_shingles
     from ..operators.dedup import (
+        _band_keys,
         _minhash_signature,
         _require_index_hasher,
         portable_hash40,
@@ -860,43 +862,27 @@ def neardup_probe_stream(
     _require_index_hasher(snapshot_banded, "bhash", "portable")
     _require_index_hasher(snapshot_sh, "sig", "portable")
 
-    rows_per_band = num_hashes // bands
-    sh = (
-        docs_stream.select(
-            F.col("doc_id"),
-            word_shingles(tokenize(F.col("text")), k).alias("shingles"),
-        )
-        .where(F.size("shingles") > 0)
-        .select(
-            "doc_id",
-            "shingles",
-            _minhash_signature(
-                F.transform(F.col("shingles"), portable_hash40), num_hashes
-            ).alias("sig"),
-        )
+    sh = docs_stream.select(
+        F.col("doc_id"),
+        word_shingles(tokenize(F.col("text")), k).alias("shingles"),
+    ).select(
+        "doc_id",
+        "shingles",
+        _minhash_signature(
+            F.transform(F.col("shingles"), portable_hash40), num_hashes
+        ).alias("sig"),
     )
+    # a document with no shingles gets a null band array, so explode
+    # emits no rows for it: a size(shingles) > 0 Filter would instead
+    # be pushed below the shingle projection with its definition
+    # substituted in, tokenizing every document a second time
     banded_d = sh.select(
         "doc_id",
         "shingles",
         F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    portable_hash40(
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice(
-                                    F.col("sig"),
-                                    b * rows_per_band + 1,
-                                    rows_per_band,
-                                ),
-                                lambda h: h.cast("string"),
-                            ),
-                        )
-                    ).alias("bhash"),
-                ),
+            F.when(
+                F.size("shingles") > 0,
+                _band_keys(F.col("sig"), num_hashes, bands, portable_hash40),
             )
         ).alias("bk"),
     ).select("doc_id", "shingles", "bk.band", "bk.bhash")
@@ -1006,18 +992,13 @@ def _dsir_map_log_weight(
             lambda acc, t: (acc + t).cast("decimal(28,9)"),
         )
 
-    # ``bks`` is bound ONCE as a lambda variable: the caller's gate
-    # filter is pushed below the staging projection with the bucket
-    # array's definition substituted in, and a bare column reference
-    # inside the per-bucket count would then re-run the whole
-    # tokenize/hash pass once per distinct bucket (the gate over
-    # sf0.001's 500 documents: 42 s before, 2 s after, local[4])
-    return F.round(
-        F.element_at(F.transform(F.array(F.col("bks")), fold), 1).cast(
-            "double"
-        ),
-        6,
-    )
+    # ``bks`` is bound once: the caller's gate filter is pushed below
+    # the staging projection with the bucket array's definition
+    # substituted in, and a bare column reference inside the per-bucket
+    # count would then re-run the whole tokenize/hash pass once per
+    # distinct bucket (the gate over sf0.001's 500 documents: 42 s
+    # before, 2 s after, local[4])
+    return F.round(bind(F.col("bks"), fold).cast("double"), 6)
 
 
 def curation_gate_stream(

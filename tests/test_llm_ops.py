@@ -15,7 +15,9 @@ from flink_luad_pipeline_spark.plans.llm_queries import _augmented
 
 def test_minhash_pairs_subset_of_exact(spark, sf_dir):
     """Every minhash-verified pair must appear in the exact join with
-    the same (exact) Jaccard; planted copies (J=1.0) must be found."""
+    the same (exact) Jaccard; planted copies (J=1.0) must be found. The
+    signature kernel matches its pure-Python formula, and the stream
+    probe emits nothing for a document with no shingles."""
     aug = _augmented(spark, sf_dir)
     exact = {
         (r.doc_a, r.doc_b): r.jaccard
@@ -32,6 +34,46 @@ def test_minhash_pairs_subset_of_exact(spark, sf_dir):
     assert planted, "fixture should plant J=1.0 pairs"
     # identical docs have identical signatures -> collide in every band
     assert planted <= set(mh)
+
+    # the signature kernel equals the unrolled per-coefficient formula
+    # the DuckDB oracles use: P for an empty array, null for a null one
+    P = dedup.MINHASH_P
+    hashes = [[5, (1 << 40) - 1, 123456789, 5], [], None]
+
+    def reference(hs):
+        if hs is None:
+            return None
+        return [
+            min([P] + [((40503 * i + 12345) * h + 94261 * i + 57) % P for h in hs])
+            for i in range(64)
+        ]
+
+    frame = spark.createDataFrame(list(enumerate(hashes)), "i int, h array<bigint>")
+    sigs = frame.select("i", dedup._minhash_signature(F.col("h"), 64).alias("sig"))
+    assert {r.i: r.sig for r in sigs.collect()} == {
+        i: reference(h) for i, h in enumerate(hashes)
+    }
+
+    # a document with no shingles yields no probe pairs, even at
+    # threshold 0 against a snapshot row that carries the band keys of
+    # an empty signature (its exact Jaccard with that row would be 0)
+    from flink_luad_pipeline_spark.streaming import ops as sops
+
+    docs = spark.createDataFrame(
+        [(1, "two words"), (2, "alpha beta gamma delta")], "doc_id bigint, text string"
+    )
+    snap_sh = spark.createDataFrame(
+        [(9, ["x y z"])], "doc_id bigint, shingles array<string>"
+    )
+    empty_sig = dedup._minhash_signature(F.array().cast("array<bigint>"), 64)
+    snap_banded = snap_sh.select(
+        "doc_id",
+        F.explode(
+            dedup._band_keys(empty_sig, 64, 16, dedup.portable_hash40)
+        ).alias("bk"),
+    ).select("doc_id", "bk.band", "bk.bhash")
+    pairs = sops.neardup_probe_stream(docs, snap_sh, snap_banded, threshold=0.0)
+    assert pairs.collect() == []
 
 
 def test_simhash_planted_duplicates(spark, sf_dir):

@@ -793,3 +793,79 @@ def test_plans_have_one_timing_mechanism():
             ):
                 found.append(f"{path.name}:{node.lineno} def {node.name}")
     assert found == []
+
+
+# --- tokenize once (optimized plans of a one-row frame, no Spark job) --------
+
+
+def _splits(df) -> int:
+    return df._jdf.queryExecution().optimizedPlan().toString().count("split(")
+
+
+def test_text_kernels_tokenize_each_document_once(spark):
+    """Each kernel's optimized plan holds one ``split(``: the n-gram,
+    bigram and probe lambdas read a bound token array instead of
+    re-tokenizing the document per position, and the probe drops
+    empty-shingle documents without a Filter that Catalyst would push
+    below the shingle projection as a second copy of it."""
+    from flink_luad_pipeline_spark.functions.text import (
+        tokenize,
+        word_ngrams,
+        word_shingles,
+    )
+    from flink_luad_pipeline_spark.operators.importance import _bigram_buckets
+    from flink_luad_pipeline_spark.streaming import ops
+
+    # cast(id as string): a text Catalyst cannot fold into a literal
+    one = spark.range(1).select(
+        F.col("id").alias("doc_id"), F.col("id").cast("string").alias("text")
+    )
+    text = F.col("text")
+    snap_sh = spark.range(1).select(
+        F.col("id").alias("doc_id"),
+        F.array(F.col("id").cast("string")).alias("shingles"),
+        F.array(F.col("id")).alias("sig"),
+    )
+    snap_banded = spark.range(1).select(
+        F.col("id").alias("doc_id"),
+        F.col("id").cast("int").alias("band"),
+        F.col("id").alias("bhash"),
+    )
+    # aliased: an unnamed column is named after its expression
+    cases = {
+        "word_shingles": one.select(word_shingles(tokenize(text), 3).alias("g")),
+        "word_ngrams": one.select(word_ngrams(tokenize(text), 3).alias("g")),
+        "_bigram_buckets": one.select(_bigram_buckets(text, 256).alias("b")),
+        "_shingled_spread": dedup._shingled_spread(one, "doc_id", "text", 3),
+        "neardup_probe_stream": ops.neardup_probe_stream(one, snap_sh, snap_banded),
+    }
+    assert {k: _splits(df) for k, df in cases.items()} == {k: 1 for k in cases}
+
+
+def test_captured_arrays_bind_through_one_helper():
+    """``functions.lambdas.bind`` is the one way a column is bound as a
+    lambda variable: no module builds element_at(transform(array(...
+    inline."""
+    import ast
+
+    def called(node, name: str) -> bool:
+        return isinstance(node, ast.Call) and name in {
+            getattr(node.func, "attr", None),
+            getattr(node.func, "id", None),
+        }
+
+    helper = ROOT / "flink_luad_pipeline_spark" / "functions" / "lambdas.py"
+    found = []
+    for path in sorted((ROOT / "flink_luad_pipeline_spark").rglob("*.py")):
+        if path == helper:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                called(node, "element_at")
+                and node.args
+                and called(node.args[0], "transform")
+                and node.args[0].args
+                and called(node.args[0].args[0], "array")
+            ):
+                found.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert found == []

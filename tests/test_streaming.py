@@ -32,6 +32,36 @@ def batch_sessions(events, gap_minutes=30):
     )
 
 
+def test_get_spark_restarts_callback_server_below_fd_1024(spark):
+    """foreachBatch calls back into the driver through py4j's callback
+    server, whose accept loop waits with select.select: a listening
+    socket at descriptor >= 1024 makes the loop die and the stream hang.
+    get_spark starts the server while few descriptors are open and
+    replaces one whose loop is gone. No stream is started.
+
+    The dead server is a stand-in with py4j's post-shutdown state
+    (``thread`` None): shutting the live server down would block on
+    the callback connections earlier streams left open."""
+    from types import SimpleNamespace
+
+    from flink_luad_pipeline_spark.session import get_spark
+
+    gateway = spark.sparkContext._gateway
+    live = gateway.__dict__["_callback_server"]
+    dead = SimpleNamespace(thread=None)
+    gateway._callback_server = dead
+    try:
+        assert get_spark("flps-tests") is spark
+        server = gateway.__dict__["_callback_server"]
+        assert server is not dead
+        assert server.thread is not None and server.thread.is_alive()
+        assert server.server_socket.fileno() < 1024
+    finally:
+        # leave a live server for the suite's later streams either way
+        if gateway.__dict__["_callback_server"] is dead:
+            gateway._callback_server = live
+
+
 def test_watermark_seals_windows_append_mode(spark, tmp_path):
     """Real watermark semantics over multi-batch file replay (append
     mode): only windows fully below the final watermark are emitted;
