@@ -17,11 +17,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.vectors import cosine_similarity
+from ..functions.vectors import cosine_similarity, dot
 from ..phases import phase
 from .clustering import _mean_agg_cols
 from .dedup import _spread
@@ -359,82 +359,8 @@ def lsh_neardup_pairs(
         .where(F.col("sim") >= threshold)
         # multi-table hits of the same pair carry the identical rounded
         # sim (same deterministic computation), so distinct collapses
-        # them exactly. At extreme scale, use
-        # lsh_neardup_pairs_compact: it dedups the (doc_a, doc_b) pair
-        # ids BEFORE scoring and re-joins vectors, scoring each pair
-        # exactly once.
+        # them exactly
         .distinct()
-    )
-
-
-def lsh_neardup_pairs_compact(
-    vectors: DataFrame,
-    threshold: float,
-    n_planes: int = 4,
-    n_tables: int = 6,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Extreme-scale variant of ``lsh_neardup_pairs`` — identical
-    output, different dataflow: candidate (doc_a, doc_b) ID pairs are
-    generated from an ids-only bucket table and deduped across tables
-    BEFORE any cosine is computed; vectors then re-join by id and each
-    surviving pair is scored exactly once.
-
-    Trade-off vs the direct path: two extra shuffles (the id-pair
-    distinct + the two vector re-joins) in exchange for (a) the bucket
-    self-join shuffling rows of (id, tbl, bucket) instead of rows
-    carrying a dim-wide vector — n_tables copies of every vector never
-    cross the wire — and (b) the cosine evaluated once per unique pair
-    instead of once per bucket collision. The right choice when vectors
-    are wide or collision multiplicity is high; equivalence to the
-    direct path is pinned by test."""
-    all_planes = hyperplane_signs(n_planes * n_tables, dim)
-    keys = []
-    for t in range(n_tables):
-        planes = all_planes[t * n_planes : (t + 1) * n_planes]
-        keys.append(
-            F.struct(
-                F.lit(t).alias("tbl"),
-                _bucket_from_planes(F.col(vec_col), planes).alias("bucket"),
-            )
-        )
-    # ids-only bucket table: the wide vector is dropped before the
-    # self-join, so the candidate shuffle carries 3 small columns.
-    # _spread first: the bucket hashing (n_tables x n_planes dot
-    # products per row) is the CPU pass — see dedup._spread.
-    bck = (
-        _spread(vectors.select(F.col(id_col).alias("id"), F.col(vec_col)))
-        .select(
-            "id",
-            F.explode(F.array(*keys)).alias("k"),
-        )
-        .select("id", "k.tbl", "k.bucket")
-    )
-    cand = (
-        bck.select(F.col("id").alias("doc_a"), "tbl", "bucket")
-        .join(
-            bck.select(F.col("id").alias("doc_b"), "tbl", "bucket"),
-            ["tbl", "bucket"],
-        )
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    va = vectors.select(F.col(id_col).alias("doc_a"), F.col(vec_col).alias("va"))
-    vb = vectors.select(F.col(id_col).alias("doc_b"), F.col(vec_col).alias("vb"))
-    return (
-        cand.join(va, "doc_a")
-        .join(vb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(cosine_similarity(F.col("va"), F.col("vb")), round_digits)
-            .alias("sim"),
-        )
-        .where(F.col("sim") >= threshold)
     )
 
 
@@ -678,6 +604,483 @@ def semantic_dedup_sized(
     )
 
 
+# --- product-quantizer core ---------------------------------------------------
+# One helper per step of the IVF / PQ / residual IVF-PQ tiers (Jégou et al.
+# 2011); the public operators below are compositions of these.
+
+
+def _nearest_cells(
+    df: DataFrame,
+    cents: DataFrame,
+    out_id: str,
+    n: int,
+    id_col: str,
+    vec_col: str,
+    round_digits: int,
+    keep_vec: bool = False,
+) -> DataFrame:
+    """(out_id[, v], centroid_id): each row's ``n`` nearest coarse cells
+    by cosine against the broadcast ``(centroid_id, centv)`` table,
+    ordered ``csim DESC, centroid_id ASC``. The cosine is rounded BEFORE
+    the argmax so both engines pick identical cells. ``n == 1`` is the
+    corpus-sized assignment and runs as ``_nearest_one``'s partial
+    aggregate; ``n > 1`` is the probe side (tens of query rows) and keeps
+    the row_number window. ``keep_vec`` carries the vector along as
+    ``v``."""
+    vec = ("v",) if keep_vec else ()
+    scored = (
+        df.select(F.col(id_col).alias(out_id), F.col(vec_col).alias("v"))
+        .crossJoin(F.broadcast(cents))
+        .select(
+            out_id,
+            *vec,
+            "centroid_id",
+            F.round(
+                cosine_similarity(F.col("v"), F.col("centv")), round_digits
+            ).alias("csim"),
+        )
+        .where(F.col("csim").isNotNull())
+    )
+    if n == 1:
+        return _nearest_one(scored, out_id, payload=vec)
+    w = Window.partitionBy(out_id).orderBy(
+        F.col("csim").desc(), F.col("centroid_id")
+    )
+    return (
+        scored.withColumn("crank", F.row_number().over(w))
+        .where(F.col("crank") <= n)
+        .select(out_id, *vec, "centroid_id")
+    )
+
+
+def _subvectors(
+    df: DataFrame,
+    in_id: str,
+    out_id: str,
+    vec: str,
+    m: int,
+    subdim: int,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """(out_id, *keep, s, sub): ``vec`` split into ``m`` contiguous
+    ``subdim``-wide subvectors, one row per subspace ``s``; a narrow
+    explode."""
+    subs = F.array(
+        *[F.slice(F.col(vec), s * subdim + 1, subdim) for s in range(m)]
+    )
+    return df.select(
+        F.col(in_id).alias(out_id), *keep, F.posexplode(subs).alias("s", "sub")
+    )
+
+
+def _codebook(
+    df: DataFrame, in_id: str, vec: str, m: int, subdim: int
+) -> DataFrame:
+    """(code, s, cent): a per-subspace codebook whose code ids are the
+    ids of ``df``'s rows."""
+    return _subvectors(df, in_id, "code", vec, m, subdim).select(
+        "code", "s", F.col("sub").alias("cent")
+    )
+
+
+def _capped_sample(
+    candidates: DataFrame, id_col: str, code_mod: int, max_codes: int
+) -> DataFrame:
+    """The rows of the training-free codebook: every ``code_mod``-th id,
+    CAPPED at ``max_codes`` codes per subspace (FAISS trains a fixed 256
+    regardless of corpus size). Uncapped, the N/code_mod codebook makes
+    the encode join O(N²/code_mod) — measured 24.1× on 10× data in the
+    round-7 sf10 probe; capped, encode is O(N·m·max_codes), linear. The
+    cap keeps sample ids below ``code_mod·max_codes``: a lazy filter, no
+    driver count, and the same set as uncapped whenever
+    N ≤ code_mod·max_codes (every tested scale). Both claims assume DENSE
+    ids from 0 (the synthetic tables' contract); on a sparse or offset id
+    space it can keep fewer than ``max_codes`` codes — still capped, but
+    re-id (``relational.dict_encode``) first if the code budget matters.
+    The SQL oracles apply the same filter."""
+    return candidates.where(
+        (F.col(id_col) % code_mod == 0) & (F.col(id_col) < code_mod * max_codes)
+    )
+
+
+def _partial_dots(
+    subs: DataFrame,
+    codebook: DataFrame,
+    out_id: str,
+    dot_name: str,
+    round_digits: int,
+) -> DataFrame:
+    """(out_id, s, code, dot_name): each subvector's inner product with
+    every code of its subspace against the broadcast codebook, rounded
+    and cast to an exact DECIMAL so sums over subspaces are order-free
+    and engines agree. Over query subvectors this is the ADC lookup
+    table: queries × m × codes rows, so it is joined downstream on its
+    hash key and never broadcast-hinted (AQE may still broadcast it when
+    it measures small)."""
+    return (
+        subs.join(F.broadcast(codebook), "s")
+        .select(
+            out_id,
+            "s",
+            "code",
+            F.round(dot(F.col("sub"), F.col("cent")), round_digits)
+            .cast("decimal(18,6)")
+            .alias(dot_name),
+        )
+        .where(F.col(dot_name).isNotNull())
+    )
+
+
+def _ip_codes(
+    subs: DataFrame, codebook: DataFrame, round_digits: int
+) -> DataFrame:
+    """(cand_id, s, code): the raw-vector PQ code — the largest rounded
+    partial dot, ties to the smaller code — as the ``_argmin_code`` of
+    its exact DECIMAL negation."""
+    return _argmin_code(
+        _partial_dots(subs, codebook, "cand_id", "d", round_digits)
+        .withColumn("d", -F.col("d")),
+        ["cand_id", "s"],
+    )
+
+
+def _l2_codes(
+    subs: DataFrame,
+    codebook: DataFrame,
+    keys: list[str],
+    round_digits: int,
+    payload: tuple[str, ...] = (),
+) -> DataFrame:
+    """(*keys, *payload, code): the residual PQ code — the smallest
+    ``round(‖sub − cent‖², round_digits)``, ties to the smaller code.
+    L2 is the quantizer objective for unnormalized residuals (the
+    inner-product argmax is wrong there); the distance is an exact
+    DECIMAL so the tie-break is engine-independent."""
+    l2sq = F.round(
+        F.aggregate(
+            F.zip_with("sub", "cent", lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        ),
+        round_digits,
+    ).cast("decimal(18,6)")
+    return _argmin_code(
+        subs.join(F.broadcast(codebook), "s")
+        .select(*keys, "code", *payload, l2sq.alias("d"))
+        .where(F.col("d").isNotNull()),
+        keys,
+        payload=payload,
+    )
+
+
+def _adc_sum(
+    coded: DataFrame,
+    lut: DataFrame,
+    on: list[str],
+    group: list[str],
+    out: str,
+) -> DataFrame:
+    """Asymmetric distance computation: join coded candidates to the
+    per-query LUT on ``on``, drop self-matches, and sum the exact DECIMAL
+    partials per ``group``."""
+    return (
+        coded.join(lut, on)
+        .where(F.col("query_id") != F.col("cand_id"))
+        .groupBy(*group)
+        .agg(F.sum("qd").cast("decimal(18,6)").alias(out))
+    )
+
+
+def _residuals(
+    located: DataFrame, cents: DataFrame, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """(cand_id, *keep, rv): v − c(v) in doubles for a frame carrying
+    (cand_id, v, centroid_id)."""
+    return located.join(F.broadcast(cents), "centroid_id").select(
+        "cand_id",
+        *keep,
+        F.zip_with(
+            "v", "centv", lambda x, c: x.cast("double") - c.cast("double")
+        ).alias("rv"),
+    )
+
+
+def _candidate_residuals(
+    src: DataFrame,
+    assigned: DataFrame,
+    cents: DataFrame,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(cand_id, rv) for the candidate rows of ``src``, located through
+    the (cand_id, centroid_id) assignment."""
+    return _residuals(
+        src.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("v"))
+        .join(assigned, "cand_id"),
+        cents,
+    )
+
+
+def _codebook_frame(spark: SparkSession, cb: dict) -> DataFrame:
+    """The driver-side {(s, code): cent} codebook as a DataFrame."""
+    rows = [(s_, c_, v_) for (s_, c_), v_ in sorted(cb.items())]
+    return spark.createDataFrame(rows, "s int, code bigint, cent array<double>")
+
+
+def _residual_quantizers(
+    candidates: DataFrame,
+    cents: DataFrame,
+    m: int,
+    subdim: int,
+    code_mod: int,
+    id_col: str,
+    vec_col: str,
+    round_digits: int,
+    train_iters: int,
+    train_mod: int,
+    max_codes: int,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The candidate side of residual IVF-PQ, shared by the in-session
+    operator and the index build. Returns (candidates, assigned,
+    codebook):
+
+    - ``candidates`` is ``_spread`` so the N×k assignment cosines and
+      the encode do not run on 1-2 scan partitions;
+    - ``assigned`` (cand_id, centroid_id) is every candidate's cell,
+      materialized once: it feeds the codebook sample, the training
+      sample and the encode, and without the boundary Catalyst re-runs
+      the assignment per consumer;
+    - ``codebook`` (s, code, cent) holds residuals. With
+      ``train_iters <= 0`` it is ``_capped_sample``'s mod-sampled set.
+      Otherwise it is trained with deterministic Lloyd iterations (the
+      ``clustering.kmeans_fit`` discipline): the k = min(N//code_mod,
+      max_codes) smallest-id residuals seed it, the ``id % train_mod``
+      residual sample is assigned by ``_l2_codes``, per-dimension means
+      are rounded to ``round_digits``, and a code that loses every
+      member keeps its previous centroid. The sample is bounded at
+      ``max_codes·64`` rows (FAISS's max_points_per_centroid) by
+      widening the stride when N/train_mod exceeds it, so the training
+      stages cost the same at any corpus size; the stride is unchanged
+      at every tested scale. The codebook (k × m rows) and the
+      candidate count are the documented driver boundaries."""
+    candidates = _spread(candidates)
+    assigned = _nearest_cells(
+        candidates, cents, "cand_id", 1, id_col, vec_col, round_digits
+    ).localCheckpoint(eager=True)
+    if train_iters <= 0:
+        codebook = _codebook(
+            _candidate_residuals(
+                _capped_sample(candidates, id_col, code_mod, max_codes),
+                assigned, cents, id_col, vec_col,
+            ),
+            "cand_id", "rv", m, subdim,
+        )
+        return candidates, assigned, codebook
+
+    spark = candidates.sparkSession
+    n_cands = candidates.count()
+    k_codes = min(max(1, n_cands // code_mod), max_codes)
+    init = _codebook(
+        _candidate_residuals(
+            candidates.where(F.col(id_col) < k_codes),
+            assigned, cents, id_col, vec_col,
+        ),
+        "cand_id", "rv", m, subdim,
+    )
+    eff_train_mod = max(train_mod, -(-n_cands // (max_codes * 64)))
+    train = _subvectors(
+        _candidate_residuals(
+            candidates.where(F.col(id_col) % eff_train_mod == 0),
+            assigned, cents, id_col, vec_col,
+        ),
+        "cand_id", "cand_id", "rv", m, subdim,
+    ).localCheckpoint(eager=True)
+    # coalesce never increases the partition count: near-empty tasks
+    # per training stage are pure scheduler latency on a bounded sample
+    train = train.coalesce(max(1, -(-(n_cands // eff_train_mod) * m // 2048)))
+    cb = {
+        (int(r["s"]), int(r["code"])): list(r["cent"]) for r in init.collect()
+    }
+    for _ in range(train_iters):
+        asg = _l2_codes(
+            train, _codebook_frame(spark, cb), ["cand_id", "s"], round_digits,
+            payload=("sub",),
+        )
+        upd = asg.groupBy("s", "code").agg(
+            *_mean_agg_cols("sub", subdim, round_digits)
+        )
+        for r in upd.collect():
+            cb[(int(r["s"]), int(r["code"]))] = [
+                r[f"a{i}"] for i in range(subdim)
+            ]
+    return candidates, assigned, _codebook_frame(spark, cb)
+
+
+def _residual_codes(
+    src: DataFrame,
+    assigned: DataFrame,
+    cents: DataFrame,
+    codebook: DataFrame,
+    m: int,
+    subdim: int,
+    id_col: str,
+    vec_col: str,
+    round_digits: int,
+) -> DataFrame:
+    """(cand_id, s, code) for the candidate rows of ``src``: the query
+    path passes only the shortlisted candidates, the index build passes
+    every candidate. Codes are a pure per-vector function of the
+    quantizers, so the codes of a row do not depend on ``src``."""
+    return _l2_codes(
+        _subvectors(
+            _candidate_residuals(src, assigned, cents, id_col, vec_col),
+            "cand_id", "cand_id", "rv", m, subdim,
+        ),
+        codebook,
+        ["cand_id", "s"],
+        round_digits,
+    )
+
+
+def _residual_topk(
+    coded: DataFrame,
+    queries: DataFrame,
+    cents: DataFrame,
+    codebook: DataFrame,
+    k: int,
+    m: int,
+    subdim: int,
+    id_col: str,
+    vec_col: str,
+    round_digits: int,
+) -> DataFrame:
+    """Residual IVF-PQ scoring of shortlisted, coded pairs
+    (query_id, cand_id, centroid_id, s, code): sim = round(q·c(v)) +
+    Σ_s LUT[q, s, code], the exact coarse term plus the ADC estimate of
+    q·(v − c(v)), with raw query subvectors against the residual
+    codebook as the LUT; ranked by ``_ranked``."""
+    lut = _partial_dots(
+        _subvectors(queries, id_col, "query_id", vec_col, m, subdim),
+        codebook, "query_id", "qd", round_digits,
+    )
+    adc = _adc_sum(
+        coded, lut, ["query_id", "s", "code"],
+        ["query_id", "cand_id", "centroid_id"], "rsim",
+    )
+    qv = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    )
+    scored = (
+        adc.join(qv, "query_id")
+        .join(F.broadcast(cents), "centroid_id")
+        .select(
+            "query_id",
+            "cand_id",
+            (
+                F.round(dot(F.col("qvec"), F.col("centv")), round_digits)
+                .cast("decimal(18,6)")
+                + F.col("rsim")
+            )
+            .cast("decimal(18,6)")
+            .alias("sim"),
+        )
+        .where(F.col("sim").isNotNull())
+    )
+    return _ranked(scored, k)
+
+
+def _stamp(
+    m: int,
+    dim: int,
+    code_mod: int,
+    train_iters: int,
+    train_mod: int,
+    max_codes: int,
+    round_digits: int,
+) -> dict[str, int]:
+    """The build parameters an index's 1-row ``meta`` frame records, in
+    its column order."""
+    return {
+        "m": m, "dim": dim, "code_mod": code_mod, "train_iters": train_iters,
+        "train_mod": train_mod, "max_codes": max_codes,
+        "round_digits": round_digits,
+    }
+
+
+def _check_stamp(index: dict[str, DataFrame], op: str, stamp: dict) -> None:
+    """The meta-stamp guard: ``op`` refuses an index whose stamp
+    disagrees with its own parameters, since a silent mismatch returns
+    plausible wrong neighbours or folds codes from other quantizers. The
+    1-row meta read is one driver action, the same class as
+    ``derive_centroid_mod``."""
+    got = index["meta"].collect()[0].asDict()
+    bad = {kk: (vv, got.get(kk)) for kk, vv in stamp.items()
+           if got.get(kk) != vv}
+    if bad:
+        raise ValueError(
+            f"{op}: index meta stamp disagrees with the call's parameters:"
+            f" {bad} — rebuild the index or call {op} with the parameters"
+            " it was built with"
+        )
+
+
+def _fold_codes(
+    op: str,
+    index: dict[str, DataFrame],
+    delta: DataFrame,
+    stamp: dict,
+    id_col: str,
+    vec_col: str,
+    on_overlap: str,
+) -> DataFrame:
+    """(cand_id, centroid_id, s, code) for the delta batch against the
+    index's frozen quantizers, behind the meta-stamp and overlap guards
+    (see ``residual_ann_index_encode_delta``); errors name ``op``."""
+    _check_stamp(index, op, stamp)
+    cents = index["cents"]
+    encoded_ids = index["codes"].select("cand_id").distinct()
+    if on_overlap == "error":
+        n_dup = (
+            delta.select(F.col(id_col).alias("cand_id"))
+            .join(encoded_ids, "cand_id", "left_semi")
+            .count()
+        )
+        if n_dup:
+            raise ValueError(
+                f"{op}: {n_dup} delta ids are already"
+                " encoded in the index — folding them would silently"
+                " double-count their ADC partials in the probe's sum."
+                " Deduplicate the delta, or pass on_overlap='skip' for"
+                " idempotent at-least-once replay"
+            )
+    elif on_overlap == "skip":
+        delta = delta.join(
+            encoded_ids.withColumnRenamed("cand_id", id_col),
+            id_col,
+            "left_anti",
+        )
+    else:
+        raise ValueError(f"on_overlap must be 'error' or 'skip': {on_overlap}")
+
+    # the vector rides along the assignment and centroid_id rides in the
+    # code group key (both functionally dependent on cand_id), so the
+    # delta is scanned once
+    located = _nearest_cells(
+        _spread(delta), cents, "cand_id", 1, id_col, vec_col,
+        stamp["round_digits"], keep_vec=True,
+    )
+    return _l2_codes(
+        _subvectors(
+            _residuals(located, cents, keep=("centroid_id",)),
+            "cand_id", "cand_id", "rv", stamp["m"], stamp["dim"] // stamp["m"],
+            keep=("centroid_id",),
+        ),
+        index["codebook"],
+        ["cand_id", "centroid_id", "s"],
+        stamp["round_digits"],
+    )
+
+
 def ivf_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -696,8 +1099,7 @@ def ivf_topk(
     vector by id) instead of k-means — "training-free" IVF. That keeps
     the whole operator closed-form, so the DuckDB oracle can reproduce
     it exactly; swapping in trained centroids changes recall, not the
-    dataflow. Ties broken by (sim desc, centroid_id asc) with rounding
-    *before* argmin, so both engines pick identical cells.
+    dataflow. Cells come from ``_nearest_cells``.
 
     Scale shape: the centroid table is tiny (N/centroid_mod rows) and
     broadcast; cell assignment is one narrow map over the candidate
@@ -715,39 +1117,16 @@ def ivf_topk(
         candidates, centroid_mod, centroids, id_col, vec_col, "ivf_topk"
     )
     # _spread AFTER the centroid sampling (the %mod filter pushes below
-    # the exchange, so only sampled rows would shuffle anyway): the
-    # N x M assignment cosines must not run on 1-2 scan partitions
+    # the exchange, so only sampled rows would shuffle anyway)
     candidates = _spread(candidates)
-
-    def nearest_cells(df: DataFrame, in_id: str, out_id: str, vec: str, n: int):
-        scored = (
-            df.select(F.col(in_id).alias(out_id), F.col(vec).alias("v"))
-            .crossJoin(F.broadcast(cents))
-            .select(
-                out_id,
-                "v",
-                "centroid_id",
-                F.round(
-                    cosine_similarity(F.col("v"), F.col("centv")), round_digits
-                ).alias("csim"),
-            )
-            .where(F.col("csim").isNotNull())
-        )
-        if n == 1:
-            # corpus-sized assignment: partial-agg argmax, not a
-            # row_number window over N·M rows (guide §2.3)
-            return _nearest_one(scored, out_id, payload=("v",))
-        w = Window.partitionBy(out_id).orderBy(
-            F.col("csim").desc(), F.col("centroid_id")
-        )
-        return (
-            scored.withColumn("crank", F.row_number().over(w))
-            .where(F.col("crank") <= n)
-            .drop("csim", "crank")
-        )
-
-    assigned = nearest_cells(candidates, id_col, "cand_id", vec_col, 1)
-    probes = nearest_cells(queries, id_col, "query_id", vec_col, nprobe)
+    assigned = _nearest_cells(
+        candidates, cents, "cand_id", 1, id_col, vec_col, round_digits,
+        keep_vec=True,
+    )
+    probes = _nearest_cells(
+        queries, cents, "query_id", nprobe, id_col, vec_col, round_digits,
+        keep_vec=True,
+    )
     scored = (
         assigned.withColumnRenamed("v", "cv")
         .join(
@@ -793,87 +1172,28 @@ def pq_topk(
 
     Deterministic end to end (training-free mod-sampled codebooks,
     rounded partial dots as exact DECIMALs summed order-free, ties by
-    centroid/cand id), so the oracle reproduces codes, LUT, and
-    ranking exactly. Plan shape: subvector explode is narrow; encode
-    is an equi-join on subspace id against the broadcast codebook,
-    CAPPED at ``max_codes`` codes per subspace like ivfpq_topk
-    (uncapped, the N/centroid_mod codebook makes the encode join
-    O(N²/centroid_mod)); the cap is inactive for
-    N ≤ centroid_mod·max_codes — all tested scales — and assumes
-    DENSE ids starting at 0 (see the ivfpq_topk cap note); scoring
-    is a shuffle equi-join on
-    (subspace, code) against the LUT + one sum aggregation — the LUT
-    is queries × m × codes rows, so it is deliberately NOT
-    broadcast-hinted (AQE may still pick broadcast when small).
+    code/cand id), so the oracle reproduces codes, LUT, and ranking
+    exactly. Plan shape: subvector explode is narrow; encode is an
+    equi-join on subspace id against the broadcast codebook, capped at
+    ``max_codes`` codes per subspace (``_capped_sample``); scoring is a
+    shuffle equi-join on (subspace, code) against the LUT + one sum
+    aggregation.
     """
-    from ..functions.vectors import dot
-
     subdim = dim // m
-
-    def subvectors(df: DataFrame, out_id: str):
-        subs = F.array(
-            *[
-                F.slice(F.col(vec_col), s * subdim + 1, subdim)
-                for s in range(m)
-            ]
-        )
-        return df.select(
-            F.col(id_col).alias(out_id), F.posexplode(subs).alias("s", "sub")
-        )
-
-    codebook = subvectors(
-        candidates.where(
-            (F.col(id_col) % centroid_mod == 0)
-            & (F.col(id_col) < centroid_mod * max_codes)
-        ),
-        "centroid_id",
-    ).select("centroid_id", "s", F.col("sub").alias("cent"))
-
-    def partial_dots(df: DataFrame, out_id: str, dot_name: str):
-        return (
-            df.join(F.broadcast(codebook), "s")
-            .select(
-                out_id,
-                "s",
-                "centroid_id",
-                F.round(dot(F.col("sub"), F.col("cent")), round_digits)
-                .cast("decimal(18,6)")
-                .alias(dot_name),
-            )
-            .where(F.col(dot_name).isNotNull())
-        )
-
-    # argmax by (d DESC, centroid_id ASC) as a partial-aggregable
-    # max(struct(d, -centroid_id)) instead of a row_number window over
-    # N·m·codes rows (guide §2.3); d is exact DECIMAL, id negation is
-    # exact, so the tie-break matches the window bit-for-bit
-    codes = (
-        partial_dots(
-            subvectors(_spread(candidates), "cand_id"), "cand_id", "d"
-        )
-        .groupBy("cand_id", "s")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("d").alias("d_"),
-                    (-F.col("centroid_id")).alias("nid_"),
-                )
-            ).alias("b_")
-        )
-        .select("cand_id", "s", (-F.col("b_.nid_")).alias("code"))
+    codebook = _codebook(
+        _capped_sample(candidates, id_col, centroid_mod, max_codes),
+        id_col, vec_col, m, subdim,
     )
-    lut = partial_dots(
-        subvectors(queries, "query_id"), "query_id", "qd"
-    ).withColumnRenamed("centroid_id", "code")
-    # shuffle equi-join for the LUT (queries × m × codes rows — linear
-    # in the corpus with fixed centroid_mod, so never broadcast-hinted;
-    # AQE may still pick broadcast when it measures small)
-    scored = (
-        codes.join(lut, ["s", "code"])
-        .where(F.col("query_id") != F.col("cand_id"))
-        .groupBy("query_id", "cand_id")
-        # exact DECIMAL partials summed — order-free, so engines agree
-        .agg(F.sum("qd").cast("decimal(18,6)").alias("sim"))
+    codes = _ip_codes(
+        _subvectors(_spread(candidates), id_col, "cand_id", vec_col, m, subdim),
+        codebook, round_digits,
+    )
+    lut = _partial_dots(
+        _subvectors(queries, id_col, "query_id", vec_col, m, subdim),
+        codebook, "query_id", "qd", round_digits,
+    )
+    scored = _adc_sum(
+        codes, lut, ["s", "code"], ["query_id", "cand_id"], "sim"
     )
     return _ranked(scored, k)
 
@@ -909,25 +1229,13 @@ def ivfpq_topk(
     codes, LUT, and ranking exactly.
 
     Plan shape at 100 TB: the coarse-centroid table is tiny and
-    broadcast (M ≈ √N rows). The PQ codebook is CAPPED at
-    ``max_codes`` codes per subspace (FAISS trains a fixed 256
-    regardless of corpus size): the mod-sampled codebook keeps only
-    sample ids below ``code_mod·max_codes``, so it holds
-    min(⌈N/code_mod⌉, max_codes) codes — identical to the uncapped
-    set whenever N ≤ code_mod·max_codes (the cap is a pure filter,
-    lazily evaluated, no driver count). Both the code count and the
-    "identical" claim assume DENSE ids starting at 0 (the synthetic
-    tables' contract); on a sparse/offset id space the id-range filter
-    can keep fewer than max_codes codes — still capped, so the scale
-    bound holds, but re-id (``relational.dict_encode``) first if code
-    budget matters (ADVICE r9). The SQL oracles apply the same filter,
-    so value checks agree either way. Uncapped, the N/code_mod
-    codebook made the encode join O(N²/code_mod) — measured 24.1× on
-    10× data in the round-7 sf10 probe; capped, encode cost is
-    O(N·m·max_codes), linear. The codebook broadcast is scoped
-    to the encode step, and the per-query LUT (same row count, times
-    queries) is joined with a plain shuffle equi-join on its
-    (query_id, s, code) hash key, never broadcast. Candidate cell
+    broadcast (M ≈ √N rows). The PQ codebook is capped at
+    ``max_codes`` codes per subspace (``_capped_sample``), so encode
+    cost is O(N·m·max_codes), linear. The codebook broadcast is scoped
+    to the encode step, and the per-query LUT is joined with a plain
+    shuffle equi-join on its (query_id, s, code) hash key, never
+    broadcast. Only the shortlisted candidates are encoded (query-time
+    IVF-PQ never touches unprobed cells' vectors). Candidate cell
     assignment and encoding are narrow passes over the corpus scan;
     the only corpus-sized shuffles are the cell equi-join and the LUT
     equi-join, both hash-partitioned on small keys.
@@ -937,116 +1245,39 @@ def ivfpq_topk(
     ``_coarse_cells``); trained cells change recall, not the dataflow
     (same as ivf_topk).
     """
-    from ..functions.vectors import dot
-
     subdim = dim // m
     cents = _coarse_cells(
         candidates, centroid_mod, centroids, id_col, vec_col, "ivfpq_topk"
     )
-
-    def nearest_cells(df: DataFrame, out_id: str, n: int) -> DataFrame:
-        scored = (
-            df.select(F.col(id_col).alias(out_id), F.col(vec_col).alias("v"))
-            .crossJoin(F.broadcast(cents))
-            .select(
-                out_id,
-                "centroid_id",
-                F.round(
-                    cosine_similarity(F.col("v"), F.col("centv")), round_digits
-                ).alias("csim"),
-            )
-            .where(F.col("csim").isNotNull())
-        )
-        if n == 1:
-            # the corpus-sized assignment: partial-agg argmax instead
-            # of a row_number window over N·k rows (guide §2.3)
-            return _nearest_one(scored, out_id)
-        # n > 1 only for the probe side (tens of query rows)
-        w = Window.partitionBy(out_id).orderBy(
-            F.col("csim").desc(), F.col("centroid_id")
-        )
-        return (
-            scored.withColumn("crank", F.row_number().over(w))
-            .where(F.col("crank") <= n)
-            .select(out_id, "centroid_id")
-        )
-
-    # the IVF half: (query, cand) pairs allowed to be scored.
-    # _spread: assignment cosines + subvector encode are the CPU
-    # passes; must not run on 1-2 scan partitions (see dedup._spread)
     candidates = _spread(candidates)
-    shortlist = nearest_cells(candidates, "cand_id", 1).join(
-        nearest_cells(queries, "query_id", nprobe), "centroid_id"
-    ).select("query_id", "cand_id")
-
-    # the PQ half (pq_topk's encode/LUT, restricted to the shortlist)
-    def subvectors(df: DataFrame, out_id: str) -> DataFrame:
-        subs = F.array(
-            *[
-                F.slice(F.col(vec_col), s * subdim + 1, subdim)
-                for s in range(m)
-            ]
-        )
-        return df.select(
-            F.col(id_col).alias(out_id), F.posexplode(subs).alias("s", "sub")
-        )
-
-    codebook = subvectors(
-        candidates.where(
-            (F.col(id_col) % code_mod == 0)
-            & (F.col(id_col) < code_mod * max_codes)
+    shortlist = _nearest_cells(
+        candidates, cents, "cand_id", 1, id_col, vec_col, round_digits
+    ).join(
+        _nearest_cells(
+            queries, cents, "query_id", nprobe, id_col, vec_col, round_digits
         ),
-        "code",
-    ).select("code", "s", F.col("sub").alias("cent"))
-
-    def partial_dots(df: DataFrame, out_id: str, dot_name: str) -> DataFrame:
-        return (
-            df.join(F.broadcast(codebook), "s")
-            .select(
-                out_id,
-                "s",
-                "code",
-                F.round(dot(F.col("sub"), F.col("cent")), round_digits)
-                .cast("decimal(18,6)")
-                .alias(dot_name),
-            )
-            .where(F.col(dot_name).isNotNull())
-        )
-
-    # encode only the shortlisted candidates — query-time IVF-PQ never
-    # touches unprobed cells' vectors (at index-build time you'd encode
-    # everything once instead; same codes either way). Argmax by
-    # (d DESC, code ASC) as a partial-aggregable max(struct) instead of
-    # a row_number window over N·m·codes rows (guide §2.3)
+        "centroid_id",
+    ).select("query_id", "cand_id")
+    codebook = _codebook(
+        _capped_sample(candidates, id_col, code_mod, max_codes),
+        id_col, vec_col, m, subdim,
+    )
     short_cands = candidates.join(
         shortlist.select(F.col("cand_id").alias(id_col)).distinct(),
         id_col,
         "left_semi",
     )
-    codes = (
-        partial_dots(subvectors(short_cands, "cand_id"), "cand_id", "d")
-        .groupBy("cand_id", "s")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("d").alias("d_"), (-F.col("code")).alias("nid_")
-                )
-            ).alias("b_")
-        )
-        .select("cand_id", "s", (-F.col("b_.nid_")).alias("code"))
+    codes = _ip_codes(
+        _subvectors(short_cands, id_col, "cand_id", vec_col, m, subdim),
+        codebook, round_digits,
     )
-    lut = partial_dots(subvectors(queries, "query_id"), "query_id", "qd")
-    # LUT via shuffle equi-join on its hash key, NOT broadcast: the
-    # table is queries × m × codes rows — linear in both the query
-    # batch and the codebook — so at 100 TB a broadcast would be
-    # unbounded (ADVICE r4). AQE still broadcasts it adaptively when
-    # it measures small.
-    scored = (
-        codes.join(shortlist, "cand_id")
-        .join(lut, ["query_id", "s", "code"])
-        .where(F.col("query_id") != F.col("cand_id"))
-        .groupBy("query_id", "cand_id")
-        .agg(F.sum("qd").cast("decimal(18,6)").alias("sim"))
+    lut = _partial_dots(
+        _subvectors(queries, id_col, "query_id", vec_col, m, subdim),
+        codebook, "query_id", "qd", round_digits,
+    )
+    scored = _adc_sum(
+        codes.join(shortlist, "cand_id"), lut, ["query_id", "s", "code"],
+        ["query_id", "cand_id"], "sim",
     )
     return _ranked(scored, k)
 
@@ -1083,34 +1314,28 @@ def residual_ivfpq_topk(
     (recall@10 0.275 → 0.385 sampled / ~0.46 trained on the scorecard
     fixture; see the README scorecard). Two deliberate differences
     from ``ivfpq_topk``'s raw-vector tier, both the FAISS defaults:
-    the codebook holds residuals (mod-sampled at ``train_iters=0``),
-    and code assignment minimizes L2 distance (round(||r_s − c_s||²,
-    6), tie by code id) rather than maximizing the inner product — the
-    correct quantizer objective for unnormalized residuals.
+    the codebook holds residuals, and code assignment minimizes L2
+    distance (``_l2_codes``) rather than maximizing the inner product.
 
-    ``train_iters > 0`` additionally TRAINS the per-subspace codebook
-    with deterministic Lloyd iterations (the clustering.kmeans_fit
-    discipline verbatim: smallest-id residuals as init, rounded
-    distances with code-id tie-breaks, per-dimension means rounded to
-    ``round_digits``, empty codes keep their previous centroid) over
-    the ``id % train_mod = 0`` residual sample — FAISS trains PQ on a
-    sample too; the codebook (k_codes × m rows, capped at fixed size
-    in production — see ivfpq_topk's scale note) is the same
-    documented k-row driver boundary as the k-means centroids.
+    ``train_iters > 0`` trains the per-subspace codebook with
+    deterministic Lloyd iterations over the bounded ``id % train_mod``
+    residual sample; ``train_iters=0`` takes the capped mod-sampled
+    codebook (``_residual_quantizers``).
 
-    Deterministic end to end (same devices as the parents: rounded
-    cosine cell choice, rounded-DECIMAL partials, explicit
-    tie-breaks), so the DuckDB oracle reproduces cells, residuals,
-    codes, LUT, the exact q·c term, and the ranking.
+    The candidate side (assignment, codebook) is the one
+    ``residual_ann_index_frames`` persists; this in-session path encodes
+    only the shortlisted candidates (``_residual_codes``) and scores
+    them with ``_residual_topk``, as the persisted probe does, so the
+    two answer identically (pinned by test). Deterministic end to end,
+    so the DuckDB oracle reproduces cells, residuals, codes, LUT, the
+    exact q·c term, and the ranking.
 
-    Plan shape at 100 TB = ``ivfpq_topk``'s audited shape plus one
-    narrow residual projection per shortlisted candidate and one
+    Plan shape at 100 TB = ``ivfpq_topk``'s shape plus one narrow
+    residual projection per shortlisted candidate and one
     (query × probed-cell)-sized exact q·c attach — no new
     corpus-sized shuffle: cell assignment and encoding stay narrow
     passes, the LUT equi-join stays hash-partitioned on
     (query_id, s, code)."""
-    from ..functions.vectors import dot
-
     subdim = dim // m
     cents = _coarse_cells(
         candidates,
@@ -1120,240 +1345,30 @@ def residual_ivfpq_topk(
         vec_col,
         "residual_ivfpq_topk",
     )
-
-    def nearest_cells(df: DataFrame, out_id: str, n: int) -> DataFrame:
-        scored = (
-            df.select(F.col(id_col).alias(out_id), F.col(vec_col).alias("v"))
-            .crossJoin(F.broadcast(cents))
-            .select(
-                out_id,
-                "centroid_id",
-                F.round(
-                    cosine_similarity(F.col("v"), F.col("centv")), round_digits
-                ).alias("csim"),
-            )
-            .where(F.col("csim").isNotNull())
-        )
-        if n == 1:
-            # the corpus-sized assignment: partial-agg argmax instead
-            # of a row_number window over N·k rows (guide §2.3)
-            return _nearest_one(scored, out_id)
-        # n > 1 only for the probe side (tens of query rows)
-        w = Window.partitionBy(out_id).orderBy(
-            F.col("csim").desc(), F.col("centroid_id")
-        )
-        return (
-            scored.withColumn("crank", F.row_number().over(w))
-            .where(F.col("crank") <= n)
-            .select(out_id, "centroid_id")
-        )
-
-    candidates = _spread(candidates)
-    # the N×k assignment (cosines + per-vector window) feeds the
-    # shortlist AND every residuals() call (codebook init, training
-    # sample, encode) — 4+ consumers; without a boundary Catalyst
-    # re-runs the whole pass per consumer (the semantic_dedup /
-    # Lloyd-frame contract)
-    assigned = nearest_cells(candidates, "cand_id", 1).localCheckpoint(
-        eager=True
+    candidates, assigned, codebook = _residual_quantizers(
+        candidates, cents, m, subdim, code_mod, id_col, vec_col,
+        round_digits, train_iters, train_mod, max_codes,
     )
-    probes = nearest_cells(queries, "query_id", nprobe)
-    # shortlist keeps the candidate's cell id: the exact q·c(v) term
-    # needs it, and it is free (assigned already carries it)
+    probes = _nearest_cells(
+        queries, cents, "query_id", nprobe, id_col, vec_col, round_digits
+    )
+    # the candidate's cell id rides along for the exact q·c(v) term
     shortlist = assigned.join(probes, "centroid_id").select(
         "query_id", "cand_id", "centroid_id"
     )
-
-    # residual frame: v − c(v), only for the rows that are consumed
-    # (codebook sample ∪ shortlisted candidates)
-    def residuals(src: DataFrame) -> DataFrame:
-        return (
-            src.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("v"))
-            .join(assigned, "cand_id")
-            .join(F.broadcast(cents), "centroid_id")
-            .select(
-                "cand_id",
-                F.zip_with(
-                    "v",
-                    "centv",
-                    lambda x, c: x.cast("double") - c.cast("double"),
-                ).alias("rv"),
-            )
-        )
-
-    def subvectors(df: DataFrame, in_id: str, out_id: str, vec: str):
-        subs = F.array(
-            *[F.slice(F.col(vec), s * subdim + 1, subdim) for s in range(m)]
-        )
-        return df.select(
-            F.col(in_id).alias(out_id), F.posexplode(subs).alias("s", "sub")
-        )
-
-    # L2 code assignment over residual subvectors (FAISS's quantizer
-    # objective — the inner-product argmax is wrong for unnormalized
-    # residuals); shared by the Lloyd training loop and the encode
-    l2sq = F.round(
-        F.aggregate(
-            F.zip_with("sub", "cent", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        round_digits,
-    ).cast("decimal(18,6)")
-
-    if train_iters > 0:
-        spark = candidates.sparkSession
-        # the k smallest-id residuals seed the codebook (kmeans_fit's
-        # no-RNG init); the count is the same documented driver action
-        # as derive_centroid_mod. The codebook is CAPPED at
-        # ``max_codes`` (FAISS trains 256 codes per subspace
-        # regardless of corpus size): an uncapped N/code_mod codebook
-        # makes the encode join O(N²/code_mod) — measured 24x on 10x
-        # data in the sf10 probe of the mod-sampled tier (SCALE.md
-        # round 7).
-        n_cands = candidates.count()
-        k_codes = min(max(1, n_cands // code_mod), max_codes)
-        init = subvectors(
-            residuals(candidates.where(F.col(id_col) < k_codes)),
-            "cand_id",
-            "code",
-            "rv",
-        ).select("code", "s", F.col("sub").alias("cent"))
-        # FAISS's max_points_per_centroid analog (VERDICT r8 item 4):
-        # the Lloyd sample is bounded at max_codes·64 rows by widening
-        # the id stride when N/train_mod exceeds that budget, so the
-        # ~train_iters driver-synchronized training stages are
-        # CONSTANT-cost at any corpus size instead of linear in it.
-        # Inactive (eff == train_mod) whenever the user's stride
-        # already fits the budget — true at every tested scale, so the
-        # train_mod=4 oracle stays exact.
-        eff_train_mod = max(train_mod, -(-n_cands // (max_codes * 64)))
-        train = subvectors(
-            residuals(candidates.where(F.col(id_col) % eff_train_mod == 0)),
-            "cand_id",
-            "cand_id",
-            "rv",
-        ).localCheckpoint(eager=True)
-        # scale-adaptive task sizing for the bounded Lloyd sample
-        # (guide §2, the clustering._fit device): the sample is capped
-        # at max_codes·64 rows, so 32 near-empty tasks per training
-        # stage are pure scheduler latency; coalesce never increases
-        # partition count, so this is a no-op whenever the sample
-        # actually fills the cores
-        train = train.coalesce(
-            max(1, -(-(n_cands // eff_train_mod) * m // 2048))
-        )
-        cb = {
-            (int(r["s"]), int(r["code"])): list(r["cent"])
-            for r in init.collect()
-        }
-
-        def cb_df() -> DataFrame:
-            rows = [(s_, c_, v_) for (s_, c_), v_ in sorted(cb.items())]
-            return spark.createDataFrame(
-                rows, "s int, code bigint, cent array<double>"
-            )
-
-        for _ in range(train_iters):
-            # _argmin_code instead of the row_number window (guide
-            # §2.3): the sample·codes scored rows collapse map-side
-            asg = _argmin_code(
-                train.join(F.broadcast(cb_df()), "s")
-                .select("cand_id", "s", "code", "sub", l2sq.alias("d"))
-                .where(F.col("d").isNotNull()),
-                ["cand_id", "s"],
-                payload=("sub",),
-            )
-            # per-dimension means as subdim parallel avg() aggregates
-            # in ONE groupBy (guide §2.4, the clustering._fit device):
-            # the posexplode + two-groupBy shape paid two exchanges
-            # per training stage for the same numbers
-            upd = asg.groupBy("s", "code").agg(
-                *_mean_agg_cols("sub", subdim, round_digits)
-            )
-            # k_codes × m rows of subdim doubles — the documented
-            # driver boundary; codes that lose every member keep their
-            # previous centroid
-            for r in upd.collect():
-                cb[(int(r["s"]), int(r["code"]))] = [
-                    r[f"a{i}"] for i in range(subdim)
-                ]
-        codebook = cb_df()
-    else:
-        # the DEFAULT (train_iters=0) branch takes the mod-sampled
-        # codebook and must carry the SAME fixed-size cap as ivfpq_topk
-        # (ADVICE r7 low #2: the default call silently took the
-        # uncapped O(N²/code_mod) encode path): keep only sample ids
-        # below code_mod·max_codes — min(⌈N/code_mod⌉, max_codes)
-        # codes, identical to the uncapped set for N ≤ code_mod·max_codes.
-        # Dense-ids-from-0 assumption as documented in ivfpq_topk.
-        codebook = subvectors(
-            residuals(
-                candidates.where(
-                    (F.col(id_col) % code_mod == 0)
-                    & (F.col(id_col) < code_mod * max_codes)
-                )
-            ),
-            "cand_id",
-            "code",
-            "rv",
-        ).select("code", "s", F.col("sub").alias("cent"))
-
     short_cands = candidates.join(
         shortlist.select(F.col("cand_id").alias(id_col)).distinct(),
         id_col,
         "left_semi",
     )
-    codes = _argmin_code(
-        subvectors(residuals(short_cands), "cand_id", "cand_id", "rv")
-        .join(F.broadcast(codebook), "s")
-        .select("cand_id", "s", "code", l2sq.alias("d"))
-        .where(F.col("d").isNotNull()),
-        ["cand_id", "s"],
-    ).select("cand_id", "s", "code")
-    # LUT: raw query subvectors against the residual codebook (the
-    # q·r̂ half of the estimate); shuffle equi-join, never broadcast
-    lut = (
-        subvectors(queries, id_col, "query_id", vec_col)
-        .join(F.broadcast(codebook), "s")
-        .select(
-            "query_id",
-            "s",
-            "code",
-            F.round(dot(F.col("sub"), F.col("cent")), round_digits)
-            .cast("decimal(18,6)")
-            .alias("qd"),
-        )
-        .where(F.col("qd").isNotNull())
+    codes = _residual_codes(
+        short_cands, assigned, cents, codebook, m, subdim, id_col, vec_col,
+        round_digits,
     )
-    adc = (
-        codes.join(shortlist, "cand_id")
-        .join(lut, ["query_id", "s", "code"])
-        .where(F.col("query_id") != F.col("cand_id"))
-        .groupBy("query_id", "cand_id", "centroid_id")
-        .agg(F.sum("qd").cast("decimal(18,6)").alias("rsim"))
+    return _residual_topk(
+        codes.join(shortlist, "cand_id"), queries, cents, codebook, k, m,
+        subdim, id_col, vec_col, round_digits,
     )
-    # the exact q·c(v) coarse term
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    scored = (
-        adc.join(qv, "query_id")
-        .join(F.broadcast(cents), "centroid_id")
-        .select(
-            "query_id",
-            "cand_id",
-            (
-                F.round(dot(F.col("qvec"), F.col("centv")), round_digits)
-                .cast("decimal(18,6)")
-                + F.col("rsim")
-            )
-            .cast("decimal(18,6)")
-            .alias("sim"),
-        )
-        .where(F.col("sim").isNotNull())
-    )
-    return _ranked(scored, k)
 
 
 def residual_ann_index_frames(
@@ -1370,39 +1385,32 @@ def residual_ann_index_frames(
     train_mod: int = 4,
     max_codes: int = 256,
 ) -> dict[str, DataFrame]:
-    """INDEX-BUILD half of residual IVF-PQ (VERDICT r9 item 4 — the
-    ll63 persisted-index device applied to the ANN tier): everything
-    ``residual_ivfpq_topk`` trains or derives from the CANDIDATE side
-    alone, as four plain parquet-writable frames, so a production
-    pipeline builds once per snapshot and answers every query batch
-    via ``residual_ann_index_topk`` without re-reading candidate
-    vectors or re-running Lloyd (the reference stashes its trained
-    model the same way — Trainer.scala:119 — but re-trains per run;
-    this is that idea done right):
+    """INDEX-BUILD half of residual IVF-PQ (the ll63 persisted-index
+    device applied to the ANN tier): everything ``residual_ivfpq_topk``
+    trains or derives from the CANDIDATE side alone, as four plain
+    parquet-writable frames, so a production pipeline builds once per
+    snapshot and answers every query batch via
+    ``residual_ann_index_topk`` without re-reading candidate vectors or
+    re-running Lloyd (the reference stashes its trained model the same
+    way — Trainer.scala:119 — but re-trains per run):
 
       cents    — (centroid_id, centv) coarse cells (trained or
                  mod-sampled via the required-grain rules of
                  ``_coarse_cells``)
-      codebook — (s, code, cent) per-subspace residual codebook, same
-                 trained/capped devices as residual_ivfpq_topk
+      codebook — (s, code, cent) per-subspace residual codebook
+                 (``_residual_quantizers``, shared with the query path)
       codes    — (cand_id, centroid_id, s, code): EVERY candidate's
                  cell + PQ codes (index build encodes everything once;
                  the in-session query path encodes only shortlisted
-                 candidates — same codes either way, the documented
-                 equivalence, pinned by test)
-      meta     — 1 row of the build parameters; the probe refuses an
-                 index whose stamp disagrees with its own arguments
-                 (the dedup hasher-mismatch guard, ADVICE r6 class)
+                 candidates — same codes either way, pinned by test)
+      meta     — 1 row of the build parameters; the probe and the fold
+                 refuse an index whose stamp disagrees with their own
+                 arguments (``_check_stamp``)
 
-    Same determinism devices as the query-path operator (rounded
-    cosine cells, rounded-L2 code argmin with code-id tie-breaks,
-    bounded Lloyd sample), so a persisted+probed answer is value-equal
-    to the in-session one. Scale: assignment and encode are the same
-    narrow passes as the query path, run over the full corpus once;
-    codes is the only corpus-sized artifact (m+1 small ints per
-    vector — the PQ compression is the point)."""
-    from ..functions.vectors import dot  # noqa: F401  (parity of deps)
-
+    Scale: assignment and encode are the same narrow passes as the
+    query path, run over the full corpus once; codes is the only
+    corpus-sized artifact (m+1 small ints per vector — the PQ
+    compression is the point)."""
     spark = candidates.sparkSession
     subdim = dim // m
     cents = _coarse_cells(
@@ -1413,149 +1421,22 @@ def residual_ann_index_frames(
         vec_col,
         "residual_ann_index_frames",
     )
-    candidates = _spread(candidates)
-
-    # same boundary as residual_ivfpq_topk: assignment feeds residuals
-    # for codebook init, training sample, and the full encode.
-    # _nearest_one replaces the row_number window (guide §2.3): the
-    # N·k scored rows collapse map-side to N before the exchange.
-    assigned = _nearest_one(
-        candidates.select(
-            F.col(id_col).alias("cand_id"), F.col(vec_col).alias("v")
-        )
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "cand_id",
-            "centroid_id",
-            F.round(
-                cosine_similarity(F.col("v"), F.col("centv")), round_digits
-            ).alias("csim"),
-        )
-        .where(F.col("csim").isNotNull()),
-        "cand_id",
-    ).localCheckpoint(eager=True)
-
-    def residuals(src: DataFrame) -> DataFrame:
-        return (
-            src.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("v"))
-            .join(assigned, "cand_id")
-            .join(F.broadcast(cents), "centroid_id")
-            .select(
-                "cand_id",
-                F.zip_with(
-                    "v",
-                    "centv",
-                    lambda x, c: x.cast("double") - c.cast("double"),
-                ).alias("rv"),
-            )
-        )
-
-    def subvectors(df: DataFrame, in_id: str, out_id: str, vec: str):
-        subs = F.array(
-            *[F.slice(F.col(vec), s * subdim + 1, subdim) for s in range(m)]
-        )
-        return df.select(
-            F.col(in_id).alias(out_id), F.posexplode(subs).alias("s", "sub")
-        )
-
-    l2sq = F.round(
-        F.aggregate(
-            F.zip_with("sub", "cent", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        round_digits,
-    ).cast("decimal(18,6)")
-
-    if train_iters > 0:
-        # verbatim the residual_ivfpq_topk training discipline: k
-        # smallest-id residual seeds, bounded Lloyd sample
-        # (max_codes·64 budget), rounded means, empty codes carry over
-        n_cands = candidates.count()
-        k_codes = min(max(1, n_cands // code_mod), max_codes)
-        init = subvectors(
-            residuals(candidates.where(F.col(id_col) < k_codes)),
-            "cand_id",
-            "code",
-            "rv",
-        ).select("code", "s", F.col("sub").alias("cent"))
-        eff_train_mod = max(train_mod, -(-n_cands // (max_codes * 64)))
-        train = subvectors(
-            residuals(candidates.where(F.col(id_col) % eff_train_mod == 0)),
-            "cand_id",
-            "cand_id",
-            "rv",
-        ).localCheckpoint(eager=True)
-        # scale-adaptive task sizing for the bounded Lloyd sample
-        # (guide §2, the clustering._fit device): the sample is capped
-        # at max_codes·64 rows, so 32 near-empty tasks per training
-        # stage are pure scheduler latency; coalesce never increases
-        # partition count, so this is a no-op whenever the sample
-        # actually fills the cores
-        train = train.coalesce(
-            max(1, -(-(n_cands // eff_train_mod) * m // 2048))
-        )
-        cb = {
-            (int(r["s"]), int(r["code"])): list(r["cent"])
-            for r in init.collect()
-        }
-
-        def cb_df() -> DataFrame:
-            rows = [(s_, c_, v_) for (s_, c_), v_ in sorted(cb.items())]
-            return spark.createDataFrame(
-                rows, "s int, code bigint, cent array<double>"
-            )
-
-        for _ in range(train_iters):
-            # _argmin_code instead of the row_number window (guide
-            # §2.3): the sample·codes scored rows collapse map-side
-            asg = _argmin_code(
-                train.join(F.broadcast(cb_df()), "s")
-                .select("cand_id", "s", "code", "sub", l2sq.alias("d"))
-                .where(F.col("d").isNotNull()),
-                ["cand_id", "s"],
-                payload=("sub",),
-            )
-            # per-dimension means as subdim parallel avg() aggregates
-            # in ONE groupBy (guide §2.4, the clustering._fit device):
-            # the posexplode + two-groupBy shape paid two exchanges
-            # per training stage for the same numbers; the Column list
-            # is memoized (clustering._mean_agg_cols, VERDICT r13
-            # item 4)
-            upd = asg.groupBy("s", "code").agg(
-                *_mean_agg_cols("sub", subdim, round_digits)
-            )
-            for r in upd.collect():
-                cb[(int(r["s"]), int(r["code"]))] = [
-                    r[f"a{i}"] for i in range(subdim)
-                ]
-        codebook = cb_df()
-    else:
-        codebook = subvectors(
-            residuals(
-                candidates.where(
-                    (F.col(id_col) % code_mod == 0)
-                    & (F.col(id_col) < code_mod * max_codes)
-                )
-            ),
-            "cand_id",
-            "code",
-            "rv",
-        ).select("code", "s", F.col("sub").alias("cent"))
-
+    candidates, assigned, codebook = _residual_quantizers(
+        candidates, cents, m, subdim, code_mod, id_col, vec_col,
+        round_digits, train_iters, train_mod, max_codes,
+    )
     codes = (
-        _argmin_code(
-            subvectors(residuals(candidates), "cand_id", "cand_id", "rv")
-            .join(F.broadcast(codebook), "s")
-            .select("cand_id", "s", "code", l2sq.alias("d"))
-            .where(F.col("d").isNotNull()),
-            ["cand_id", "s"],
+        _residual_codes(
+            candidates, assigned, cents, codebook, m, subdim, id_col,
+            vec_col, round_digits,
         )
         .join(assigned, "cand_id")
         .select("cand_id", "centroid_id", "s", "code")
     )
+    stamp = _stamp(m, dim, code_mod, train_iters, train_mod, max_codes,
+                   round_digits)
     meta = spark.createDataFrame(
-        [(m, dim, code_mod, train_iters, train_mod, max_codes, round_digits)],
+        [tuple(stamp.values())],
         "m int, dim int, code_mod int, train_iters int, train_mod int,"
         " max_codes int, round_digits int",
     )
@@ -1589,7 +1470,7 @@ def residual_ann_index_encode_delta(
     the ids already encoded: a duplicate (cand_id, s, code) row would
     silently double-count that candidate's ADC partial dots in
     ``residual_ann_index_topk``'s sum — wrong similarities with no
-    loud failure (ADVICE r10 medium). ``on_overlap`` enforces it:
+    loud failure. ``on_overlap`` enforces it:
       "error" (default) — one bounded semi-join count of delta ids
         against the index's encoded ids; raises on any overlap. The
         count is an eager job (same documented driver-action class as
@@ -1601,99 +1482,13 @@ def residual_ann_index_encode_delta(
         (foreachBatch retry semantics — ss21/ss23's caveat class).
 
     Refuses an index whose meta stamp disagrees with the fold's
-    parameters (same guard as the probe)."""
-    expected = {
-        "m": m, "dim": dim, "code_mod": code_mod,
-        "train_iters": train_iters, "train_mod": train_mod,
-        "max_codes": max_codes, "round_digits": round_digits,
-    }
-    got = index["meta"].collect()[0].asDict()
-    bad = {kk: (vv, got.get(kk)) for kk, vv in expected.items()
-           if got.get(kk) != vv}
-    if bad:
-        raise ValueError(
-            "residual_ann_index_update: index meta stamp disagrees with "
-            f"update parameters: {bad} — rebuild the index or fold with "
-            "the parameters it was built with"
-        )
-    cents = index["cents"]
-    codebook = index["codebook"]
-    subdim = dim // m
-
-    encoded_ids = index["codes"].select("cand_id").distinct()
-    if on_overlap == "error":
-        n_dup = (
-            delta.select(F.col(id_col).alias("cand_id"))
-            .join(encoded_ids, "cand_id", "left_semi")
-            .count()
-        )
-        if n_dup:
-            raise ValueError(
-                f"residual_ann_index_update: {n_dup} delta ids are already"
-                " encoded in the index — folding them would silently"
-                " double-count their ADC partials in the probe's sum."
-                " Deduplicate the delta, or pass on_overlap='skip' for"
-                " idempotent at-least-once replay"
-            )
-    elif on_overlap == "skip":
-        delta = delta.join(
-            encoded_ids.withColumnRenamed("cand_id", id_col),
-            id_col,
-            "left_anti",
-        )
-    else:
-        raise ValueError(f"on_overlap must be 'error' or 'skip': {on_overlap}")
-
-    delta = _spread(delta)
-    # _nearest_one instead of the row_number window (guide §2.3); the
-    # vector payload rides along (identical per cand_id, so first()
-    # is value-deterministic)
-    assigned = _nearest_one(
-        delta.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("v"))
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "cand_id",
-            "v",
-            "centroid_id",
-            F.round(
-                cosine_similarity(F.col("v"), F.col("centv")), round_digits
-            ).alias("csim"),
-        )
-        .where(F.col("csim").isNotNull()),
-        "cand_id",
-        payload=("v",),
+    parameters (``_check_stamp``)."""
+    return _fold_codes(
+        "residual_ann_index_encode_delta", index, delta,
+        _stamp(m, dim, code_mod, train_iters, train_mod, max_codes,
+               round_digits),
+        id_col, vec_col, on_overlap,
     )
-    resid = assigned.join(F.broadcast(cents), "centroid_id").select(
-        "cand_id",
-        "centroid_id",
-        F.zip_with(
-            "v", "centv", lambda x, c: x.cast("double") - c.cast("double")
-        ).alias("rv"),
-    )
-    subs = F.array(
-        *[F.slice(F.col("rv"), s * subdim + 1, subdim) for s in range(m)]
-    )
-    l2sq = F.round(
-        F.aggregate(
-            F.zip_with("sub", "cent", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        round_digits,
-    ).cast("decimal(18,6)")
-    # _argmin_code instead of the row_number window (guide §2.3);
-    # centroid_id is functionally dependent on cand_id, so adding it
-    # to the group key changes nothing but keeps it in the output
-    delta_codes = _argmin_code(
-        resid.select(
-            "cand_id", "centroid_id", F.posexplode(subs).alias("s", "sub")
-        )
-        .join(F.broadcast(codebook), "s")
-        .select("cand_id", "centroid_id", "s", "code", l2sq.alias("d"))
-        .where(F.col("d").isNotNull()),
-        ["cand_id", "centroid_id", "s"],
-    ).select("cand_id", "centroid_id", "s", "code")
-    return delta_codes
 
 
 def residual_ann_index_update(
@@ -1714,7 +1509,7 @@ def residual_ann_index_update(
     a delta batch of vectors into an existing index WITHOUT touching
     the base corpus or retraining — assign each delta vector to its
     cell with the FROZEN coarse centroids, encode its residual with
-    the FROZEN codebook (``residual_ann_index_encode_delta``), and
+    the FROZEN codebook (as ``residual_ann_index_encode_delta``), and
     union the (cand_id, centroid_id, s, code) rows into the codes
     table. Because cell assignment and encoding are pure per-vector
     functions of the frozen quantizers (the ll63 per-document-artifact
@@ -1730,21 +1525,15 @@ def residual_ann_index_update(
     set; ``on_overlap`` ("error" raises eagerly / "skip" anti-joins
     lazily for idempotent replay) enforces it — see
     ``residual_ann_index_encode_delta``. Refuses an index whose meta
-    stamp disagrees with the fold's parameters (same guard as the
-    probe). Returns the updated frames dict (cents/codebook/meta
-    unchanged, codes unioned)."""
-    delta_codes = residual_ann_index_encode_delta(
-        index, delta, m=m, dim=dim, code_mod=code_mod, id_col=id_col,
-        vec_col=vec_col, round_digits=round_digits,
-        train_iters=train_iters, train_mod=train_mod,
-        max_codes=max_codes, on_overlap=on_overlap,
+    stamp disagrees with the fold's parameters. Returns the updated
+    frames dict (cents/codebook/meta unchanged, codes unioned)."""
+    delta_codes = _fold_codes(
+        "residual_ann_index_update", index, delta,
+        _stamp(m, dim, code_mod, train_iters, train_mod, max_codes,
+               round_digits),
+        id_col, vec_col, on_overlap,
     )
-    return {
-        "cents": index["cents"],
-        "codebook": index["codebook"],
-        "codes": index["codes"].unionByName(delta_codes),
-        "meta": index["meta"],
-    }
+    return dict(index, codes=index["codes"].unionByName(delta_codes))
 
 
 def residual_ann_index_topk(
@@ -1765,105 +1554,29 @@ def residual_ann_index_topk(
     """PROBE half of the persisted residual IVF-PQ index: answer top-k
     from the four index frames alone — the candidate corpus is NEVER
     read and nothing retrains. Refuses an index whose meta stamp
-    disagrees with the probe's own parameters (the dedup
-    hasher-mismatch guard: a silent mismatch would return plausible
-    wrong neighbors; the 1-row meta read is the same documented driver
-    action class as derive_centroid_mod).
+    disagrees with the probe's own parameters (``_check_stamp``).
 
     Dataflow: query × broadcast(cents) picks nprobe cells; the
     persisted ``codes`` table joined on centroid_id IS the shortlist
-    (cell assignment was done at build time); LUT = query subvectors ×
-    broadcast(codebook); ADC sum + the exact q·c(v) coarse term —
-    byte-identical arithmetic to ``residual_ivfpq_topk``, so persisted
-    + probed equals in-session (pinned by test and by the driver
-    oracle). Per batch the only corpus-sized input is ``codes``
+    (cell assignment was done at build time); scoring is
+    ``_residual_topk``, shared with ``residual_ivfpq_topk``, so
+    persisted + probed equals in-session (pinned by test and by the
+    driver oracle). Per batch the only corpus-sized input is ``codes``
     (m+1 small ints per candidate), joined once on its cell key."""
-    from ..functions.vectors import dot
-
-    expected = {
-        "m": m, "dim": dim, "code_mod": code_mod,
-        "train_iters": train_iters, "train_mod": train_mod,
-        "max_codes": max_codes, "round_digits": round_digits,
-    }
-    got = index["meta"].collect()[0].asDict()
-    bad = {kk: (vv, got.get(kk)) for kk, vv in expected.items()
-           if got.get(kk) != vv}
-    if bad:
-        raise ValueError(
-            "residual_ann_index_topk: index meta stamp disagrees with "
-            f"probe parameters: {bad} — rebuild the index or probe "
-            "with the parameters it was built with"
-        )
+    _check_stamp(
+        index,
+        "residual_ann_index_topk",
+        _stamp(m, dim, code_mod, train_iters, train_mod, max_codes,
+               round_digits),
+    )
     cents = index["cents"]
-    codebook = index["codebook"]
-    codes = index["codes"]
-    subdim = dim // m
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("csim").desc(), F.col("centroid_id")
+    probes = _nearest_cells(
+        queries, cents, "query_id", nprobe, id_col, vec_col, round_digits
     )
-    probes = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("v"))
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "centroid_id",
-            F.round(
-                cosine_similarity(F.col("v"), F.col("centv")), round_digits
-            ).alias("csim"),
-        )
-        .where(F.col("csim").isNotNull())
-        .withColumn("crank", F.row_number().over(w))
-        .where(F.col("crank") <= nprobe)
-        .select("query_id", "centroid_id")
+    return _residual_topk(
+        index["codes"].join(probes, "centroid_id"), queries, cents,
+        index["codebook"], k, m, dim // m, id_col, vec_col, round_digits,
     )
-    subs = F.array(
-        *[F.slice(F.col(vec_col), s * subdim + 1, subdim) for s in range(m)]
-    )
-    lut = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.posexplode(subs).alias("s", "sub")
-        )
-        .join(F.broadcast(codebook), "s")
-        .select(
-            "query_id",
-            "s",
-            "code",
-            F.round(dot(F.col("sub"), F.col("cent")), round_digits)
-            .cast("decimal(18,6)")
-            .alias("qd"),
-        )
-        .where(F.col("qd").isNotNull())
-    )
-    # the persisted codes table joined on the probed cells IS the
-    # shortlist; LUT equi-join stays hash-partitioned, never broadcast
-    adc = (
-        codes.join(probes, "centroid_id")
-        .join(lut, ["query_id", "s", "code"])
-        .where(F.col("query_id") != F.col("cand_id"))
-        .groupBy("query_id", "cand_id", "centroid_id")
-        .agg(F.sum("qd").cast("decimal(18,6)").alias("rsim"))
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    scored = (
-        adc.join(qv, "query_id")
-        .join(F.broadcast(cents), "centroid_id")
-        .select(
-            "query_id",
-            "cand_id",
-            (
-                F.round(dot(F.col("qvec"), F.col("centv")), round_digits)
-                .cast("decimal(18,6)")
-                + F.col("rsim")
-            )
-            .cast("decimal(18,6)")
-            .alias("sim"),
-        )
-        .where(F.col("sim").isNotNull())
-    )
-    return _ranked(scored, k)
 
 
 def _uri_norm(path: str) -> str:
@@ -1904,7 +1617,7 @@ def residual_ann_index_persist(
     — so remote URIs like hdfs://s3a:// can't slip past it, ADVICE
     r12). Probe answers are layout-invariant (pinned by test):
     compaction changes file boundaries, never rows."""
-    spark = index["meta"].sparkSession
+    spark = index["codes"].sparkSession
     root_n = _uri_norm(root)
     for name_, df_ in index.items():
         for in_file in df_.inputFiles():

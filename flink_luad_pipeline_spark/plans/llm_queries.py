@@ -3008,10 +3008,8 @@ def ll95_residual_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _trained_index(spark: SparkSession, corpus: DataFrame, root: str) -> dict:
     """ll105's trained residual IVF-PQ index over ``corpus`` (kmeans
     k=8 coarse cells; 2-iteration residual Lloyd codebook over the id%4
-    sample), written under ``root`` as independent single-directory
-    writes overlapped on driver threads (guide §2.6) and read back with
-    the writer frames' schemas, so no footer-inference job runs
-    (§1.2)."""
+    sample), persisted under ``root`` and read back
+    (``similarity.residual_ann_index_persist``)."""
     from ..operators import clustering
 
     cents = clustering.kmeans_fit(corpus, k=8, iters=3).select(
@@ -3020,13 +3018,7 @@ def _trained_index(spark: SparkSession, corpus: DataFrame, root: str) -> dict:
     frames = similarity.residual_ann_index_frames(
         corpus, centroids=cents, train_iters=2, train_mod=4
     )
-    write_frames(frames, root)
-    return {
-        name_: spark.read.schema(df_.schema).parquet(
-            f"{root}/{name_}.parquet"
-        )
-        for name_, df_ in frames.items()
-    }
+    return similarity.residual_ann_index_persist(frames, root)
 
 
 @query("ll105_ann_index_persisted", oracle=_RESIDUAL_IVFPQ_ORACLE)
@@ -3180,13 +3172,7 @@ def ll106_ann_index_delta_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         base, centroid_mod=23, train_iters=0
     )
     root = sink_path("ll106_index", sf_dir)
-    write_frames(frames, root)  # guide §2.6: overlapped independent writes
-    index = {
-        name_: spark.read.schema(df_.schema).parquet(
-            f"{root}/{name_}.parquet"
-        )
-        for name_, df_ in frames.items()
-    }
+    index = similarity.residual_ann_index_persist(frames, root)
     updated = similarity.residual_ann_index_update(index, delta)
     updated["codes"].write.mode("overwrite").parquet(
         f"{root}/codes_v1.parquet"

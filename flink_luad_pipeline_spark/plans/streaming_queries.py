@@ -968,13 +968,7 @@ def ss22_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         base, centroid_mod=23, train_iters=0
     )
     root = sink_path(f"ss22_index_{n}", sf_dir)
-    write_frames(frames, root)  # guide §2.6: overlapped independent writes
-    index = {
-        name_: spark.read.schema(df_.schema).parquet(
-            f"{root}/{name_}.parquet"
-        )
-        for name_, df_ in frames.items()
-    }
+    index = similarity.residual_ann_index_persist(frames, root)
     feed = sink_path(f"ss22_feed_{n}", sf_dir)
     shutil.rmtree(f"{feed}_chk", ignore_errors=True)  # ss21's stale guard
     delta.write.mode("overwrite").parquet(feed)

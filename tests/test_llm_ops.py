@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_luad_pipeline_spark.catalog import load
@@ -403,22 +404,6 @@ def test_minhash_fast_hasher_same_pair_set(spark, sf_dir):
     }
     assert portable == fast
     assert portable, "fixture should surface at least the planted copies"
-
-
-def test_lsh_neardup_compact_equals_direct(spark, sf_dir):
-    """The pair-dedup-before-scoring variant must produce the exact
-    same (doc_a, doc_b, sim) set as the direct path — same buckets,
-    same rounded cosine, different shuffle plan."""
-    emb = load(spark, sf_dir, "embeddings")
-    direct = {
-        (r.doc_a, r.doc_b, r.sim)
-        for r in similarity.lsh_neardup_pairs(emb, threshold=0.35).collect()
-    }
-    compact = {
-        (r.doc_a, r.doc_b, r.sim)
-        for r in similarity.lsh_neardup_pairs_compact(emb, threshold=0.35).collect()
-    }
-    assert direct == compact and len(direct) > 0
 
 
 def test_dsir_weights_separate_target_from_offtarget(spark, sf_dir):
@@ -1821,39 +1806,45 @@ def test_ss21_stream_fold_equals_batch_and_multibatch_invariants(
         assert a == b, f"{art} diverged under micro-batching"
 
 
-def test_persisted_ann_index_equals_in_session_and_guards(spark, sf_dir):
-    """ll105's contract (VERDICT r9 item 4): answering top-k from the
-    index FRAMES alone must equal the in-session residual_ivfpq_topk
-    (index build encodes every candidate; the query path encodes only
-    shortlisted ones — same codes, so same answers), and a probe whose
+@pytest.mark.parametrize("grain", ["trained", "closed_form"])
+def test_persisted_ann_index_equals_in_session_and_guards(spark, sf_dir, grain):
+    """ll105's contract: answering top-k from the index FRAMES alone
+    must equal the in-session residual_ivfpq_topk (index build encodes
+    every candidate; the query path encodes only shortlisted ones —
+    same codes, so same answers) for both codebook branches — the
+    Lloyd-trained codebook over kmeans cells, and the untrained
+    mod-sampled one over closed-form cells — and a probe whose
     parameters disagree with the index's meta stamp must refuse loudly
     instead of returning plausible wrong neighbors."""
-    import pytest as _pytest
-
     from flink_luad_pipeline_spark.operators import clustering
 
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
-    cents = clustering.kmeans_fit(emb, k=8, iters=3).select(
-        F.col("cid").alias("centroid_id"), F.col("cv").alias("centv")
-    )
+    if grain == "trained":
+        cents = clustering.kmeans_fit(emb, k=8, iters=3).select(
+            F.col("cid").alias("centroid_id"), F.col("cv").alias("centv")
+        )
+        build = {"centroids": cents, "train_iters": 2, "train_mod": 4}
+        other_iters = 0
+    else:
+        build = {"centroid_mod": 23, "train_iters": 0}
+        other_iters = 2
+    probe = {k: v for k, v in build.items() if k.startswith("train")}
     in_session = similarity.residual_ivfpq_topk(
-        queries, emb, k=10, centroids=cents, train_iters=2, train_mod=4
+        queries, emb, k=10, **build
     ).collect()
-    frames = similarity.residual_ann_index_frames(
-        emb, centroids=cents, train_iters=2, train_mod=4
-    )
+    frames = similarity.residual_ann_index_frames(emb, **build)
     probed = similarity.residual_ann_index_topk(
-        queries, frames, k=10, train_iters=2, train_mod=4
+        queries, frames, k=10, **probe
     ).collect()
     assert sorted(map(tuple, probed)) == sorted(map(tuple, in_session))
     assert len(probed) > 0
-    with _pytest.raises(ValueError, match="meta stamp"):
+    with pytest.raises(ValueError, match="meta stamp"):
+        similarity.residual_ann_index_topk(queries, frames, k=10, m=8, **probe)
+    with pytest.raises(ValueError, match="meta stamp"):
         similarity.residual_ann_index_topk(
-            queries, frames, k=10, m=8, train_iters=2, train_mod=4
+            queries, frames, k=10, **dict(probe, train_iters=other_iters)
         )
-    with _pytest.raises(ValueError, match="meta stamp"):
-        similarity.residual_ann_index_topk(queries, frames, k=10)  # iters=0
 
 
 def test_ann_index_delta_fold_is_exact_and_associative(spark, sf_dir):
@@ -1899,8 +1890,15 @@ def test_ann_index_delta_fold_is_exact_and_associative(spark, sf_dir):
     assert set(per_id.values()) == {4}
     # delta side present
     assert any(i % 5 == 0 for i in ids)
-    with _pytest.raises(ValueError, match="meta stamp"):
+    # the guard names the function that was called
+    with _pytest.raises(
+        ValueError, match="^residual_ann_index_update: index meta stamp"
+    ):
         similarity.residual_ann_index_update(index, d1, m=8)
+    with _pytest.raises(
+        ValueError, match="^residual_ann_index_encode_delta: index meta stamp"
+    ):
+        similarity.residual_ann_index_encode_delta(index, d1, m=8)
 
 
 def test_ann_index_fold_overlap_guard(spark, sf_dir):

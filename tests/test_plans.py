@@ -512,24 +512,6 @@ def test_minhash_df_cutoff_semi_join_in_dedup_plans(spark, sf_dir):
     assert plan.count("BroadcastNestedLoopJoin") <= 1
 
 
-def test_lsh_neardup_compact_candidate_join_is_ids_only(spark, sf_dir):
-    """In the compact variant the bucket self-join must not carry the
-    embedding vectors — only the final re-join does."""
-    from flink_luad_pipeline_spark.operators import similarity
-
-    emb = load(spark, sf_dir, "embeddings")
-    plan = physical(similarity.lsh_neardup_pairs_compact(emb, threshold=0.35))
-    # HashAggregate for the id-pair distinct runs on exactly
-    # (doc_a, doc_b) keys with no vector column in its schema
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
-    import re
-
-    agg_lines = [
-        line for line in plan.splitlines() if "HashAggregate" in line and "doc_a" in line
-    ]
-    assert agg_lines and all("embedding" not in line for line in agg_lines)
-
-
 def test_ohlc_is_one_partial_agged_shuffle(spark, sf_dir):
     """o6's bar must be ONE grouped aggregate: a single hash exchange
     with map-side partial aggregation, and no Window operator (open/
@@ -793,6 +775,36 @@ def test_plans_have_one_timing_mechanism():
             ):
                 found.append(f"{path.name}:{node.lineno} def {node.name}")
     assert found == []
+
+
+def test_similarity_defines_each_quantizer_step_once():
+    """The product-quantizer steps of ``operators/similarity.py`` are
+    module-level helpers: no function nests its own copy of one, and a
+    single guard reads an index's meta stamp."""
+    import ast
+
+    path = ROOT / "flink_luad_pipeline_spark" / "operators" / "similarity.py"
+    tree = ast.parse(path.read_text())
+    steps = {"subvectors", "nearest_cells", "residuals", "partial_dots", "cb_df"}
+    nested = [
+        f"{outer.name}:{node.lineno} def {node.name}"
+        for outer in tree.body
+        if isinstance(outer, ast.FunctionDef)
+        for node in ast.walk(outer)
+        if isinstance(node, ast.FunctionDef)
+        and node is not outer
+        and node.name in steps
+    ]
+    meta_reads = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Subscript)
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "index"
+        and isinstance(node.slice, ast.Constant)
+        and node.slice.value == "meta"
+    ]
+    assert nested == [] and len(meta_reads) == 1, (nested, meta_reads)
 
 
 # --- tokenize once (optimized plans of a one-row frame, no Spark job) --------
