@@ -1,16 +1,17 @@
 """ML / composite analytic operators (SURVEY §2.7: C1, C2, C4, C5).
 
-Re-expression of the reference's FlinkML stages on spark.ml, with the
-COO long-format DataFrame (sample_id, probe_id, value) as the central
-IR — vectors materialize only at the ML boundary.
+Re-expression of the reference's FlinkML stages with the COO
+long-format DataFrame (sample_id, probe_id, value) as the central IR:
+ALS runs on spark.ml, and the SVM is solved exactly in its dual from a
+sample Gram matrix one Spark aggregation computes — no vectors.
 """
 
 from __future__ import annotations
 
 import math
+import warnings
 
-from pyspark.ml.classification import LinearSVC, LinearSVCModel
-from pyspark.ml.functions import array_to_vector
+import numpy as np
 from pyspark.ml.recommendation import ALS
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -129,43 +130,6 @@ def pearson_edges_scalable(
     return edges
 
 
-def assemble_features(
-    matrix: DataFrame,
-    sample_col: str = "sample_id",
-    probe_col: str = "probe_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """A7 — per-sample dense feature vector, probe-id order.
-
-    Reference: Trainer.scala:41-50 / 87-97 (collect per-sample pairs,
-    sortBy probe id, emit DenseVector). Spark-first: in-group
-    array_sort + array_to_vector; no global sort, one shuffle.
-    Assumes the matrix is completed (every sample has every probe) —
-    run ALS completion first, as the pipeline does.
-
-    Returns ``DataFrame[sample_id, features(VectorUDT)]``.
-    """
-    return (
-        matrix.groupBy(F.col(sample_col).alias("sample_id"))
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col(probe_col).alias("p"),
-                        F.col(value_col).cast("double").alias("v"),
-                    )
-                )
-            ).alias("pairs")
-        )
-        .select(
-            "sample_id",
-            array_to_vector(
-                F.transform(F.col("pairs"), lambda pr: pr["v"])
-            ).alias("features"),
-        )
-    )
-
-
 def als_complete(
     observed: DataFrame,
     rank: int = 10,
@@ -189,10 +153,10 @@ def als_complete(
     Spark-first deltas: the missing complement is a crossJoin +
     broadcast LEFT ANTI instead of per-group driver set-diff, and the
     reference's post-union ``rebalance`` (PreProcess.scala:152) is
-    AQE's job now. The observed cells, which ALS and the complement
-    both read, are materialized once by an eager ``localCheckpoint``:
-    later plans scan them as a leaf, and the session's cache is left as
-    it was.
+    AQE's job now. The observed cells (read by ALS and the complement)
+    and the complement (read by the guard and the transform) are each
+    materialized once by an eager ``localCheckpoint``: later plans scan
+    them as a leaf, and the session's cache is left as it was.
 
     Returns the completed matrix (observed ∪ predicted), same schema.
     """
@@ -206,7 +170,7 @@ def als_complete(
     probes = obs.select("probe_id").distinct()
     missing = samples.crossJoin(F.broadcast(probes)).join(
         obs, ["sample_id", "probe_id"], "left_anti"
-    )
+    ).localCheckpoint(eager=True)
 
     # A9-style control-flow on an aggregate: skip ALS when complete
     # (PreProcess.scala:121,127).
@@ -233,51 +197,101 @@ def als_complete(
 
 
 def svm_train(
-    features: DataFrame,
-    labels: DataFrame,
-    max_iter: int = 100,
-    reg_param: float = 1.0,
-    label_col: str = "tumorous",
-) -> LinearSVCModel:
-    """C4 — train a linear soft-margin SVM.
+    matrix: DataFrame, labels: DataFrame, reg_param: float = 1.0, label_col: str = "tumorous"
+) -> dict[int, float]:
+    """C4 — linear soft-margin SVM, solved exactly in its dual; returns
+    the decision value Σ_t α_t·y_t·K(s, t) − ρ of every sample s.
 
-    Reference: Trainer.scala:26-61 — FlinkML CoCoA SVM, defaults
-    (10 outer/10 local iterations, reg 1.0), labels ±1.0. spark.ml's
-    LinearSVC is the same model family (linear hinge loss) under a
-    different optimizer (OWLQN), so decision values differ — parity is
-    statistical (training accuracy on separable data), per SURVEY §5.2.
-    Labels map {-1,+1} -> {0,1} at this boundary. Returns the fitted
-    model (no mutable singleton — the reference stashes it in
-    ``private var predictorSVM``, Trainer.scala:119).
-
-    ``standardization=False`` matches FlinkML CoCoA, which trains on
-    raw feature scales — with spark.ml's default per-feature scaling
-    the expression-magnitude signal the pipeline relies on would be
-    equalized with noise probes.
+    Reference: Trainer.scala:26-61 — FlinkML CoCoA (itself a dual
+    method, Jaggi et al. 2014), reg 1.0, raw feature scales. Objective:
+    LinearSVC's with ``standardization=False``, mean hinge +
+    (reg_param/2)·‖w‖² with a free intercept — the C-SVM with
+    C = 1/(reg_param·n_train). ``matrix`` holds the long rows of every
+    sample to score, ``labels`` (sample_id, ``label_col`` BOOL) the
+    training samples (True -> +1). One aggregation computes
+    K(s, t) = Σ_p x_sp·x_tp against every training sample t, with each
+    product quantized to fixed point (2⁻⁴⁰) and summed as exact longs,
+    so K does not depend on partitioning; the driver solves the dual by
+    SMO (``_smo``). Cost: n_all·n_train·d joined rows and O(n²) driver
+    entries, which fits samples ≪ probes — the LUAD shape, where
+    ``pearson_edges``' p²·n pass dominates.
     """
-    train = features.join(labels, "sample_id").select(
-        "sample_id",
-        "features",
-        F.when(F.col(label_col), 1.0).otherwise(0.0).alias("label"),
-    ).localCheckpoint(eager=True)
-    svc = LinearSVC(maxIter=max_iter, regParam=reg_param, standardization=False)
-    return svc.fit(train)
-
-
-def svm_predict(model: LinearSVCModel, features: DataFrame) -> DataFrame:
-    """C5 — predict; returns (sample_id, prediction ±1.0).
-
-    Reference: Trainer.scala:73-116 — predicts on bare vectors, then
-    re-joins ids via DenseVector equality (J3, an anti-pattern).
-    Spark-first: ``transform`` carries all input columns through, so
-    sample_id survives and no join is needed.
-    """
-    return model.transform(features).select(
-        "sample_id",
-        F.when(F.col("prediction") == 1.0, F.lit(1.0))
-        .otherwise(F.lit(-1.0))
-        .alias("prediction"),
+    y = labels.select("sample_id", F.when(F.col(label_col), 1.0).otherwise(-1.0).alias("y"))
+    train = matrix.join(F.broadcast(y), "sample_id").select(
+        F.col("sample_id").alias("t"), "probe_id", F.col("value").alias("xt"), "y"
     )
+    # a product is two longs: its integer part, and its fraction (exact
+    # in double) truncated to 2⁻⁴⁰; long sums are exact and order-free
+    prod = F.col("value") * F.col("xt")
+    hi = prod.cast("long")
+    gram = (
+        matrix.select(F.col("sample_id").alias("s"), "probe_id", "value")
+        .join(train, "probe_id")
+        .groupBy("s", "t", "y")
+        .agg(F.sum(hi).alias("hi"), F.sum(((prod - hi) * 2.0**40).cast("long")).alias("lo"))
+        .toArrow()
+    )
+    if not gram.num_rows:
+        raise ValueError("svm_train: no training sample has a row in the matrix")
+    s_ids, si = np.unique(gram["s"].to_numpy(), return_inverse=True)
+    t_ids, ti = np.unique(gram["t"].to_numpy(), return_inverse=True)
+    k, yt = np.zeros((len(s_ids), len(t_ids))), np.zeros(len(t_ids))
+    k[si, ti] = gram["hi"].to_numpy() + gram["lo"].to_numpy() * 2.0**-40
+    yt[ti] = gram["y"].to_numpy()
+    alpha, rho = _smo(k[np.searchsorted(s_ids, t_ids)], yt, 1.0 / (reg_param * len(t_ids)))
+    return dict(zip(s_ids.tolist(), (k @ (alpha * yt) - rho).tolist()))
+
+
+def _smo(k, y, c, tol=1e-9, max_iter=None):
+    """LIBSVM's SMO (Fan, Chen & Lin, JMLR 2005) for the dual min
+    ½αᵀQα − Σα, Q = K∘yyᵀ, 0 ≤ α ≤ c, yᵀα = 0: move the maximal violator
+    i and its second-order partner j until the maximal-violating-pair
+    KKT gap is ≤ ``tol``; warn if the cap (max(10⁵, 100n)) comes first.
+    Returns α and LIBSVM's ρ: mean y·∇ over free α, else the bounds' middle."""
+    n = len(y)
+    cap = max(100_000, 100 * n) if max_iter is None else max_iter
+    q, kd = k * np.outer(y, y), np.diag(k)
+    a, g = np.zeros(n), -np.ones(n)  # g = Qα − 1
+    for step in range(cap + 1):
+        v = -y * g
+        up = np.where(y > 0, a < c, a > 0)  # y_i·α_i may grow
+        low = np.where(y > 0, a > 0, a < c)  # y_j·α_j may shrink
+        if not (up.any() and low.any()):
+            break
+        i = np.flatnonzero(up)[np.argmax(v[up])]
+        gap = v[i] - v[low].min()
+        if gap <= tol or step == cap:
+            if gap > tol:
+                warnings.warn(f"SMO hit its {cap}-iteration cap, KKT gap {gap:.3g}", RuntimeWarning)
+            break
+        b, quad = v[i] - v, np.maximum(kd[i] + kd - 2 * k[i], 1e-12)
+        cand = np.flatnonzero(low & (b > 0))
+        j = cand[np.argmax(b[cand] ** 2 / quad[cand])]
+        # α_i += y_i·t, α_j −= y_j·t keeps yᵀα; t is clipped to the box
+        ti, tj = (c - a[i] if y[i] > 0 else a[i]), (a[j] if y[j] > 0 else c - a[j])
+        t = min(b[j] / quad[j], ti, tj)
+        ai = a[i] + y[i] * t if t < ti else (c if y[i] > 0 else 0.0)
+        aj = a[j] - y[j] * t if t < tj else (0.0 if y[j] > 0 else c)
+        g += q[:, i] * (ai - a[i]) + q[:, j] * (aj - a[j])
+        a[i], a[j] = ai, aj
+    yg, free = y * g, (a > 0) & (a < c)
+    if free.any():
+        return a, float(yg[free].mean())
+    upper = np.where(y > 0, a <= 0, a >= c)  # these y·∇ bound ρ from above
+    return a, float((yg[upper].min(initial=np.inf) + yg[~upper].max(initial=-np.inf)) / 2)
+
+
+def svm_predict(decisions: dict[int, float], samples: DataFrame) -> DataFrame:
+    """C5 — (sample_id, prediction) for the scored rows of ``samples``:
+    +1.0 where the decision value is > 0 (LinearSVC's threshold), else
+    −1.0. The reference re-joins ids by DenseVector equality (J3,
+    Trainer.scala:73-116); here the decisions enter the plan as one
+    literal id -> ±1.0 map: no join, no Python RDD."""
+    sign = F.create_map(
+        *[F.lit(x) for s, f in sorted(decisions.items()) for x in (s, 1.0 if f > 0 else -1.0)]
+    )
+    scored = samples.select("sample_id", sign[F.col("sample_id")].alias("prediction"))
+    return scored.where(F.col("prediction").isNotNull())
 
 
 def naive_bayes_langid(
@@ -422,14 +436,11 @@ def logistic_irls_1d(d: DataFrame, steps: int = 3) -> DataFrame:
     betas riding along as a 1-row broadcast — the distributed-IRLS
     layout that holds at any corpus size.
 
-    Degenerate-fit guard (ADVICE r5): the 2x2 Newton solve divides by
-    det = a0·a2 − a1², which is 0 when x is constant across rows or
-    every weight p(1−p) underflows (a perfectly-saturated fit). A bare
-    division would emit NULL/NaN betas that silently propagate into
-    downstream accuracy columns — instead each step KEEPS the previous
-    betas when det == 0 (Newton with a singular Hessian has no update
-    direction), so the output is always finite and the stall is
-    visible as unchanged coefficients rather than NaN."""
+    Degenerate fit: the 2x2 solve divides by det = a0·a2 − a1², which
+    is 0 when x is constant or every weight p(1−p) underflows. Each
+    step then KEEPS the previous betas (a singular Hessian has no
+    Newton direction), so the output stays finite and the stall shows
+    as unchanged coefficients rather than NULL/NaN."""
 
     def dec(c):
         return c.cast("decimal(28,9)")
@@ -458,8 +469,7 @@ def logistic_irls_1d(d: DataFrame, steps: int = 3) -> DataFrame:
             "*",
             (F.col("a0") * F.col("a2") - F.col("a1") * F.col("a1")).alias("det"),
         )
-        # singular Hessian (det == 0): no Newton direction — keep the
-        # previous betas instead of emitting NULL/NaN (ADVICE r5)
+        # singular Hessian (det == 0): keep the previous betas
         return m.select(
             F.when(
                 F.col("det") == 0.0, F.col("pb0")
@@ -522,8 +532,7 @@ def pca_power_iteration(
     from .operators.dedup import _spread
 
     if iters < 1:
-        # iters=0 would leave the norm frame unbuilt and crash in the
-        # final crossJoin with a bare TypeError (ADVICE r6)
+        # iters=0 would leave the norm frame unbuilt
         raise ValueError(f"pca_power_iteration needs iters >= 1, got {iters}")
 
     dec = "decimal(28,12)"
@@ -571,19 +580,10 @@ def pca_power_iteration(
     x = cov.select("i").distinct().select(
         "i", F.lit(1.0 / math.sqrt(dim)).alias("x")
     )
-    # The norm is a GLOBAL WINDOW over the dim-row iterate instead of a
-    # separate agg + crossJoin(broadcast) (r14, guide §1.2/§2.4): the
-    # old shape referenced y TWICE per iteration (once in the broadcast
-    # norm subquery, once in the normalize), doubling the plan's
-    # subtree count per iteration — 2^iters copies of the first
-    # iterate, 29 AQE stage-jobs and ~4 s wall for a 64-row problem.
-    # The window form references y exactly once, so the plan is a
-    # linear chain of (join → partial-agged exchange → one
-    # SinglePartition window over dim rows). The window's decimal sum
-    # is the same order-free exact arithmetic as the old agg, so every
-    # emitted number is bit-identical; the SinglePartition exchange
-    # carries dim rows — the documented metadata-sized boundary, never
-    # the corpus.
+    # The norm is a global window over the dim-row iterate, so each
+    # step references y once and the plan stays a linear chain (join →
+    # partial-agged exchange → one SinglePartition window over dim
+    # rows, never the corpus); its decimal sum is exact and order-free.
     wall = Window.partitionBy()
     nm_col = F.sqrt(
         F.sum(F.round(F.col("y") * F.col("y"), 12).cast(dec))

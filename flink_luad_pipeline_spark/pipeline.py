@@ -18,7 +18,7 @@ Trainer.scala (SVM). Deliberate Spark-first deltas, each cited:
   137-142) — SURVEY §7 M4d.
 - **Each stage boundary is materialized once** by an eager
   ``localCheckpoint`` (parsed input, dictionaries, matrix, labels,
-  completed and filtered matrix, features, predictions), replacing
+  completed and filtered matrix, predictions), replacing
   Flink 0.10's whole-DAG recomputation at each of ~14 collect/count
   sites (SURVEY §3.1). Downstream plans start at a leaf RDD scan, not at
   a nested cached plan, and the blocks are released when the frame is
@@ -254,20 +254,15 @@ def preprocess(
 def train_and_predict(bundle: MatrixBundle, filtered: DataFrame) -> DataFrame:
     """Trainer stage (Trainer.scala): fit on training samples, predict
     the predictive ones, decode ids back to names (PipeLine.scala:30).
+    The SVM reads the filtered long matrix directly; one Gram pass
+    scores every sample (``ml.svm_train``).
 
     Returns ``DataFrame[sample STRING, prediction DOUBLE]`` with
     prediction ∈ {1.0 (tumorous), -1.0} — README.md:38, :73-75.
     """
-    features = ml.assemble_features(filtered).localCheckpoint(eager=True)
-    train_keys = bundle.labels.where(~F.col("is_prediction")).select("sample_id")
-    predict_keys = bundle.labels.where(F.col("is_prediction")).select("sample_id")
-
-    model = ml.svm_train(
-        R.semi_join(features, train_keys, ["sample_id"]),
-        bundle.labels,
-    )
+    decisions = ml.svm_train(filtered, bundle.labels.where(~F.col("is_prediction")))
     preds = ml.svm_predict(
-        model, R.semi_join(features, predict_keys, ["sample_id"])
+        decisions, bundle.labels.where(F.col("is_prediction")).select("sample_id")
     )
     decoded = R.dict_decode(
         preds,

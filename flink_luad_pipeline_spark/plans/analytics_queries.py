@@ -175,29 +175,34 @@ def c1_als_completion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return completed.select("sample_id", "probe_id", "value")
 
 
-@query("c4_c5_svm_train_predict")  # rows-only: OWLQN vs CoCoA optimizers
+@query("c4_c5_svm_train_predict")  # rows-only: no SVM in the SQL oracle
 def c4_c5_svm_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4+C5 — linear SVM train on 80% of embeddings (binary label =
     class < 5), predict the held-out 20%; output (sample_id,
     prediction ±1.0) — the reference's final shape (Trainer.scala:73,
-    README.md:73-75 ``samp5  -1.0``). Ids survive ``transform`` so the
-    reference's vector-equality re-join (J3, Trainer.scala:102-109) is
-    unnecessary here; J3 itself is covered by j3_join_on_array."""
+    README.md:73-75 ``samp5  -1.0``). The embeddings enter the exact
+    dual solver (``ml.svm_train``, C = 1/(reg·n_train)) as the long
+    (sample_id, probe_id = dimension, value) matrix: its Gram pass joins
+    n·n_train·64 rows and keeps an n·n_train kernel on the driver, cheap
+    while samples are few and quadratic once n_train ≫ 64 (sf0.1). Ids
+    stay keys throughout, so the reference's vector-equality re-join
+    (J3, Trainer.scala:102-109) is unnecessary here; J3 itself is
+    covered by j3_join_on_array."""
+    from ..operators.dedup import _spread
+
     emb = load(spark, sf_dir, "embeddings")
-    features = emb.select(
+    # _spread: the Gram join streams from this scan, which a test-scale
+    # table holds in one row group — one core for all n·n_train·64 rows
+    matrix = _spread(emb).select(
         F.col("vec_id").alias("sample_id"),
-        ml.array_to_vector(
-            F.transform(F.col("embedding"), lambda x: x.cast("double"))
-        ).alias("features"),
-    )
+        F.posexplode("embedding").alias("probe_id", "value"),
+    ).withColumn("value", F.col("value").cast("double"))
     labels = emb.select(
         F.col("vec_id").alias("sample_id"),
         (F.col("label") < 5).alias("tumorous"),
     )
-    train_ids = features.where(F.col("sample_id") % 5 != 0)
-    predict_ids = features.where(F.col("sample_id") % 5 == 0)
-    model = ml.svm_train(train_ids, labels, max_iter=20)
-    return ml.svm_predict(model, predict_ids)
+    decisions = ml.svm_train(matrix, labels.where(F.col("sample_id") % 5 != 0))
+    return ml.svm_predict(decisions, labels.where(F.col("sample_id") % 5 == 0))
 
 
 @query("c2b_dimsum_corr_edges")  # rows-only: sampled estimator by design

@@ -446,8 +446,8 @@ def a6_component_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a7_vector_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 — per-sample ordered value assembly (Trainer.scala:41-50:
     collect (probe,value), sort by probe, emit DenseVector). Output as an
-    ordered string so the oracle comparison is exact; the ML-vector form
-    lives in ml.py (assemble_features)."""
+    ordered string so the oracle comparison is exact; the SVM needs no
+    vector form: ml.svm_train reads the long matrix directly."""
     li = load(spark, sf_dir, "lineitem")
     out = R.grouped_concat(
         li, "l_orderkey", "l_linenumber", F.format_string("%.2f", F.col("l_quantity"))

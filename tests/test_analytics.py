@@ -144,31 +144,54 @@ def test_connected_components_vs_union_find(spark):
     assert got == expected
 
 
+def _long_clouds(spark, n, d, seed):
+    """Two Gaussian clouds (even ids at +3, odd at −3) as the long
+    (sample_id, probe_id, value) matrix, and every sample's label."""
+    rng = np.random.default_rng(seed)
+    cells = [
+        (i, p, float(v))
+        for i in range(n)
+        for p, v in enumerate(rng.normal(3.0 if i % 2 == 0 else -3.0, 1.0, d))
+    ]
+    matrix = spark.createDataFrame(cells, "sample_id INT, probe_id INT, value DOUBLE")
+    labels = spark.createDataFrame(
+        [(i, i % 2 == 0) for i in range(n)], "sample_id INT, tumorous BOOLEAN"
+    )
+    return matrix, labels
+
+
 def test_svm_separable_accuracy(spark):
     """Linearly separable clouds: train accuracy must be perfect and
     holdout accuracy high — the C4/C5 statistical acceptance test."""
-    rng = np.random.default_rng(3)
-    rows = []
-    for i in range(80):
-        label = i % 2 == 0
-        center = 3.0 if label else -3.0
-        vec = rng.normal(loc=center, scale=1.0, size=4)
-        rows.append((i, [float(x) for x in vec], bool(label)))
-    df = spark.createDataFrame(rows, "sample_id INT, arr ARRAY<DOUBLE>, tumorous BOOLEAN")
-    feats = df.select(
-        "sample_id", ml.array_to_vector(F.col("arr")).alias("features")
-    )
-    labels = df.select("sample_id", "tumorous")
-    train = feats.where(F.col("sample_id") < 60)
-    test = feats.where(F.col("sample_id") >= 60)
-    model = ml.svm_train(train, labels)
-    preds = {r.sample_id: r.prediction for r in ml.svm_predict(model, test).collect()}
-    correct = sum(
-        1
-        for i, p in preds.items()
-        if (p == 1.0) == (i % 2 == 0)
-    )
-    assert correct / len(preds) >= 0.9
+    matrix, labels = _long_clouds(spark, 80, 4, 3)
+    decisions = ml.svm_train(matrix, labels.where(F.col("sample_id") < 60))
+    preds = {
+        r.sample_id: r.prediction
+        for r in ml.svm_predict(decisions, labels.select("sample_id")).collect()
+    }
+    assert set(preds) == set(range(80))
+    right = {i: (p == 1.0) == (i % 2 == 0) for i, p in preds.items()}
+    assert all(right[i] for i in range(60))
+    assert sum(right[i] for i in range(60, 80)) / 20 >= 0.9
+
+
+def test_svm_decisions_do_not_depend_on_partitioning(spark):
+    """The Gram entries are exact fixed-point long sums, so every
+    decision value is bit-identical at 1 and 7 shuffle partitions."""
+    matrix, labels = _long_clouds(spark, 30, 6, 5)
+    # labels that do not follow the clouds, so the margin is not clean
+    labels = labels.select("sample_id", ((F.col("sample_id") % 3) == 0).alias("tumorous"))
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    fits = []
+    try:
+        for parts in (1, 7):
+            spark.conf.set(key, str(parts))
+            fits.append(ml.svm_train(matrix.repartition(parts), labels))
+    finally:
+        spark.conf.set(key, before)
+    assert len(fits[0]) == 30
+    assert fits[0] == fits[1]
 
 
 def test_asof_join_semantics(spark):

@@ -173,6 +173,22 @@ def test_stage_boundaries_are_leaf_scans(spark, cfg, bundle):
     assert cache.isEmpty()
 
 
+def test_train_and_predict_job_budget(spark, cfg, bundle):
+    """The SVM is one Gram aggregation plus a driver-side dual solve:
+    the whole Trainer stage on the fixture runs at most 10 Spark jobs
+    (an iterative optimizer runs one job per iteration)."""
+    filtered = pipeline.preprocess(bundle.matrix, cfg.pc_threshold, als_blocks=4)
+    sc = spark.sparkContext
+    group = "test_train_and_predict_job_budget"
+    sc.setJobGroup(group, "Trainer stage on the fixture")
+    try:
+        pipeline.train_and_predict(bundle, filtered)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 10
+
+
 def _write_input(root, files, *, predictive=(), tumorous=(), lines=None):
     """One-type definition file: ``files`` maps sample -> file name;
     samples not in ``predictive`` are training samples."""
